@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line {"metric":...,"queries":{...}}. Each query runs
+  * prints a diag JSON line (spreads, loadavg, each failed entry's cause)
+  * then the metric line {"metric":...,"queries":{...}}. Each query runs
   * best-of-N in an ordered pass A plus one reverse-order pass B retime
   * (minimum wins) — the reference's run-3×-report-best methodology
   * (tools/tpch-tools/bin/run-tpch-queries.sh) hardened against the
   * bench heating the machine as it goes; per-query loadavg lands in
   * the JSON (`loadavg_q`) so residual deltas are attributable.
   *
-  * TPC-H wall-creep attribution (round-7 PerfProbe, sf0.1, local[32],
+  * TPC-H wall-creep attribution (round 7, sf0.1, local[32],
   * loadavg 1.2): per-query planning cost is flat and small — analyze /
   * optimize+compile / execute = q1 0.019/0.015/0.412, q3
   * 0.020/0.016/0.522, q18 0.017/0.023/0.404, q21 0.048/0.034/0.563 s.
@@ -21,28 +22,60 @@ import org.apache.spark.sql.SparkSession
   * JSON makes that visible).
   */
 object Bench {
+
+  /** A bench entry's successful run times (sorted) and, if any run
+    * failed, the failure as "ExceptionClass: message". */
+  final case class Timing(ok: Seq[Double], error: Option[String]) {
+    /** best successful run; -1 only when every run failed (an explicit
+      * error marker, never mixed into a valid min) */
+    def best: Double = ok.headOption.getOrElse(-1.0)
+    /** relative gap between the best two runs */
+    def spread: Double =
+      if (ok.size < 2 || ok.head <= 0) 0.0 else (ok(1) - ok.head) / ok.head
+    def ++(o: Timing): Timing = Timing((ok ++ o.ok).sorted, o.error.orElse(error))
+  }
+
+  /** "ExceptionClass: first line of the message", logged to stderr. */
+  private def failure(what: String, e: Throwable): String = {
+    val msg = Option(e.getMessage).map(_.linesIterator.nextOption().getOrElse(""))
+      .getOrElse("").take(300)
+    val cause = s"${e.getClass.getName}: $msg"
+    System.err.println(s"[bench] $what failed: $cause")
+    cause
+  }
+
+  /** One timed run of query `name` on `dir`; the noop write executes
+    * the full plan without driver materialization. */
+  def timeOnce(spark: SparkSession, name: String, dir: String): Timing = {
+    val t0 = System.nanoTime()
+    try {
+      SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+      Timing(Seq((System.nanoTime() - t0) / 1e9), None)
+    } catch { case e: Throwable => Timing(Nil, Some(failure(name, e))) }
+  }
+
+  /** The reference methodology, N runs with the best reported
+    * (tools/tpch-tools/bin/run-tpch-queries.sh runs 3x), plus a variance
+    * guard: while the best two successful runs disagree by >20% the
+    * machine is noisy, so keep timing (at most `maxExtra` more runs)
+    * until they agree; the residual spread is reported so an
+    * untrustworthy number announces itself. */
+  def bestOf(iters: Int, maxExtra: Int)(once: => Timing): Timing = {
+    var t = (0 until iters).map(_ => once).foldLeft(Timing(Nil, None))(_ ++ _)
+    var extra = 0
+    while (t.ok.size >= 2 && t.spread > 0.20 && extra < maxExtra) {
+      t = t ++ once
+      extra += 1
+    }
+    t
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    GraftSession.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timeOnceIn(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        val df = SparkEntry.queries(name)(spark, dir)
-        // noop write = full plan execution without driver materialization
-        df.write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-    def timeOnce(name: String): Double = timeOnceIn(name, sfDir)
+      Runtime.getRuntime.availableProcessors().toString).toInt
+    val spark = GraftSession.local(cpus)
 
     // Machine-load honesty (round-6 lesson: a bench recorded under the
     // driver's concurrent 440-query sweep showed q21 at 5.14 s vs 0.74 s
@@ -69,21 +102,7 @@ object Bench {
 
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val maxExtra = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_EXTRA", "3").toInt
-    // SPARK_GRAFT_BENCH_SET=ml benchmarks the training-pipeline ops
-    // instead of the TPC-H headline set (driver default unchanged)
-    val names = (sys.env.getOrElse("SPARK_GRAFT_BENCH_SET", "tpch") match {
-      case "ml" => Seq("ml_dedup_minhash", "ml_pipeline_e2e", "ml_ann_ivf",
-        "ml_dedup_components", "ds_bm25", "ml_text_stats",
-        "ml_decontaminate", "ml_quality_logistic", "ml_doc_chunk")
-      case _ => SparkEntry.benchQueries
-    }).filter(SparkEntry.queries.contains)
-    // reference methodology: N runs, best reported
-    // (tools/tpch-tools/bin/run-tpch-queries.sh runs 3x)
-    // best of the SUCCESSFUL runs; -1 only when every iteration failed
-    // (an explicit error marker, never mixed into a valid min).
-    // Variance guard: if the best two runs disagree by >20% the machine
-    // is noisy — keep iterating (bounded) until they agree, and report
-    // the residual spread so an untrustworthy number announces itself.
+    val names = SparkEntry.benchQueries.filter(SparkEntry.queries.contains)
     // A/B-order noise hardening (r9-verdict #7): the bench itself heats
     // the machine, so late-position queries read slow in a single
     // ordered pass. Pass A runs the set in order (best-of-N + variance
@@ -93,28 +112,16 @@ object Bench {
     // pass where it ran early. Per-query loadavg (sampled when each
     // query first runs) lands in the JSON so any residual delta is
     // attributable to machine state, not guessed about.
-    def spread(xs: Seq[Double]): Double =
-      if (xs.size < 2 || xs.head <= 0) 0.0 else (xs(1) - xs.head) / xs.head
     val loadAtQ = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val passA = names.map { n =>
       loadAtQ(n) = loadavg()
-      var ok = (0 until iters).map(_ => timeOnce(n)).filter(_ >= 0).sorted
-      var extra = 0
-      while (ok.size >= 2 && spread(ok) > 0.20 && extra < maxExtra) {
-        val t = timeOnce(n)
-        if (t >= 0) ok = (ok :+ t).sorted
-        extra += 1
-      }
-      n -> ok
+      n -> bestOf(iters, maxExtra)(timeOnce(spark, n, sfDir))
     }.toMap
     val passB = names.reverse.map { n =>
       loadAtQ(s"${n}_b") = loadavg()
-      n -> timeOnce(n)
+      n -> timeOnce(spark, n, sfDir)
     }.toMap
-    val results = names.map { n =>
-      val ok = (passA(n) ++ Seq(passB(n)).filter(_ >= 0)).sorted
-      (n, if (ok.isEmpty) -1.0 else ok.head, spread(ok))
-    }
+    val results = names.map(n => n -> (passA(n) ++ passB(n)))
     // scale evidence IN the artifact (not only in ScaleProbe): one
     // entry per growth class ScaleProbe asserts — scan/agg/join
     // (ds_wide_resale), full-cardinality group-by (cb_q29), content
@@ -122,32 +129,28 @@ object Bench {
     // (ml_dedup_minhash, ml_embed_neardup_lsh) — re-timed on the 5x
     // key-shifted replication of this SF (build cost excluded from
     // timings; same best-of-N + spread discipline as the 1x entries).
-    val scaleResults =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_SET", "tpch") != "tpch") Nil
-      else {
-        val out = s"target/scale/${new java.io.File(sfDir).getName}_x5"
-        try {
-          ScaleProbe.build(spark, sfDir, out, 5)
-          Seq("ds_wide_resale", "ml_segment_dedup", "cb_q29",
-              "ml_dedup_minhash", "ml_embed_neardup_lsh").map { n =>
-            loadAtQ(s"scale5x_$n") = loadavg()
-            var ok = (0 until iters).map(_ => timeOnceIn(n, out)).filter(_ >= 0).sorted
-            var extra = 0
-            while (ok.size >= 2 && spread(ok) > 0.20 && extra < maxExtra) {
-              val t = timeOnceIn(n, out)
-              if (t >= 0) ok = (ok :+ t).sorted
-              extra += 1
-            }
-            (s"scale5x_$n", if (ok.isEmpty) -1.0 else ok.head, spread(ok))
-          }
-        } catch { case _: Throwable => Seq(("scale5x_build_failed", -1.0, 0.0)) }
+    val scaleResults = {
+      val out = s"target/scale/${new java.io.File(sfDir).getName}_x5"
+      try {
+        ScaleProbe.build(spark, sfDir, out, 5)
+        Seq("ds_wide_resale", "ml_segment_dedup", "cb_q29",
+            "ml_dedup_minhash", "ml_embed_neardup_lsh").map { n =>
+          loadAtQ(s"scale5x_$n") = loadavg()
+          s"scale5x_$n" -> bestOf(iters, maxExtra)(timeOnce(spark, n, out))
+        }
+      } catch { case e: Throwable =>
+        Seq("scale5x_build_failed" ->
+          Timing(Nil, Some(failure("scale5x build", e))))
       }
+    }
     val all = results ++ scaleResults
-    val qs = all.map { case (k, v, _) => "\"" + k + "\":" + v }
+    val qs = all.map { case (k, t) => "\"" + k + "\":" + t.best }
       .mkString("{", ",", "}")
-    val sp = all.map { case (k, _, s) => "\"" + k + "\":" + f"$s%.3f" }
+    val sp = all.map { case (k, t) => "\"" + k + "\":" + f"${t.spread}%.3f" }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val errs = all.collect { case (k, Timing(_, Some(e))) =>
+      Verify.jsonString(k) + ":" + Verify.jsonString(e) }.mkString("{", ",", "}")
+    val total = results.map(_._2.best).filter(_ >= 0).sum
     val loadEnd = loadavg()
     val lq = loadAtQ.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
@@ -157,7 +160,7 @@ object Bench {
     // of BENCH_r10.json (parsed:null). The LAST line is the compact
     // machine-readable record — per-query minimums always in the tail.
     println(s"""{"diag":"bench","loadavg_waited_s":$waited,""" +
-      s""""best2_spread":$sp,"loadavg_q":$lq}""")
+      s""""best2_spread":$sp,"loadavg_q":$lq,"errors":$errs}""")
     val metricLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""sf":"$sfDir","loadavg_start":$loadStart,"loadavg_end":$loadEnd}"""

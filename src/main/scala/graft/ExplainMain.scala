@@ -1,12 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object ExplainMain {
   def main(args: Array[String]): Unit = {
     val sfDir = "/root/testdata/sf0.1"
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")).getOrCreate()
-    GraftSession.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     // SPARK_GRAFT_EXPLAIN_RUN=1: execute with the noop sink first and
     // print the FINAL adaptive plan — the only way to see runtime
     // ReusedExchange/ReusedSubquery nodes, which the static formatted

@@ -22,11 +22,8 @@ object Graft {
 
   /** Engine-configured local session (cluster deploys pass
     * `spark.sql.extensions=graft.GraftExtensions` instead). */
-  def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = GraftSession.local(cores)
-    GraftSession.install(s)
-    s
-  }
+  def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    GraftSession.local(cores)
 
   /** Register the full custom function surface on an existing session. */
   def install(spark: SparkSession): SparkSession = GraftSession.install(spark)

@@ -13,15 +13,6 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   */
 object GraftSession {
 
-  /** Apply engine config to an arbitrary builder (used by Verify/Bench).
-    * SPARK_GRAFT_CONF can append/override settings, e.g.
-    * "spark.sql.shuffle.partitions=8;spark.x=y" (experiment hook). */
-  def configure(b0: SparkSession.Builder): SparkSession.Builder =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.split("=", 2)).collect {
-        case Array(k, v) => (k.trim, v.trim)
-      }.foldLeft(base(b0)) { case (bb, (k, v)) => bb.config(k, v) }
-
   /** best-effort: drop hive_ms dirs left by dead JVMs (each run creates
     * a pid-suffixed Derby + warehouse; without this they accumulate). */
   private def cleanStaleMetastores(): Unit =
@@ -41,7 +32,8 @@ object GraftSession {
       }
     } catch { case _: Throwable => () }
 
-  private def base(b: SparkSession.Builder): SparkSession.Builder = {
+  /** Engine config applied to every session [[local]] builds. */
+  private def configure(b: SparkSession.Builder): SparkSession.Builder = {
     cleanStaleMetastores()
     b
     .config("spark.sql.session.timeZone", "UTC")
@@ -79,19 +71,38 @@ object GraftSession {
     .withExtensions(new GraftExtensions)
   }
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = configure(
-      SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName("graft")
-        .config("spark.sql.shuffle.partitions", cores.toString))
+  /** SPARK_GRAFT_CONF settings, e.g.
+    * "spark.sql.shuffle.partitions=8;spark.x=y" (experiment hook). */
+  private def envConf: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).map(_.split("=", 2)).collect {
+        case Array(k, v) => (k.trim, v.trim)
+      }
+
+  /** The one session factory: `local[cores]` with shuffle partitions
+    * sized to the core count, the engine config, then `conf` (a caller's
+    * own settings, e.g. SpillProbe's constrained memory budget), then
+    * SPARK_GRAFT_CONF, each overriding the one before. The session comes
+    * back with the function surface installed. */
+  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+            conf: Map[String, String] = Map.empty): SparkSession = {
+    val b = configure(SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cores.toString))
+    val s = (conf.toSeq ++ envConf)
+      .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s
+    install(s)
   }
 
-  /** Idempotent per-session function registration for sessions not built
-    * through [[local]] (e.g. an existing session in tests). */
+  /** Idempotent per-session function registration. [[local]] already
+    * runs it; a session built elsewhere (a host application's, or one
+    * configured with `spark.sql.extensions=graft.GraftExtensions`) needs
+    * it too, because the extensions inject only the builder-registered
+    * functions and the UDF/UDAF modules (window_funnel_3d, the bitmap
+    * and behavior aggregates, ...) register per session. */
   def install(spark: SparkSession): SparkSession = {
     graft.functions.FunctionRegistry.registerAll(spark)
     spark

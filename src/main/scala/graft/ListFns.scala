@@ -6,7 +6,6 @@ package graft
 object ListFns {
   def main(a: Array[String]): Unit = {
     val s = GraftSession.local(2)
-    GraftSession.install(s)
     s.sessionState.functionRegistry.listFunction()
       .map(_.funcName.toLowerCase).distinct.sorted.foreach(println)
     s.stop()

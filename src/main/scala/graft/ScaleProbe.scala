@@ -111,10 +111,7 @@ object ScaleProbe {
     val mult = 5
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = s"target/scale/${new java.io.File(src).getName}_x$mult"
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")).getOrCreate()
-    GraftSession.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     build(spark, src, out, mult)
 
     def run(name: String, dir: String): (Double, String) = {
@@ -581,28 +578,21 @@ object ScaleProbe {
           .write.mode("overwrite").parquet("target/sqlscale_hg_src")
         spark.read.parquet("target/sqlscale_hg_src")
           .createOrReplaceTempView("sqlscale_hg_src")
-        val hgRecs = new java.util.concurrent.atomic.AtomicLong()
-        val hgListener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (te.taskMetrics != null)
-              hgRecs.addAndGet(te.taskMetrics.inputMetrics.recordsRead): Unit
-        }
-        spark.sparkContext.addSparkListener(hgListener)
-        val t6 = System.nanoTime()
-        spark.sql("CREATE OR REPLACE TABLE graft_hudi.sqlscale_hg " +
-          "PRIMARY KEY (k) PARTITIONED BY (p) " +
-          "AS SELECT * FROM sqlscale_hg_src")
-        val hgS = (System.nanoTime() - t6) / 1e9
-        org.apache.spark.sql.graftshim.ListenerShim.flush(spark.sparkContext): Unit
-        spark.sparkContext.removeSparkListener(hgListener)
+        val (hgS, hgRecs) = org.apache.spark.sql.graftshim.ListenerShim
+          .sumTaskMetric(spark.sparkContext, _.inputMetrics.recordsRead) {
+            val t6 = System.nanoTime()
+            spark.sql("CREATE OR REPLACE TABLE graft_hudi.sqlscale_hg " +
+              "PRIMARY KEY (k) PARTITIONED BY (p) " +
+              "AS SELECT * FROM sqlscale_hg_src")
+            (System.nanoTime() - t6) / 1e9
+          }
         // one input pass (440k) + the bloom sidecar build's key-column
         // scan over the LAID bases (440k of the OUTPUT) — the r15
         // pre-count would add a third 440k
-        println(f"[sqlscale] hudi backfill input records: ${hgRecs.get()} " +
+        println(f"[sqlscale] hudi backfill input records: $hgRecs " +
           f"(batch 440000; staging + sidecar build = ~2x, pre-count gone)")
-        if (hgRecs.get() > 440000L * 22 / 10)
-          failures += s"hudi backfill read ${hgRecs.get()} records — " +
+        if (hgRecs > 440000L * 22 / 10)
+          failures += s"hudi backfill read $hgRecs records — " +
             "more than staging + sidecar build (a pre-pass crept back)"
         val hgDir = new java.io.File(s"$lakeDir/hudi/sqlscale_hg")
           .getAbsolutePath

@@ -126,7 +126,6 @@ object SparkEntry {
     "ml_substring_dedup",
     // r17 (r16-verdict #6): the iterative label-propagation path gets a
     // driver-visible timing so regressions in the per-round join/agg
-    // shape show up as wall time — previously only the never-run `ml`
-    // bench set covered it.
+    // shape show up as wall time.
     "ml_dedup_components")
 }

@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerShim
 
 /** Memory-pressure spill probe (reference envelope: grace hash join /
   * partitioned agg / spill sort —
@@ -24,12 +22,12 @@ import org.apache.spark.sql.functions._
   * One command: `sbt "runMain graft.SpillProbe"`; exits non-zero on a
   * crash, a checksum mismatch, or a no-spill run.
   *
-  * Measured 2026-08-14 (sf0.1 x5, local[4], 8G JVM, ~150 MB execution
-  * pool): every query completes with checksums identical to the roomy
-  * run; q21 (sort-merge join sorts) spilled 119 MB, the full-lineitem
-  * sort 329 MB — total 448 MB through the spill paths. q1/q18/
-  * wide_resale working sets still fit the per-task budget at this
-  * scale (0 spill, correct results).
+  * Measured on a 4-core host (sf0.1 x5, local[4], 8G JVM, ~150 MB
+  * execution pool): every query completes with checksums identical to
+  * the roomy run; q18 spilled 116 MB, q21 (sort-merge join sorts)
+  * 114 MB, ds_wide_resale 617 MB, the full-lineitem sort 329 MB —
+  * total 1176 MB through the spill paths. q1's working set still fits
+  * the per-task budget at this scale (0 spill, correct result).
   */
 object SpillProbe {
 
@@ -57,10 +55,7 @@ object SpillProbe {
     // phase 1: roomy session -> build the 5x fixture (pressure needs
     // working sets well past the constrained budget) + reference
     // checksums at 5x
-    val s1 = GraftSession.configure(SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8")).getOrCreate()
-    GraftSession.install(s1)
-    s1.sparkContext.setLogLevel("WARN")
+    val s1 = GraftSession.local(8)
     val dir = s"target/scale/${new java.io.File(sfDir).getName}_x5"
     ScaleProbe.build(s1, sfDir, dir, 5)
     val expected = names.map(n => n -> checksum(s1, n, dir)).toMap
@@ -70,50 +65,46 @@ object SpillProbe {
 
     // phase 2: constrained session — tiny execution-memory budget, no
     // broadcast joins (a broadcast build side cannot spill; the
-    // spill-capable SMJ/hash-agg/sort operators must carry the work)
-    val spilled = new AtomicLong(0)
+    // spill-capable SMJ/hash-agg/sort operators must carry the work).
     // 2 shuffle partitions concentrate each operator's data into few
     // fat tasks; fraction 0.02 of the 4G sbt heap leaves ~75 MB of
     // execution memory — far below the sort/agg working sets, so the
     // spill paths MUST engage for the run to complete
-    val s2 = GraftSession.configure(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.memory.fraction", "0.02")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")).getOrCreate()
-    GraftSession.install(s2)
-    s2.sparkContext.setLogLevel("WARN")
+    val s2 = GraftSession.local(4, Map(
+      "spark.sql.shuffle.partitions" -> "2",
+      "spark.memory.fraction" -> "0.02",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
     println(s"[spill] constrained session: fraction=" +
       s2.sparkContext.getConf.get("spark.memory.fraction", "unset") +
       s" heapMB=${Runtime.getRuntime.maxMemory() / 1024 / 1024}" +
       s" parallelism=${s2.sparkContext.defaultParallelism}")
-    s2.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) { spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled); () }
-      }
-    })
+    def spilledIn[A](body: => A): (A, Long) =
+      ListenerShim.sumTaskMetric(s2.sparkContext,
+        m => m.memoryBytesSpilled + m.diskBytesSpilled)(body)
 
     var failures = List.empty[String]
+    var spilled = 0L
     names.foreach { n =>
-      val before = spilled.get()
-      val got = try Some(checksum(s2, n, dir)) catch {
-        case e: Throwable => failures ::= s"$n crashed under pressure: $e"; None
+      val (got, sp) = spilledIn {
+        try Some(checksum(s2, n, dir)) catch {
+          case e: Throwable => failures ::= s"$n crashed under pressure: $e"; None
+        }
       }
+      spilled += sp
       got.foreach { g =>
         if (g != expected(n)) failures ::= s"$n result changed under memory pressure"
       }
-      println(f"[spill] $n: spilled ${(spilled.get() - before) / 1e6}%.1f MB, " +
+      println(f"[spill] $n: spilled ${sp / 1e6}%.1f MB, " +
         s"checksum ${if (got.contains(expected(n))) "ok" else "MISMATCH"}")
     }
-    val beforeSort = spilled.get()
     try {
-      bigSort(s2, dir)
-      println(f"[spill] full_sort: spilled ${(spilled.get() - beforeSort) / 1e6}%.1f MB")
+      val (_, sp) = spilledIn(bigSort(s2, dir))
+      spilled += sp
+      println(f"[spill] full_sort: spilled ${sp / 1e6}%.1f MB")
     } catch { case e: Throwable => failures ::= s"full_sort crashed: $e" }
 
-    if (spilled.get() == 0)
+    if (spilled == 0)
       failures ::= "nothing spilled — the probe exerted no memory pressure"
     s2.stop()
     if (failures.nonEmpty) {
@@ -121,6 +112,6 @@ object SpillProbe {
       sys.exit(1)
     }
     println(f"[spill] PASS ${names.size} queries + full sort bit-identical " +
-      f"under pressure; total spilled ${spilled.get() / 1e6}%.1f MB")
+      f"under pressure; total spilled ${spilled / 1e6}%.1f MB")
   }
 }

@@ -1,19 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in query SQL would otherwise make a
+    * strict JSON reader reject the whole artifact. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    GraftSession.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 limits the run (local iteration; the driver
     // always runs the full surface)
@@ -39,20 +45,8 @@ object Verify {
     // entry, so this is its only aggregate signal
     System.err.println(s"[verify] SUMMARY ok=$nOk failed=${failed.size}" +
       (if (failed.nonEmpty) s" (${failed.map(_._1).mkString(",")})" else ""))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Per-query failure artifact: a query that throws writes no result
     // parquet and would otherwise be an ABSENCE in the driver's
@@ -61,7 +55,7 @@ object Verify {
     // is written on every run — an empty {} is the positive "nothing
     // crashed" signal.
     val failJson = failed.reverse
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     // exit 0 even on failures: the artifact is the signal — a nonzero
     // exit could make the driver discard the 400+ good results.
     Files.writeString(Paths.get(s"$outDir/failures.json"), failJson)

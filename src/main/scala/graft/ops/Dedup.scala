@@ -147,8 +147,8 @@ object Dedup {
     // (graft_inter_sorted) instead of array_intersect's per-pair
     // hash-set build. Sortedness changes nothing else: banding takes
     // elementwise minima (order-free) and |A∩B|/sizes are set
-    // quantities (MinhashProbe 5x: verify 0.79 -> 0.44 s warm,
-    // identical 56,398 output pairs).
+    // quantities (5x replication, OPTIMIZATION_r17.md: verify 0.79 ->
+    // 0.44 s warm, identical 56,398 output pairs).
     val hashed = base
       .select(col("id"),
         expr("graft_sort_longs(transform(sh, s -> xxhash64(s)))").as("hsh"))
@@ -397,17 +397,10 @@ object Dedup {
           min(when(col("e.dst") === col("e.src"), col("l.lab"))).as("old"))
         .select(col("src"), col("nlab").as("lab"),
           (col("nlab") =!= col("old")).as("chg"))
-      // probe hook: the query-level explain cannot show the round shape
-      // (the loop runs at plan-construction time), so probes dump one
-      // representative round plan here
-      if (i == 1 && sys.env.contains("SPARK_GRAFT_CC_EXPLAIN"))
-        pre.explain("formatted")
       val next2 = pre.localCheckpoint(eager = true)
       changed = next2.filter(col("chg")).count()
       labels = next2.select(col("src"), col("lab"))
       i += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_VERBOSE"))
-        println(s"[cc] round $i: changed=$changed")
     }
     // every round's labels checkpoint is already materialized, so
     // nothing downstream re-reads the cached edges
@@ -484,7 +477,7 @@ object Dedup {
     // over the content key replaces the r16 global-frequency aggregate
     // + join-back, whose probe-measured cost was dominated by
     // re-exploding and re-hashing every corpus position a second time
-    // (SubstrProbe, 5x corpus: spans stage 2.3-3.3 s two-pass vs
+    // (5x corpus, OPTIMIZATION_r17.md: spans stage 2.3-3.3 s two-pass vs
     // 1.2-1.5 s single-pass). One exchange ships (id, p, h1, h2) once;
     // the window's per-group buffer spills on pathological groups (see
     // the 100 TB-shape note above).

@@ -29,21 +29,9 @@ class MergeOnePassSpec extends AnyFunSuite {
 
   /** Sum of task-level input bytes (file AND cached-block reads) during
     * `body`, with the async listener bus drained before reading. */
-  private def measuredInputBytes(body: => Unit): Long = {
-    val bytes = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          bytes.addAndGet(te.taskMetrics.inputMetrics.bytesRead): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.graftshim.ListenerShim.flush(spark.sparkContext): Unit
-    } finally spark.sparkContext.removeSparkListener(listener)
-    bytes.get()
-  }
+  private def measuredInputBytes(body: => Unit): Long =
+    org.apache.spark.sql.graftshim.ListenerShim
+      .sumTaskMetric(spark.sparkContext, _.inputMetrics.bytesRead)(body)._2
 
   private def fixture(fmt: String, name: String, pk: String): Unit = {
     spark.range(0, 300000)

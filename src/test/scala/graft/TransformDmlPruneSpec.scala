@@ -19,21 +19,9 @@ class TransformDmlPruneSpec extends AnyFunSuite {
   /** Task-level input RECORDS during `body` (bytesRead under-reports
     * on these local scans — records track the scanned row volume
     * exactly, which is what pruning bounds). */
-  private def measuredInputRecords(body: => Unit): Long = {
-    val recs = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          recs.addAndGet(te.taskMetrics.inputMetrics.recordsRead): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.graftshim.ListenerShim.flush(spark.sparkContext): Unit
-    } finally spark.sparkContext.removeSparkListener(listener)
-    recs.get()
-  }
+  private def measuredInputRecords(body: => Unit): Long =
+    org.apache.spark.sql.graftshim.ListenerShim
+      .sumTaskMetric(spark.sparkContext, _.inputMetrics.recordsRead)(body)._2
 
   test("delta days(ts) UPDATE/DELETE scan only the conjunct's partitions") {
     // 20 daily partitions × 5k rows
