@@ -1,11 +1,12 @@
 #!/usr/bin/env bash
-# One-command gate runner (r8-verdict #7): the full ScalaTest battery
-# plus both runtime probes — ScaleProbe (per-class growth bounds + the
+# One-command gate runner (r8-verdict #7): the full ScalaTest battery,
+# both runtime probes — ScaleProbe (per-class growth bounds + the
 # no-cartesian assert at 5x, exit 1 on violation) and SpillProbe
 # (spill engages under a tight memory budget with bit-identical
-# results). Each stage's exit code is printed and the script exits
-# non-zero if ANY stage failed, so "bash scripts/gates.sh" is the whole
-# CI-style verdict.
+# results) — and one untimed perfbench run per workload, which must
+# build, run and end with "correct": true. Each stage's exit code is
+# printed and the script exits non-zero if ANY stage failed, so
+# "bash scripts/gates.sh" is the whole CI-style verdict.
 #
 # Usage: bash scripts/gates.sh [sfDir]   (default /root/testdata/sf0.1)
 set -u
@@ -25,9 +26,23 @@ run battery sbt -batch test
 run scaleprobe sbt -batch "runMain graft.ScaleProbe"
 run spillprobe sbt -batch "runMain graft.SpillProbe"
 
+# perfbench compiles against GraftSession.local/install, SparkEntry and
+# Tables: a run that fails to build, throws, or checks an output wrong
+# fails the stage. The verdict is the last stdout line's "correct".
+perfbench() {
+  local w last rc=0
+  for w in analytics lakehouse_dml; do
+    last="$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 0 --trace 0 | tail -n 1)"
+    echo "$w: $last"
+    case "$last" in *'"correct": true'*) ;; *) rc=1 ;; esac
+  done
+  return $rc
+}
+run perfbench perfbench
+
 fail=0
 echo "== gate summary =="
-for k in battery scaleprobe spillprobe; do
+for k in battery scaleprobe spillprobe perfbench; do
   echo "$k: exit ${codes[$k]}"
   [ "${codes[$k]}" -ne 0 ] && fail=1
 done

@@ -65,6 +65,13 @@ object GraftSession {
     // timestamp — read as long and convert in Tables.load.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.parquet.aggregatePushdown", "true")
+    // The lakehouse readers name every live file from table metadata,
+    // so there is no directory to discover; above Spark's default of 32
+    // paths the named files were still listed by a Spark job. On a
+    // 4-core host that job cost 2.2 s of CPU for a 108-file Paimon
+    // scan, against 0.06 s to list the same files on the driver.
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+      Int.MaxValue.toString)
     .config("spark.sql.cbo.enabled", "true")
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     .config("spark.ui.enabled", "false")

@@ -152,12 +152,8 @@ object AliasFunctions {
   )
 
   def register(spark: SparkSession): Unit = {
-    defs.foreach { d =>
-      try spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $d")
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        System.err.println(s"[graft] alias registration failed: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    FunctionRegistry.registerSql(spark, "alias",
+      defs.map(d => s"CREATE OR REPLACE TEMPORARY FUNCTION $d"))
     // bround demands a foldable scale, so the variable-scale banker's
     // round rides a JVM UDF instead of a SQL body
     spark.udf.register("round_bankers", (x: Double, d: Int) =>

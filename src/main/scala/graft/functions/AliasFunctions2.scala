@@ -152,16 +152,7 @@ object AliasFunctions2 {
   // fail-fast: a broken definition must not silently shrink the
   // declared-capability surface; collect every failure so one bad body
   // never aborts the registrations after it, then throw with the names
-  def register(spark: SparkSession): Unit = {
-    val failed = defs.flatMap { d =>
-      try { spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $d"); None }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] alias2 registration failed: " +
-            s"${d.takeWhile(_ != '(')}: ${e.getMessage.linesIterator.next()}")
-          Some(d.takeWhile(_ != '('))
-      }
-    }
-    require(failed.isEmpty, s"alias2 registrations failed: ${failed.mkString(", ")}")
-  }
+  def register(spark: SparkSession): Unit =
+    FunctionRegistry.registerSql(spark, "alias2",
+      defs.map(d => s"CREATE OR REPLACE TEMPORARY FUNCTION $d"))
 }

@@ -340,6 +340,23 @@ object FunctionRegistry {
         builder))
     }
 
+  /** Runs each SQL registration statement of `module`, then fails the
+    * session build naming every statement that failed: a broken body
+    * must not leave a session that silently lacks its function. */
+  private[graft] def registerSql(spark: SparkSession, module: String,
+                                 stmts: Seq[String]): Unit = {
+    val failed = stmts.flatMap { stmt =>
+      try { spark.sql(stmt); None }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          val name = stmt.trim.stripPrefix("CREATE OR REPLACE TEMPORARY FUNCTION ")
+            .takeWhile(_ != '(')
+          Some(s"$name: ${e.getMessage.linesIterator.nextOption().getOrElse("")}")
+      }
+    }
+    require(failed.isEmpty, s"$module registrations failed: ${failed.mkString("; ")}")
+  }
+
   /** sessions already registered — re-running every `u.register` on the
     * same session silently REPLACES each function (Spark logs a WARN per
     * name), which defeats the fail-fast double-registration guard. Weak

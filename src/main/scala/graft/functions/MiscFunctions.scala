@@ -125,12 +125,6 @@ object MiscFunctions {
            '%H', 'HH'), '%i', 'mm'), '%s', 'ss'))"""
   )
 
-  // per-statement guard: one bad definition must not silently skip the
-  // rest of the surface, and the failure is logged, not swallowed
-  def register(spark: SparkSession): Unit = sqlUdfs.foreach { stmt =>
-    try spark.sql(stmt)
-    catch { case e: org.apache.spark.sql.AnalysisException =>
-      System.err.println(s"[graft] UDF registration failed: ${e.getMessage.linesIterator.next()}")
-    }
-  }
+  def register(spark: SparkSession): Unit =
+    FunctionRegistry.registerSql(spark, "misc", sqlUdfs)
 }

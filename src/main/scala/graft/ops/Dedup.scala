@@ -343,7 +343,8 @@ object Dedup {
     * quasi-cliques), so rounds stay single-digit. Returns (id, lab)
     * with lab = min member id of the component — the canonical
     * representative used to pick one surviving document per duplicate
-    * cluster.
+    * cluster. At most `maxIter` rounds run, the seeded first round
+    * included; a component wider than that keeps partial labels.
     *
     * Round shape (r17): each round is ONE join + ONE aggregate with a
     * single exchange — the algorithmic floor (labels must move from
@@ -388,7 +389,8 @@ object Dedup {
       .agg(min(col("dst")).as("lab"))
       .localCheckpoint(eager = true)
     var changed = 1L
-    var i = 0
+    // the seeded labels are round 1 of at most maxIter
+    var i = 1
     while (i < maxIter && changed > 0) {
       val pre = sym.as("e")
         .join(labels.as("l"), col("e.dst") === col("l.src"))

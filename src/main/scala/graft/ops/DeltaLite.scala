@@ -331,7 +331,7 @@ object DeltaLite {
                   partFilter: Option[Map[String, String] => Boolean] = None,
                   keepPositions: Boolean = false)
       : DataFrame = {
-    import org.apache.spark.sql.functions.{col, regexp_replace}
+    import org.apache.spark.sql.functions.col
     val adds = planAddsWithCheckpoint(spark, tableDir, version, partFilter)
     require(adds.nonEmpty, "no live files after replay/pruning")
     // a DECLARED schema plans the scan explicitly: files written before
@@ -355,10 +355,7 @@ object DeltaLite {
           }
       }
     val paths = adds.map(a => s"$tableDir/${a.path}")
-    val data = declared match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val data = LakeFiles.scan(spark, paths, declared)
     val withDv = adds.filter(_.dv.isDefined)
     // keepPositions: DML callers (one-pass MERGE) keep the LIVE rows'
     // (__fp, __pos) identity so the join evaluates once and its claimed
@@ -366,7 +363,7 @@ object DeltaLite {
     val afterDv = if (withDv.isEmpty) {
       if (!keepPositions) data
       else data
-        .withColumn("__fp", regexp_replace(col("_metadata.file_path"), "^file:+", ""))
+        .withColumn("__fp", LakeFiles.pathCol)
         .withColumn("__pos", col("_metadata.row_index"))
     } else {
       // DV descriptors are metadata-sized; the POSITIONS are not — at
@@ -379,7 +376,7 @@ object DeltaLite {
           val d = a.dv.get
           require(d.storageType == "i" || d.storageType == "p",
             s"unsupported DV storageType '${d.storageType}'")
-          (new java.io.File(tableDir, a.path).getAbsolutePath,
+          (LakeFiles.key(new java.io.File(tableDir, a.path).getAbsolutePath),
             d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes,
             d.cardinality)
         }
@@ -401,7 +398,7 @@ object DeltaLite {
         }
       val dels = spark.createDataFrame(delRows, delSchema)
       val joined = data
-        .withColumn("__fp", regexp_replace(col("_metadata.file_path"), "^file:+", ""))
+        .withColumn("__fp", LakeFiles.pathCol)
         .withColumn("__pos", col("_metadata.row_index"))
         .join(dels, Seq("__fp", "__pos"), "left_anti")
       if (keepPositions) joined else joined.drop("__fp", "__pos")
@@ -435,7 +432,7 @@ object DeltaLite {
     * position sets decode executor-side as in [[readVersion]]. */
   def readChanges(spark: SparkSession, tableDir: String,
                   fromVersion: Long, toVersion: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, regexp_replace}
+    import org.apache.spark.sql.functions.{col, lit}
     require(fromVersion < toVersion,
       s"from ($fromVersion) must precede to ($toVersion)")
     // running state: live adds (with DVs) replayed to fromVersion
@@ -493,7 +490,8 @@ object DeltaLite {
     def abs(p: String) = new java.io.File(tableDir, p).getAbsolutePath
     def dvPositionsRdd(entries: Seq[(String, DvDesc)]) =
       spark.sparkContext
-        .parallelize(entries, math.max(1, math.min(entries.size, 32)))
+        .parallelize(entries.map { case (fp, d) => (LakeFiles.key(fp), d) },
+          math.max(1, math.min(entries.size, 32)))
         .flatMap { case (fp, d) =>
           val ps = d.storageType match {
             case "i" => DeltaDv.dvBlobPositions(DeltaDv.z85Decode(d.pathOrInlineDv))
@@ -523,7 +521,7 @@ object DeltaLite {
         case Some(st) => spark.read.schema(st)
         case None => spark.read
       }).parquet(files: _*)
-        .withColumn("__fp", regexp_replace(col("_metadata.file_path"), "^file:+", ""))
+        .withColumn("__fp", LakeFiles.pathCol)
         .withColumn("__pos", col("_metadata.row_index"))
     val frames = Seq.newBuilder[DataFrame]
     locally { // whole-file inserts, their own DVs applied
@@ -580,7 +578,7 @@ object DeltaLite {
         val anyFile = state.headOption.map(s => abs(s._1))
         require(anyFile.isDefined, "empty change window on an empty table")
         val dataSchema = declaredPhys
-          .getOrElse(spark.read.parquet(anyFile.get).schema)
+          .getOrElse(LakeFiles.footerSchema(spark, anyFile.get))
         spark.createDataFrame(new java.util.ArrayList[Row](),
           StructType(dataSchema.fields :+
             StructField("_CHANGE_TYPE", StringType, nullable = false)))

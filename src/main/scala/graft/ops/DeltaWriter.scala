@@ -897,12 +897,9 @@ object DeltaWriter {
             f.copy(name = phys.getOrElse(f.name, f.name),
               metadata = Metadata.empty)))
         }
-    val raw = physDeclared match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val raw = LakeFiles.scan(spark, paths, physDeclared)
     val base = raw
-      .withColumn("__fp", regexp_replace(col("_metadata.file_path"), "^file:+", ""))
+      .withColumn("__fp", LakeFiles.pathCol)
       .withColumn("__pos", col("_metadata.row_index"))
     if (mapping.isEmpty) base
     else base.select(mapping.map { case (l, p) => col(p).as(l) } ++
@@ -1085,8 +1082,9 @@ object DeltaWriter {
                                matcher: DataFrame => DataFrame,
                                adds: Seq[DeltaLite.AddFile], version: Long,
                                requireMatch: Boolean): Seq[String] = {
+    // keyed as the matcher's `__fp` spells each path
     val byAbs = adds.map(a =>
-      new java.io.File(tableDir, a.path).getAbsolutePath -> a).toMap
+      LakeFiles.key(new java.io.File(tableDir, a.path).getAbsolutePath) -> a).toMap
     val dvDir = new java.io.File(tableDir, "deletion_vectors")
     dvDir.mkdirs()
     val dvDirAbs = dvDir.getAbsolutePath

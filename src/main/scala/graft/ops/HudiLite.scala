@@ -1,6 +1,7 @@
 package graft.ops
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -43,6 +44,17 @@ import org.apache.spark.sql.functions.col
 object HudiLite {
 
   private def mapper = new ObjectMapper()
+
+  /** A partition value's directory: escaped as Spark's `partitionBy`
+    * staging spells it (`50%off` lives in `50%25off/`). The timeline
+    * keys file groups by the value itself, so routing and pruning
+    * compare raw values. */
+  private def partDir(part: String): String =
+    ExternalCatalogUtils.escapePathName(part)
+
+  /** `part` as a timeline JSON object key. */
+  private def partKey(part: String): String = mapper.writeValueAsString(part)
+
   private val logTokenCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** (path, partition, fileId, instantTime) of the latest slice per
@@ -116,7 +128,7 @@ object HudiLite {
                    partFilter: Option[String => Boolean] = None): DataFrame = {
     val files = planFiles(tableDir, instant, partFilter)
     require(files.nonEmpty, "no live file slices after replay/pruning")
-    spark.read.parquet(files.map(_._1): _*)
+    LakeFiles.scan(spark, files.map(_._1))
   }
 
   /** The deterministic wall-clock stamp of an instant, mirroring the
@@ -163,9 +175,9 @@ object HudiLite {
     new java.io.File(dir, ".hoodie").mkdirs()
     commits.foreach { c =>
       val statsJson = c.writes.groupBy(_._1).map { case (part, ws) =>
-        new java.io.File(dir, part).mkdirs()
+        new java.io.File(dir, partDir(part)).mkdirs()
         val entries = ws.map { case (_, fileId, rows) =>
-          val rel = s"$part/${fileId}_0-0-0_${c.instant}.parquet"
+          val rel = s"${partDir(part)}/${fileId}_0-0-0_${c.instant}.parquet"
           val tmp = s"$tableDir/tmp_stage"
           spark.createDataFrame(
               new java.util.ArrayList[Row](java.util.Arrays.asList(rows: _*)),
@@ -178,7 +190,7 @@ object HudiLite {
           org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
           s"""{"fileId":"$fileId","path":"$rel","numWrites":${rows.size}}"""
         }
-        s""""$part":[${entries.mkString(",")}]"""
+        s"""${partKey(part)}:[${entries.mkString(",")}]"""
       }.mkString(",")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(tableDir, ".hoodie", s"${c.instant}.commit"),
@@ -472,7 +484,7 @@ object HudiLite {
     val cur: StructType = writeSchema(tableDir).getOrElse {
       val slices = planFilesMor(tableDir)
       require(slices.nonEmpty, "table has no live file slices")
-      spark.read.parquet(slices.head._1).schema
+      LakeFiles.footerSchema(spark, slices.head._1)
     }
     val logicalNames = cur.fieldNames.map(n => renames.getOrElse(n, n)).toSet
     require(!cur.fieldNames.contains(name) && !logicalNames.contains(name),
@@ -530,7 +542,7 @@ object HudiLite {
     val cur: StructType = writeSchema(tableDir).getOrElse {
       val slices = planFilesMor(tableDir)
       require(slices.nonEmpty, "table has no live file slices")
-      spark.read.parquet(slices.head._1).schema
+      LakeFiles.footerSchema(spark, slices.head._1)
     }
     val w = cur.fieldNames.find(wn => renames.getOrElse(wn, wn) == name)
       .getOrElse(sys.error(s"no column $name"))
@@ -641,7 +653,7 @@ object HudiLite {
     val cur = writeSchema(tableDir).getOrElse {
       val slices = planFilesMor(tableDir)
       require(slices.nonEmpty, "table has no live file slices")
-      spark.read.parquet(slices.head._1).schema
+      LakeFiles.footerSchema(spark, slices.head._1)
     }
     require(cur.fieldNames.contains(w), s"no column $name")
     require(cur.fields.length > 1, "cannot drop the last column")
@@ -656,7 +668,7 @@ object HudiLite {
     val cur = writeSchema(tableDir).getOrElse {
       val slices = planFilesMor(tableDir)
       require(slices.nonEmpty, "table has no live file slices")
-      spark.read.parquet(slices.head._1).schema
+      LakeFiles.footerSchema(spark, slices.head._1)
     }
     val logicalOf = (w: String) => renames.getOrElse(w, w)
     val w = cur.fieldNames.find(wn => logicalOf(wn) == from)
@@ -685,21 +697,16 @@ object HudiLite {
       val l2w = renames.map(_.swap)
       keyCols.map(c => l2w.getOrElse(c, c))
     }
-    val base = writeSchema(tDir, asOf) match {
-      case Some(st) => spark.read.schema(st).parquet(slices.map(_._1): _*)
-      case None => spark.read.parquet(slices.map(_._1): _*)
-    }
+    val base = LakeFiles.scan(spark, slices.map(_._1), writeSchema(tDir, asOf))
     val dataSchema = base.schema
     val withSys = StructType(dataSchema.fields ++ Array(
       StructField("__instant", StringType, nullable = false),
       StructField("__seq", LongType, nullable = false),
       StructField("__del", BooleanType, nullable = false)))
     // base rows carry their slice's instant via a metadata-sized map
-    val instantByPath = slices.map(s =>
-      s._1.replaceAll("^file:+", "") -> s._4).toMap
+    val instantByPath = slices.map(s => LakeFiles.key(s._1) -> s._4).toMap
     val baseSys = base
-      .withColumn("__instant", element_at(typedLit(instantByPath),
-        regexp_replace(col("_metadata.file_path"), "^file:+", "")))
+      .withColumn("__instant", element_at(typedLit(instantByPath), LakeFiles.pathCol))
       .withColumn("__seq", lit(-1L))
       .withColumn("__del", lit(false))
     val logPaths = slices.flatMap(_._5)
@@ -745,11 +752,11 @@ object HudiLite {
     commits.foreach { c =>
       val statsJson = c.writes.groupBy(_._1).map { case (part, ws) =>
         val entries = ws.map { case (_, fileId, baseInstant, blocks) =>
-          val rel = s"$part/${fileId}_$baseInstant.log.${c.instant}"
+          val rel = s"${partDir(part)}/${fileId}_$baseInstant.log.${c.instant}"
           writeLogFile(s"$tableDir/$rel", blocks)
           s"""{"fileId":"$fileId","path":"$rel","baseInstant":"$baseInstant"}"""
         }
-        s""""$part":[${entries.mkString(",")}]"""
+        s"""${partKey(part)}:[${entries.mkString(",")}]"""
       }.mkString(",")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(tableDir, ".hoodie", s"${c.instant}.deltacommit"),
@@ -817,7 +824,7 @@ object HudiLite {
         writeSchema(tableDir, t).getOrElse {
           val bases = planFiles(tableDir)
           require(bases.nonEmpty, "undeclared table with no live files")
-          spark.read.parquet(bases.head._1).schema
+          LakeFiles.footerSchema(spark, bases.head._1)
         })
     val cur = schemaAt(None)
     val renames = schemaMeta(tableDir)._2
@@ -990,12 +997,13 @@ object HudiLite {
     val entries = parquetsUnder(new java.io.File(staging))
       .sortBy(_.getAbsolutePath)
       .zipWithIndex.flatMap { case (f, j) =>
-        val part = f.getParentFile.getName.stripPrefix("__part=")
+        val part = ExternalCatalogUtils.unescapePathName(
+          f.getParentFile.getName.stripPrefix("__part="))
         if (f.length() == 0L) None
         else {
           val fid = s"g$j"
-          val rel = s"$part/${fid}_0-0-0_$instant.parquet"
-          new java.io.File(dir, part).mkdirs()
+          val rel = s"${partDir(part)}/${fid}_0-0-0_$instant.parquet"
+          new java.io.File(dir, partDir(part)).mkdirs()
           java.nio.file.Files.move(f.toPath, new java.io.File(dir, rel).toPath)
           Some((part, fid, rel))
         }
@@ -1009,7 +1017,7 @@ object HudiLite {
     val statsJson = entries.groupBy(_._1).map { case (part, es) =>
       val js = es.map { case (_, fid, rel) =>
         s"""{"fileId":"$fid","path":"$rel","numWrites":0}""" }
-      s""""$part":[${js.mkString(",")}]"""
+      s"""${partKey(part)}:[${js.mkString(",")}]"""
     }.mkString(",")
     val bField = batchId.map(b => s""""batchId":$b,""").getOrElse("")
     val schemaField = s""""schema":${mapper.writeValueAsString(df.schema.json)},"""
@@ -1054,13 +1062,14 @@ object HudiLite {
     val entries = parquetsUnder(new java.io.File(staging))
       .sortBy(_.getAbsolutePath)
       .zipWithIndex.flatMap { case (f, j) =>
-        val part = f.getParentFile.getName.stripPrefix("__part=")
+        val part = ExternalCatalogUtils.unescapePathName(
+          f.getParentFile.getName.stripPrefix("__part="))
         if (f.length() == 0L) None
         else {
           // fresh fileIds — replaced groups keep theirs for time travel
           val fid = s"o${instant}g$j"
-          val rel = s"$part/${fid}_0-0-0_$instant.parquet"
-          new java.io.File(dir, part).mkdirs()
+          val rel = s"${partDir(part)}/${fid}_0-0-0_$instant.parquet"
+          new java.io.File(dir, partDir(part)).mkdirs()
           java.nio.file.Files.move(f.toPath, new java.io.File(dir, rel).toPath)
           Some((part, fid, rel))
         }
@@ -1072,7 +1081,7 @@ object HudiLite {
     val statsJson = entries.groupBy(_._1).map { case (part, es) =>
       val js = es.map { case (_, fid, rel) =>
         s"""{"fileId":"$fid","path":"$rel","numWrites":0}""" }
-      s""""$part":[${js.mkString(",")}]"""
+      s"""${partKey(part)}:[${js.mkString(",")}]"""
     }.mkString(",")
     val schemaField = s""""schema":${mapper.writeValueAsString(dfW.schema.json)},"""
     require(IcebergWriter.casCreate(
@@ -1252,12 +1261,13 @@ object HudiLite {
     val entries = parquetsUnder(new java.io.File(staging))
       .sortBy(_.getAbsolutePath)
       .zipWithIndex.flatMap { case (f, j) =>
-        val part = f.getParentFile.getName.stripPrefix("__part=")
+        val part = ExternalCatalogUtils.unescapePathName(
+          f.getParentFile.getName.stripPrefix("__part="))
         if (f.length() == 0L) None
         else {
           val fid = s"n$instant-$j"
-          val rel = s"$part/${fid}_0-0-0_$instant.parquet"
-          new java.io.File(dir, part).mkdirs()
+          val rel = s"${partDir(part)}/${fid}_0-0-0_$instant.parquet"
+          new java.io.File(dir, partDir(part)).mkdirs()
           java.nio.file.Files.move(f.toPath, new java.io.File(dir, rel).toPath)
           Some((part, fid, rel))
         }
@@ -1288,14 +1298,19 @@ object HudiLite {
                           baseFiles: Seq[String]): Unit = {
     import org.apache.spark.sql.functions._
     if (baseFiles.isEmpty) return
-    val wordsByFp: Map[String, Int] = baseFiles.map { p =>
+    // keyed as Spark spells `_metadata.file_path`; the sidecar goes
+    // next to the file's raw path
+    val absByFp: Map[String, String] = baseFiles.map { p =>
       val abs = new java.io.File(p).getAbsolutePath
-      abs -> (bloomBitsFor(footerRowCount(abs)) / 64)
+      LakeFiles.key(abs) -> abs
     }.toMap
+    val wordsByFp: Map[String, Int] = absByFp.map { case (fp, abs) =>
+      fp -> (bloomBitsFor(footerRowCount(abs)) / 64)
+    }
     val bcWords = spark.sparkContext.broadcast(wordsByFp)
-    val perFile = spark.read.parquet(baseFiles: _*)
+    val perFile = LakeFiles.scan(spark, baseFiles)
       .select(
-        regexp_replace(col("_metadata.file_path"), "^file:+", "").as("__fp"),
+        LakeFiles.pathCol.as("__fp"),
         bloomKeyCol(keyCols).as("__k"))
       .rdd.mapPartitions { it =>
         val local = scala.collection.mutable.HashMap.empty[String, Array[Long]]
@@ -1314,7 +1329,7 @@ object HudiLite {
       val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
       bits.foreach(bb.putLong)
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(fp + ".bloom"), bb.array())
+        java.nio.file.Paths.get(absByFp(fp) + ".bloom"), bb.array())
     }
   }
 
@@ -1572,12 +1587,14 @@ object HudiLite {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
+    // base files key as `_metadata.file_path` spells them, log files
+    // by the raw absolute path their bytes are decoded under
     val fidByPath: Map[String, String] =
-      (slices.map(s => s._1.replaceAll("^file:+", "") -> s._3) ++
+      (slices.map(s => LakeFiles.key(s._1) -> s._3) ++
         slices.flatMap(s => s._5.map(lp =>
           new java.io.File(lp).getAbsolutePath -> s._3))).toMap
     val instantByPath: Map[String, String] =
-      slices.map(s => s._1.replaceAll("^file:+", "") -> s._4).toMap
+      slices.map(s => LakeFiles.key(s._1) -> s._4).toMap
     val fidSchema = StructType(keySchema.fields ++ Array(
       StructField("__fid", StringType, nullable = false),
       StructField("__inst", StringType, nullable = false),
@@ -1590,14 +1607,10 @@ object HudiLite {
     val baseKeys =
       if (basePaths.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[Row](), fidSchema)
-      else spark.read.parquet(basePaths: _*)
+      else LakeFiles.scan(spark, basePaths)
         .select(keyCols.map(col) ++ Seq(
-          element_at(typedLit(fidByPath),
-            regexp_replace(col("_metadata.file_path"), "^file:+", ""))
-            .as("__fid"),
-          element_at(typedLit(instantByPath),
-            regexp_replace(col("_metadata.file_path"), "^file:+", ""))
-            .as("__inst"),
+          element_at(typedLit(fidByPath), LakeFiles.pathCol).as("__fid"),
+          element_at(typedLit(instantByPath), LakeFiles.pathCol).as("__inst"),
           lit(-1L).as("__seq"), lit(false).as("__del")): _*)
     val logPaths = slices.flatMap(_._5)
     val all =
@@ -1606,8 +1619,9 @@ object HudiLite {
         val logRows = spark.sparkContext
           .binaryFiles(logPaths.map(new java.io.File(_).getAbsolutePath).mkString(","))
           .flatMap { case (p, pds) =>
+            // binaryFiles names the file unescaped: parse it as a Path
             val fid = fidByPath(new java.io.File(
-              new java.net.URI(p).getPath).getAbsolutePath)
+              new org.apache.hadoop.fs.Path(p).toUri.getPath).getAbsolutePath)
             parseLogBytes(pds.toArray()).flatMap { case (bt, inst, seq, recs) =>
               recs.map { rec =>
                 val vals = keyCols.map { n =>
@@ -1832,7 +1846,7 @@ object HudiLite {
         val byFid = it.toVector.groupBy(_.getString(0))
         byFid.iterator.map { case (fid, rows) =>
           val (part, baseInstant) = bcMeta.value(fid)
-          val rel = s"$part/${fid}_$baseInstant.log.${instant}_$writeToken"
+          val rel = s"${partDir(part)}/${fid}_$baseInstant.log.${instant}_$writeToken"
           val f = new java.io.File(tdir, rel)
           val attemptId = org.apache.spark.TaskContext.get().taskAttemptId()
           val tmp = new java.io.File(tdir, s"$rel.a$attemptId.tmp")
@@ -1863,7 +1877,7 @@ object HudiLite {
         s"""{"fileId":"$fid","path":"$rel","baseInstant":"$instant","base":true}"""
     }).toMap
     val statsJson = (logJs.keySet ++ baseJs.keySet).toSeq.sorted.map { part =>
-      s""""$part":[${(logJs.getOrElse(part, Nil) ++
+      s"""${partKey(part)}:[${(logJs.getOrElse(part, Nil) ++
         baseJs.getOrElse(part, Nil)).mkString(",")}]"""
     }.mkString(",")
     val schemaField = s""""schema":${mapper.writeValueAsString(schema.json)},"""
@@ -2028,7 +2042,7 @@ object HudiLite {
         val byFid = it.toVector.groupBy(_.getString(0))
         byFid.iterator.map { case (fid, rows) =>
           val (part, baseInstant) = bcMeta.value(fid)
-          val rel = s"$part/${fid}_$baseInstant.log.${instant}_$writeToken"
+          val rel = s"${partDir(part)}/${fid}_$baseInstant.log.${instant}_$writeToken"
           val f = new java.io.File(tdir, rel)
           // stage under an attempt-unique name, then rename into place:
           // under speculative execution two attempts of this partition
@@ -2058,7 +2072,7 @@ object HudiLite {
         s"""{"fileId":"$fid","path":"$rel","baseInstant":"$instant","base":true}"""
     }).toMap
     val statsJson = (logJs.keySet ++ baseJs.keySet).toSeq.sorted.map { part =>
-      s""""$part":[${(logJs.getOrElse(part, Nil) ++
+      s"""${partKey(part)}:[${(logJs.getOrElse(part, Nil) ++
         baseJs.getOrElse(part, Nil)).mkString(",")}]"""
     }.mkString(",")
     val bField = batchId.map(b => s""""batchId":$b,""").getOrElse("")
@@ -2163,7 +2177,7 @@ object HudiLite {
         if (wn.isEmpty) merged0
         else merged0.select(merged0.columns.toSeq.map(c =>
           col(c).as(wn.getOrElse(c, c))): _*)
-      val rel = s"$part/${fid}_0-0-0_$newInstant.parquet"
+      val rel = s"${partDir(part)}/${fid}_0-0-0_$newInstant.parquet"
       val tmp = s"$tableDir/tmp_compact"
       merged.coalesce(1).write.mode("overwrite").parquet(tmp)
       val partFile = new java.io.File(tmp).listFiles()
@@ -2180,7 +2194,7 @@ object HudiLite {
     val statsJson = stats.groupBy(_._1).map { case (part, ss) =>
       val entries = ss.map { case (_, fid, rel) =>
         s"""{"fileId":"$fid","path":"$rel","numWrites":0}""" }
-      s""""$part":[${entries.mkString(",")}]"""
+      s"""${partKey(part)}:[${entries.mkString(",")}]"""
     }.mkString(",")
     require(IcebergWriter.casCreate(
         java.nio.file.Paths.get(tableDir, ".hoodie", s"$newInstant.commit"),

@@ -208,8 +208,11 @@ object IcebergLite {
     * removes matching rows only from data files with sequence < S, so
     * a key re-inserted in a LATER snapshot survives (the merge-on-write
     * upsert contract). Each delete file's equality columns are its own
-    * parquet schema; data-file sequence numbers ride a metadata-sized
-    * literal map keyed by normalized path. */
+    * parquet schema, read from its footer on the driver; all files with
+    * one column set apply in ONE scan and ONE anti-join, each row
+    * carrying its file's sequence number as `__dseq`. Data-file and
+    * delete-file sequence numbers ride metadata-sized literal maps
+    * keyed by [[LakeFiles.key]]. */
   def readSnapshot(spark: SparkSession, tableDir: String,
                    snapshotId: Option[Long] = None,
                    partFilter: Option[String => Boolean] = None,
@@ -231,7 +234,6 @@ object IcebergLite {
     val posDeletePaths = tasks.filter(_.content == 1).map(_.path)
     val eqDeleteTasks = tasks.filter(_.content == 2)
     require(dataTasks.nonEmpty, s"snapshot has no data files in $tableDir")
-    def norm(p: String): String = p.replaceAll("^file:+", "")
     // ADD-COLUMN evolution read (field-id resolution simplified to
     // by-name — the identity mapping our writer produces): a DECLARED
     // schema (metadata `schemas` + current-schema-id) plans the scan
@@ -256,16 +258,17 @@ object IcebergLite {
         if (fs.forall { case (l, w, _) => l == w }) raw
         else raw.select(fs.map { case (l, w, _) => col(w).as(l) }: _*)
       case None =>
-        (if (mergeSchema) spark.read.option("mergeSchema", "true")
-         else spark.read).parquet(dataTasks.map(_.path): _*)
+        if (mergeSchema)
+          spark.read.option("mergeSchema", "true").parquet(dataTasks.map(_.path): _*)
+        else LakeFiles.scan(spark, dataTasks.map(_.path))
     }
     val data = scan
-      .withColumn("__fp", regexp_replace(col("_metadata.file_path"), "^file:+", ""))
+      .withColumn("__fp", LakeFiles.pathCol)
       .withColumn("__pos", col("_metadata.row_index"))
     val afterPos =
       if (posDeletePaths.isEmpty) data
       else {
-        val dels = spark.read.parquet(posDeletePaths: _*)
+        val dels = LakeFiles.scan(spark, posDeletePaths)
           .select(regexp_replace(col("file_path"), "^file:+", "").as("__fp"),
             col("pos").as("__pos"))
         data.join(dels, Seq("__fp", "__pos"), "left_anti")
@@ -273,17 +276,14 @@ object IcebergLite {
     val afterEq =
       if (eqDeleteTasks.isEmpty) afterPos
       else {
-        val seqMap = typedLit(dataTasks.map(t => norm(t.path) -> t.sequenceNumber).toMap)
+        val seqMap = typedLit(dataTasks.map(t =>
+          LakeFiles.key(t.path) -> t.sequenceNumber).toMap)
         val withSeq = afterPos.withColumn("__seq", element_at(seqMap, col("__fp")))
-        eqDeleteTasks.foldLeft(withSeq) { (cur, del) =>
-          val d = spark.read.parquet(del.path)
-          // delete files carry WRITE names; the frame is logical by now
-          val eqCols = d.columns.toSeq.map(c => writeToLogical.getOrElse(c, c))
-          val right = d.select(d.columns.toSeq.zip(eqCols).map {
-            case (w, l) => col(w).as(s"__d_$l") }: _*)
-          val cond = eqCols.map(c => cur(c) <=> right(s"__d_$c"))
-            .reduceLeft(_ && _) && cur("__seq") < lit(del.sequenceNumber)
-          cur.join(right, cond, "left_anti")
+        eqDeleteScans(spark, eqDeleteTasks, writeToLogical).foldLeft(withSeq) {
+          case (cur, (eqCols, right)) =>
+            val cond = eqCols.map(c => cur(c) <=> right(s"__d_$c"))
+              .reduceLeft(_ && _) && cur("__seq") < right("__dseq")
+            cur.join(right, cond, "left_anti")
         }.drop("__seq")
       }
     // keepPositions: DML callers (one-pass MERGE) keep the LIVE rows'
@@ -291,6 +291,27 @@ object IcebergLite {
     // positions feed the position-delete writer directly
     if (keepPositions) afterEq else afterEq.drop("__fp", "__pos")
   }
+
+  /** Equality-delete files grouped by their equality-column set, one
+    * scan per set: (logical column names, frame of `__d_<column>` plus
+    * `__dseq`, the row's delete-file sequence number). The delete files
+    * carry WRITE names, mapped to logical through `writeToLogical`.
+    * Each set is learned from a footer read on the driver, so planning
+    * runs no schema-inference job. */
+  private def eqDeleteScans(spark: SparkSession, dels: Seq[FileTask],
+                            writeToLogical: Map[String, String])
+      : Seq[(Seq[String], DataFrame)] =
+    dels.groupBy(d => LakeFiles.footerSchema(spark, d.path)).toSeq
+      .sortBy(_._2.map(_.path).min).map { case (schema, group) =>
+        val dseq = typedLit(group.map(t =>
+          LakeFiles.key(t.path) -> t.sequenceNumber).toMap)
+        val eqCols = schema.fieldNames.toSeq.map(c => writeToLogical.getOrElse(c, c))
+        val right = LakeFiles.scan(spark, group.map(_.path), Some(schema))
+          .select(schema.fieldNames.toSeq.zip(eqCols).map {
+            case (w, l) => col(w).as(s"__d_$l") } :+
+            element_at(dseq, LakeFiles.pathCol).as("__dseq"): _*)
+        (eqCols, right)
+      }
 
   /** The `snapshots` METADATA TABLE (the `SELECT * FROM tbl.snapshots`
     * surface): one row per snapshot from the metadata JSON. */
@@ -395,7 +416,7 @@ object IcebergLite {
           .parquet(paths: _*)
         if (fs.forall { case (l, w, _) => l == w }) raw
         else raw.select(fs.map { case (l, w, _) => col(w).as(l) }: _*)
-      case None => spark.read.parquet(paths: _*)
+      case None => LakeFiles.scan(spark, paths)
     }
 
   /** CDC change rows over (from, to] — the Delta-discipline feed the
@@ -518,7 +539,7 @@ object IcebergLite {
               val posPaths = newDelTasks.filter(_.content == 1).map(_.path)
               val posMask =
                 if (posPaths.isEmpty) None
-                else Some(base.join(spark.read.parquet(posPaths: _*)
+                else Some(base.join(LakeFiles.scan(spark, posPaths)
                   .select(regexp_replace(col("file_path"), "^file:+", "")
                     .as("__fp"), col("pos").as("__pos")),
                   Seq("__fp", "__pos"), "left_semi"))
@@ -529,15 +550,12 @@ object IcebergLite {
               val writeToLogical = declaredFields(tableDir, prevId)
                 .map(_.map { case (l, w, _) => w -> l }.toMap)
                 .getOrElse(Map.empty[String, String])
-              val eqMasks = newDelTasks.filter(_.content == 2).map { del =>
-                val d = spark.read.parquet(del.path)
-                val eqCols = d.columns.toSeq
-                  .map(c => writeToLogical.getOrElse(c, c))
-                val right = d.select(d.columns.toSeq.zip(eqCols).map {
-                  case (w, l) => col(w).as(s"__d_$l") }: _*)
-                val cond = eqCols.map(c => base(c) <=> right(s"__d_$c"))
-                  .reduceLeft(_ && _)
-                base.join(right, cond, "left_semi")
+              val eqMasks = eqDeleteScans(spark,
+                  newDelTasks.filter(_.content == 2), writeToLogical).map {
+                case (eqCols, right) =>
+                  val cond = eqCols.map(c => base(c) <=> right(s"__d_$c"))
+                    .reduceLeft(_ && _)
+                  base.join(right, cond, "left_semi")
               }
               (posMask.toSeq ++ eqMasks).reduceOption(_ unionByName _)
                 // a row masked by BOTH a position and an equality delete

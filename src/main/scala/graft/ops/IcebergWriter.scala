@@ -332,11 +332,10 @@ object IcebergWriter {
           case (_, w, dt) =>
             org.apache.spark.sql.types.StructField(w, dt, nullable = true) }))
           .parquet(dataTasks.map(_.path): _*)
-      case None => spark.read.parquet(dataTasks.map(_.path): _*)
+      case None => LakeFiles.scan(spark, dataTasks.map(_.path))
     }
     val base = raw
-      .withColumn("file_path",
-        regexp_replace(col("_metadata.file_path"), "^file:+", ""))
+      .withColumn("file_path", LakeFiles.pathCol)
       .withColumn("pos", col("_metadata.row_index"))
     val scan = declared match {
       case Some(fs) if fs.exists { case (l, w, _) => l != w } =>

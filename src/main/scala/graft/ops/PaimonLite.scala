@@ -148,7 +148,9 @@ object PaimonLite {
       case DateType => "DATE"
       case TimestampType => "TIMESTAMP"
       case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-      case other => throw new IllegalArgumentException(s"unsupported type $other")
+      // any other type in Spark's SQL spelling, which the schema-file
+      // parser reads back
+      case other => other.sql
     }
   }
 
@@ -297,7 +299,7 @@ object PaimonLite {
         spark.read.schema(StructType(fs.map { case (_, w, dt) =>
           StructField(w, dt, nullable = true) }.toArray ++ sys))
           .parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
+      case None => LakeFiles.scan(spark, paths)
     }
 
   private[ops] def readAligned(spark: SparkSession, tableDir: String,
@@ -317,7 +319,7 @@ object PaimonLite {
         if (fs.forall { case (l, w, _) => l == w }) raw
         else raw.select(fs.map { case (l, w, _) => col(w).as(l) } ++
           sys.toSeq.map(f => col(f.name)): _*)
-      case None => spark.read.parquet(paths: _*)
+      case None => LakeFiles.scan(spark, paths)
     }
 
   private def manifestEntries(tableDir: String, manifestListName: String)
@@ -481,7 +483,7 @@ object PaimonLite {
           case None =>
             // stamped 0 on a then-undeclared table (ALTER ids start at
             // 1): each file's own parquet schema, stored WRITE names
-            spark.read.parquet(files: _*)
+            LakeFiles.scan(spark, files)
         }
         val rawCols = raw.columns.toSet
         raw.select(cur.map { case (l, w, dt) =>
@@ -605,8 +607,8 @@ object PaimonLite {
       val files = planFiles(tableDir)
       require(files.nonEmpty, "empty window on a table with no live " +
         "files and no declared schema")
-      spark.read.parquet(s"$tableDir/${files.head.path}")
-        .drop("_SEQUENCE_NUMBER", "_VALUE_KIND").schema
+      StructType(LakeFiles.footerSchema(spark, s"$tableDir/${files.head.path}")
+        .filterNot(f => f.name == "_SEQUENCE_NUMBER" || f.name == "_VALUE_KIND"))
     }
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType(dataSchema.fields :+

@@ -460,9 +460,9 @@ object PaimonWriter {
             .map(rel => s"$tableDir/$rel")
           if (winnerFiles.nonEmpty) {
             import org.apache.spark.sql.functions.col
-            val overlap = spark.read.parquet(winnerFiles: _*)
+            val overlap = LakeFiles.scan(spark, winnerFiles)
               .select(keyCols.map(col): _*)
-              .join(spark.read.parquet(files.map(f => s"$tableDir/${f._1.path}"): _*)
+              .join(LakeFiles.scan(spark, files.map(f => s"$tableDir/${f._1.path}"))
                 .select(keyCols.map(col): _*), keyCols, "left_semi")
               .limit(1).count()
             require(overlap == 0L,
@@ -568,8 +568,8 @@ object PaimonWriter {
         // parquet schema minus the LSM system columns
         val files = PaimonLite.planFiles(tableDir)
         require(files.nonEmpty, "table has no live files")
-        spark.read.parquet(s"$tableDir/${files.head.path}")
-          .schema.fields.toSeq.filterNot(x =>
+        LakeFiles.footerSchema(spark, s"$tableDir/${files.head.path}")
+          .fields.toSeq.filterNot(x =>
             x.name == "_SEQUENCE_NUMBER" || x.name == "_VALUE_KIND")
           .map(x => (x.name, x.name, x.dataType))
       }
@@ -780,14 +780,21 @@ object PaimonWriter {
       !java.nio.file.Files.exists(
         java.nio.file.Paths.get(tableDir, "snapshot", "LATEST")),
       s"table already exists at $tableDir")
+    declareSchema0(tableDir, schema.fields.toSeq,
+      "empty-table creation lost a race with a concurrent writer")
+  }
+
+  /** Declare `fields` as `schema/schema-0` (put-if-absent). */
+  private def declareSchema0(tableDir: String,
+                             fields: Seq[org.apache.spark.sql.types.StructField],
+                             raceMsg: String): Unit = {
     new java.io.File(tableDir, "schema").mkdirs()
-    val fieldsJson = schema.fields.zipWithIndex.map { case (f, i) =>
+    val fieldsJson = fields.zipWithIndex.map { case (f, i) =>
       s"""{"id":$i,"name":"${f.name}","type":"${PaimonLite.paimonTypeName(f.dataType)}"}"""
     }.mkString(",")
     require(IcebergWriter.casCreate(
         java.nio.file.Paths.get(tableDir, "schema", "schema-0"),
-        s"""{"id":0,"fields":[$fieldsJson]}"""),
-      "empty-table creation lost a race with a concurrent writer")
+        s"""{"id":0,"fields":[$fieldsJson]}"""), raceMsg)
   }
 
   /** TRUNCATE TABLE: ONE commitKind=OVERWRITE snapshot carrying no base
@@ -803,16 +810,10 @@ object PaimonWriter {
     // later inserts) keep their shape (one footer read)
     if (PaimonLite.declaredFields(tableDir).isEmpty) {
       val head = PaimonLite.planFiles(tableDir).head
-      val fields = spark.read.parquet(s"$tableDir/${head.path}")
-        .schema.fields.toSeq.filterNot(x =>
+      val fields = LakeFiles.footerSchema(spark, s"$tableDir/${head.path}")
+        .fields.toSeq.filterNot(x =>
           x.name == "_SEQUENCE_NUMBER" || x.name == "_VALUE_KIND")
-      new java.io.File(tableDir, "schema").mkdirs()
-      val fieldsJson = fields.zipWithIndex.map { case (f, i) =>
-        s"""{"id":$i,"name":"${f.name}","type":"${PaimonLite.paimonTypeName(f.dataType)}"}"""
-      }.mkString(",")
-      require(IcebergWriter.casCreate(
-          java.nio.file.Paths.get(tableDir, "schema", "schema-0"),
-          s"""{"id":0,"fields":[$fieldsJson]}"""),
+      declareSchema0(tableDir, fields,
         "TRUNCATE lost a schema-declaration race — rerun")
     }
     val curSnap = PaimonLite.latestSnapshotId(tableDir)

@@ -585,6 +585,15 @@ object LakehouseSql {
       else PaimonLite.planFiles(dir, version).isEmpty
   }
 
+  /** The table's schema from its own metadata, so a statement plans
+    * without a Spark job; the reader is built only for a table that
+    * declares none. */
+  private def tableSchema(spark: SparkSession, fmt: String, dir: String,
+                          p: Props, version: Option[Long] = None)
+      : org.apache.spark.sql.types.StructType =
+    declaredLogicalSchema(spark, fmt, dir)
+      .getOrElse(reader(spark, fmt, dir, p, version).schema)
+
   private def reader(spark: SparkSession, fmt: String, dir: String,
                      p: Props, version: Option[Long] = None,
                      prune: Option[SqlPrune.PruneInfo] = None,
@@ -607,8 +616,7 @@ object LakehouseSql {
     // table's schema — the readers' no-live-files guard is for broken
     // tables, not for valid queries over absent partitions
     def emptyFrame(): DataFrame = {
-      val schema = declaredLogicalSchema(spark, fmt, dir)
-        .getOrElse(reader(spark, fmt, dir, p, version).schema)
+      val schema = tableSchema(spark, fmt, dir, p, version)
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     }
@@ -959,6 +967,10 @@ object LakehouseSql {
           parsedParts.map { case (c, tr) =>
             (c, tr, created.schema(c).dataType.simpleString) }
         else Nil)
+      // Paimon declares its schema up front, as CREATE TABLE does, so
+      // later statements plan from metadata (the other formats stamp
+      // theirs with the first commit)
+      if (fmt == "paimon") PaimonWriter.createEmpty(spark, dir, created.schema)
       val version = appendTo(spark, fmt, dir, props, created, create = true)
       writeProps(dir, props)
       s"SELECT CAST($version AS BIGINT) AS committed_version"
@@ -1104,7 +1116,7 @@ object LakehouseSql {
       val dir = tableDir(spark, fmt, name)
       val p = readProps(dir)
       val incoming = spark.sql(select)
-      val target = reader(spark, fmt, dir, p).schema
+      val target = tableSchema(spark, fmt, dir, p)
       require(incoming.columns.toSet == target.fieldNames.toSet,
         s"INSERT OVERWRITE columns ${incoming.columns.mkString(",")} must " +
           s"match the table's ${target.fieldNames.mkString(",")}")
@@ -1143,7 +1155,7 @@ object LakehouseSql {
       val p = readProps(dir)
       val cols = colsRaw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
       require(cols.distinct.size == cols.size, "duplicate INSERT columns")
-      val target = reader(spark, fmt, dir, p).schema
+      val target = tableSchema(spark, fmt, dir, p)
       cols.foreach(c => require(target.fieldNames.contains(c),
         s"unknown INSERT column $c"))
       (p.partCol.toSeq ++ p.partFields.map(_._1) ++ p.keyCols).distinct
@@ -1168,7 +1180,7 @@ object LakehouseSql {
       // the stored types) — mixed int/long parquet across commits
       // would otherwise poison later merged reads
       val incoming0 = spark.sql(select)
-      val target = reader(spark, fmt, dir, p).schema
+      val target = tableSchema(spark, fmt, dir, p)
       // `INSERT INTO t VALUES (...)`: positional — the VALUES columns
       // (col1..colN) take the table's schema order
       val incoming =
@@ -1257,7 +1269,7 @@ object LakehouseSql {
       // partition column and PRIMARY KEY membership
       val dir = tableDir(spark, fmt, name)
       val p = readProps(dir)
-      val schema = reader(spark, fmt, dir, p).schema
+      val schema = tableSchema(spark, fmt, dir, p)
       val rows = schema.fields.toSeq.map { f =>
         val notes = Seq(
           if (p.partCol.contains(f.name)) Some("partition") else None,
@@ -1345,7 +1357,7 @@ object LakehouseSql {
           s"truncate(${t.stripPrefix("truncate[").stripSuffix("]")}, $c)"
         case other => sys.error(s"unknown transform $other")
       }
-      val schema = reader(spark, fmt, dir, p).schema
+      val schema = tableSchema(spark, fmt, dir, p)
       val cols = schema.fields.map(f =>
         s"${f.name} ${f.dataType.sql}").mkString(", ")
       val pkPart =
@@ -1477,9 +1489,7 @@ object LakehouseSql {
       // CROSS-FAMILY changes (integral → string) REWRITE every live
       // file — one atomic commit on delta/iceberg, loud refusal where
       // the schema file and the data commit are separate swap points
-      val curType = declaredLogicalSchema(spark, fmt, dir)
-        .map(_.apply(colName).dataType)
-        .getOrElse(reader(spark, fmt, dir, p).schema(colName).dataType)
+      val curType = tableSchema(spark, fmt, dir, p)(colName).dataType
       val newType = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
         .parseDataType(sqlType)
       if (graft.ops.TypeWiden.ok(curType, newType)) {
@@ -2108,7 +2118,7 @@ object LakehouseSql {
         val window =
           if (current <= cursor) {
             // empty window, feed-shaped; nothing to publish
-            val dataSchema = reader(spark, fmt, dir, p).schema
+            val dataSchema = tableSchema(spark, fmt, dir, p)
             spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
               org.apache.spark.sql.types.StructType(dataSchema.fields :+
                 org.apache.spark.sql.types.StructField("_CHANGE_TYPE",

@@ -57,4 +57,14 @@ class EntryPointSpec extends AnyFunSuite {
       SparkSession.setActiveSession(shared)
     }
   }
+
+  test("a failed SQL-bodied registration fails the session build, naming it") {
+    val e = intercept[IllegalArgumentException] {
+      graft.functions.FunctionRegistry.registerSql(TestSpark.spark, "spec", Seq(
+        "CREATE OR REPLACE TEMPORARY FUNCTION ep_ok() RETURNS INT RETURN 1",
+        "CREATE OR REPLACE TEMPORARY FUNCTION ep_broken() RETURNS INT " +
+          "RETURN ep_no_such_function()"))
+    }
+    assert(e.getMessage.contains("ep_broken") && !e.getMessage.contains("ep_ok"))
+  }
 }
