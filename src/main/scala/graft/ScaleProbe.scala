@@ -258,7 +258,7 @@ object ScaleProbe {
       val narrow = Seq(7L, 11770L, 99999L)
         .map(k => (k, (k % 20).toString, 1)).toDF("k", "p", "v")
       val cand = graft.ops.HudiLite.candidateBaseFids(
-        spark, narrow, Seq("k"), Some("p"), slices)
+        spark, narrow, Seq("k"), Some("p"), slices).fids
       println(s"[writerscale] hudi bloom: ${cand.size} candidate files of " +
         s"${slices.size} for a 3-key batch")
       if (slices.size < 40)

@@ -31,7 +31,8 @@ import org.apache.spark.sql.functions.col
   * across base + logs (Hudi's OverwriteWithLatestAvroPayload), with
   * delete winners dropping the key. Spark-first split: the timeline/
   * file-slice walk stays driver-side, log BYTES parse DISTRIBUTED
-  * (`binaryFiles` → per-executor block decode → rows), and the merge
+  * ([[logRecords]]: tasks over the path list read each log with
+  * `java.nio` and decode its blocks to rows), and the merge
   * is the declared key-window discipline shared with
   * [[PaimonLite.readSnapshot]]. Honest scope: the block framing is
   * simplified to (magic, version, type, instant, seq, length,
@@ -311,6 +312,28 @@ object HudiLite {
       out += ((blockType, instant, seq, recs.result()))
     }
     out.result()
+  }
+
+  /** Every record of the given log files, decoded inside tasks over
+    * the path list: each task reads its files' bytes with `java.nio`
+    * (the log writer writes them from tasks with `java.io`) and maps
+    * each record with `f(path, blockType, instant, seq, record)`, the
+    * path spelled as given, made absolute. Not `binaryFiles`: it
+    * serializes the whole Hadoop configuration into every file's
+    * stream and combines all files into one task. */
+  private def logRecords[T: scala.reflect.ClassTag](spark: SparkSession,
+      paths: Seq[String])(
+      f: (String, Int, String, Long, org.apache.avro.generic.GenericRecord) => T)
+      : org.apache.spark.rdd.RDD[T] = {
+    val sc = spark.sparkContext
+    val abs = paths.map(new java.io.File(_).getAbsolutePath)
+    sc.parallelize(abs, math.max(1, math.min(abs.size, sc.defaultParallelism)))
+      .flatMap { p =>
+        parseLogBytes(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
+          .iterator.flatMap { case (bt, inst, seq, recs) =>
+            recs.iterator.map(f(p, bt, inst, seq, _))
+          }
+      }
   }
 
   /** MoR file-slice plan at `instant`: per file group the latest base
@@ -715,19 +738,13 @@ object HudiLite {
       else {
         val names = dataSchema.fields.map(_.name)
         val types = dataSchema.fields.map(_.dataType)
-        val logRows = spark.sparkContext
-          .binaryFiles(logPaths.mkString(","))
-          .flatMap { case (_, pds) =>
-            parseLogBytes(pds.toArray()).flatMap { case (bt, inst, seq, recs) =>
-              recs.map { rec =>
-                val vals = names.zip(types).map { case (n, dt) =>
-                  val v = if (rec.getSchema.getField(n) == null) null else rec.get(n)
-                  coerceLogValue(v, dt)
-                }
-                Row.fromSeq(vals.toSeq ++ Seq[Any](inst, seq, bt == BlockDelete))
-              }
-            }
+        val logRows = logRecords(spark, logPaths) { (_, bt, inst, seq, rec) =>
+          val vals = names.zip(types).map { case (n, dt) =>
+            val v = if (rec.getSchema.getField(n) == null) null else rec.get(n)
+            coerceLogValue(v, dt)
           }
+          Row.fromSeq(vals.toSeq ++ Seq[Any](inst, seq, bt == BlockDelete))
+        }
         baseSys.unionByName(spark.createDataFrame(logRows, withSys))
       }
     val w = Window.partitionBy(keyColsW.map(col): _*)
@@ -922,20 +939,14 @@ object HudiLite {
       val types = st.fields.map(_.dataType)
       val rowSchema = StructType(st.fields :+
         StructField("_CHANGE_TYPE", StringType, nullable = false))
-      val logRows = spark.sparkContext
-        .binaryFiles(paths.mkString(","))
-        .flatMap { case (_, pds) =>
-          parseLogBytes(pds.toArray()).flatMap { case (bt, _, _, recs) =>
-            recs.map { rec =>
-              val vals = names.zip(types).map { case (n, dt) =>
-                val v = if (rec.getSchema.getField(n) == null) null else rec.get(n)
-                coerceLogValue(v, dt)
-              }
-              Row.fromSeq(vals.toSeq :+
-                (if (bt == BlockDelete) "delete" else "upsert"))
-            }
-          }
+      val logRows = logRecords(spark, paths) { (_, bt, _, _, rec) =>
+        val vals = names.zip(types).map { case (n, dt) =>
+          val v = if (rec.getSchema.getField(n) == null) null else rec.get(n)
+          coerceLogValue(v, dt)
         }
+        Row.fromSeq(vals.toSeq :+
+          (if (bt == BlockDelete) "delete" else "upsert"))
+      }
       frames += align(toLogical(spark.createDataFrame(logRows, rowSchema)))
     }
     val fs = frames.result()
@@ -1179,26 +1190,79 @@ object HudiLite {
 
   // ------------------------------------------------------- bloom index (r11)
   // Hudi's bloom index, the thing that makes upserts sub-table-scan at
-  // 100 TB: each base file carries a bloom filter of its record keys
-  // (a sidecar sized from the file's footer row count; real Hudi rides
-  // the parquet footer). An incoming batch tests its keys against the
-  // blooms of ITS partition's files (broadcast, metadata-sized) and the
-  // exact key-index scan then opens only the candidate files. Bloom
-  // negatives are exact — a key missing from every bloom is genuinely
-  // new; positives are only HINTS (never proof of residence), which is
-  // why routing runs the exactness backstop in [[resolveKeyIndex]].
+  // 100 TB: each base file AND each log file carries a bloom filter of
+  // its record keys (a `<file>.bloom` sidecar; real Hudi rides the
+  // parquet footer and the log block header). An incoming batch tests
+  // its keys against the blooms of ITS partition's file groups
+  // (broadcast, metadata-sized) and the exact key-index scan then
+  // opens only the candidate groups. Bloom negatives are exact — a key
+  // missing from every bloom is genuinely new; positives are only HINTS
+  // (never proof of residence), which is why routing runs the
+  // exactness backstop in [[resolveKeyIndex]].
   private val BloomHashes = 3
+  /** Log sidecars take more hashes than base sidecars: at their 64+
+    * bits/key, 6 hashes bring the FPR from ≤ 1e-4 (3 hashes) to
+    * ≤ 5e-7, so a 200-key all-new batch swept over a few dozen log
+    * sidecars almost never reopens a group for nothing. Base sidecars
+    * keep 3 so that the ones already on disk stay readable. */
+  private[graft] val LogBloomHashes = 6
 
   /** Sidecar size in BITS for a file of `rows` keys: next power of two
-    * ≥ 16 bits/key (FPR ≈ 0.5% at 3 hashes), floored at 2^16 (8 KiB)
-    * and capped at 2^27 (16 MiB ≈ 8M keys). A FIXED 8 KiB bloom would
-    * saturate (FPR → 1) under the volume-derived ~4M-row file groups,
-    * degenerating candidate pruning to an all-bases scan. Above the cap
-    * the FPR degrades gracefully; the backstop keeps routing exact. */
-  private def bloomBitsFor(rows: Long): Int = {
-    var m = 1L << 16
-    while (m < rows * 16L && m < (1L << 27)) m <<= 1
+    * ≥ `perKey` bits/key, floored at `floor` and capped at 2^27 (16 MiB
+    * ≈ 8M keys). Base files take 16 bits/key (FPR ≈ 0.5% at 3 hashes)
+    * over an 8 KiB floor: a FIXED 8 KiB bloom would saturate (FPR → 1)
+    * under the volume-derived ~4M-row file groups, degenerating
+    * candidate pruning to an all-bases scan. Log files are batch-sized
+    * and many — a 200-key insert over 3 partitions × 2 groups logs
+    * ~33 keys per file — so they take 64 bits/key with no floor beyond
+    * one word ([[LogBloomHashes]] keeps their FPR low), a sidecar a
+    * sixteenth the base floor. Above the cap the FPR degrades
+    * gracefully; the backstop keeps routing exact. */
+  private def bloomBitsFor(rows: Long, perKey: Int = 16,
+                           floor: Long = 1L << 16): Int = {
+    var m = floor
+    while (m < rows * perKey && m < (1L << 27)) m <<= 1
     m.toInt
+  }
+
+  private def writeBloomFile(path: java.nio.file.Path, bits: Array[Long]): Unit = {
+    val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
+    bits.foreach(bb.putLong)
+    java.nio.file.Files.write(path, bb.array()): Unit
+  }
+
+  /** Write one log file and its `.bloom` sidecar (every key the log
+    * carries, data and delete blocks alike, spelled as [[bloomKeyCol]]
+    * spells them) from the task that owns the file group. Each lands
+    * under an attempt-unique name and then renames into place: under
+    * speculative execution two attempts of one partition run
+    * concurrently, and appending to a shared path would interleave
+    * their bytes. Both attempts produce identical content, so the
+    * atomic REPLACE rename (POSIX rename(2)) is race-free whichever
+    * lands last. The sidecar lands first, so a log never exists
+    * without it. Returns `rel`. */
+  private def placeLog(tableDir: String, rel: String, blocks: Seq[LogBlock],
+                       keys: Seq[String]): String = {
+    val attemptId = org.apache.spark.TaskContext.get().taskAttemptId()
+    def place(name: String)(write: java.io.File => Unit): Unit = {
+      val tmp = new java.io.File(tableDir, s"$name.a$attemptId.tmp")
+      tmp.delete() // sequential-retry leftover
+      write(tmp)
+      java.nio.file.Files.move(tmp.toPath, new java.io.File(tableDir, name).toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+    }
+    val bits = new Array[Long](bloomBitsFor(keys.size, perKey = 64, floor = 64) / 64)
+    keys.foreach(bloomAdd(bits, _, LogBloomHashes))
+    place(rel + ".bloom")(f => writeBloomFile(f.toPath, bits))
+    place(rel)(f => writeLogFile(f.getAbsolutePath, blocks))
+    rel
+  }
+
+  /** Drop a staged file and its `.bloom` sidecar (CAS-loss cleanup). */
+  private def deleteStaged(tableDir: String, rel: String): Unit = {
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tableDir, rel))
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(tableDir, rel + ".bloom")): Unit
   }
 
   /** Bit position of hash `i` for `key` in an `mBits`-bit bloom — the
@@ -1209,20 +1273,22 @@ object HudiLite {
     java.lang.Math.floorMod(h, mBits)
   }
 
-  private[graft] def bloomAdd(bits: Array[Long], key: String): Unit = {
+  private[graft] def bloomAdd(bits: Array[Long], key: String,
+                              hashes: Int = BloomHashes): Unit = {
     val m = bits.length * 64
     var i = 0
-    while (i < BloomHashes) {
+    while (i < hashes) {
       val b = bloomHash(key, i, m)
       bits(b >>> 6) |= (1L << (b & 63))
       i += 1
     }
   }
 
-  private[graft] def bloomContains(bits: Array[Long], key: String): Boolean = {
+  private[graft] def bloomContains(bits: Array[Long], key: String,
+                                   hashes: Int = BloomHashes): Boolean = {
     val m = bits.length * 64
     var i = 0
-    while (i < BloomHashes) {
+    while (i < hashes) {
       val b = bloomHash(key, i, m)
       if ((bits(b >>> 6) & (1L << (b & 63))) == 0L) return false
       i += 1
@@ -1326,10 +1392,7 @@ object HudiLite {
         var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a })
       .collect()
     perFile.foreach { case (fp, bits) =>
-      val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
-      bits.foreach(bb.putLong)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(absByFp(fp) + ".bloom"), bb.array())
+      writeBloomFile(java.nio.file.Paths.get(absByFp(fp) + ".bloom"), bits)
     }
   }
 
@@ -1411,6 +1474,45 @@ object HudiLite {
     }.toSet
   }
 
+  /** Route an upsert batch `tagged` with its index hits (`__fid`,
+    * null for a NEW key): existing keys keep their group, NEW keys
+    * hash into their partition's live groups through a metadata-sized
+    * (partition → sorted group list) literal map — codegen element_at,
+    * no UDF, no join. Rows of a NEVER-SEEN partition lay fresh base
+    * file groups in this same instant (lazy group creation, real
+    * Hudi's way), and so do NEW keys into a FULL partition (every live
+    * base over the size bound) — file groups are added as a partition
+    * grows. Only a batch partition new to the table or full can hold
+    * such rows, so unless the bloom sweep saw one in `batchParts`
+    * (None = a null value) no job probes for them. Returns the routed
+    * rows, guarded against partition moves, and the fresh groups. */
+  private def routeUpserts(spark: SparkSession, tableDir: String,
+                           tagged: DataFrame, df: DataFrame,
+                           keyCols: Seq[String], partCol: String,
+                           partTransform: String,
+                           slices: Seq[(String, String, String, String, Seq[String])],
+                           batchParts: Set[Option[String]], instant: String)
+      : (DataFrame, Seq[(String, String, String)]) = {
+    import org.apache.spark.sql.functions._
+    val partV = partExpr(df, partCol, partTransform)
+    val fids = element_at(typedLit(slices.groupBy(_._2).map { case (part, ss) =>
+      part -> ss.map(_._3).distinct.sorted }), partV)
+    val full = fullPartitions(spark, slices)
+    val isFull = if (full.isEmpty) lit(false) else partV.isin(full.toSeq: _*)
+    val live = slices.map(_._2).toSet
+    val freshRows = tagged.filter(col("__fid").isNull && (fids.isNull || isFull))
+      .select(df.columns.toSeq.map(col): _*)
+    val fresh =
+      if (!batchParts.exists(_.forall(p => !live(p) || full(p))) ||
+          freshRows.isEmpty) Nil
+      else stageFreshBases(spark, tableDir, freshRows, keyCols, partCol,
+        partTransform, instant)
+    (tagged.filter(col("__fid").isNotNull || (fids.isNotNull && !isFull))
+      .withColumn("__fid", coalesce(col("__fid"), element_at(fids,
+        (pmod(hash(keyCols.map(col): _*), size(fids)) + 1).cast("int"))))
+      .withColumn("__fid", guardPartitionMove(slices, keyCols, partV)), fresh)
+  }
+
   /** Loud guard against CROSS-PARTITION upserts: a routed row whose
     * partition value differs from its resolved file group's partition
     * would land its record in the OLD partition's group while carrying
@@ -1438,31 +1540,39 @@ object HudiLite {
       .otherwise(col("__fid"))
   }
 
-  /** Bloom-pruned candidate base files for an incoming batch: per
-    * partition, the files whose bloom contains at least one incoming
-    * key (plus files with no sidecar — conservative). The candidate
-    * fid set is computed DISTRIBUTED (keys test only their own
-    * partition's blooms) and only the small fid set returns. */
+  /** One bloom sweep of an incoming batch: the candidate file groups,
+    * and the batch's distinct partition values (None for a null value
+    * or a batch without a partition column). */
+  private[graft] final case class Candidates(fids: Set[String],
+                                             parts: Set[Option[String]])
+
+  /** Bloom-pruned candidate file groups for an incoming batch: per
+    * partition, the groups whose base or log sidecars contain at least
+    * one incoming key. A file without a sidecar (fixture logs from
+    * [[writeDeltaCommits]], tables written before logs carried them)
+    * keeps its group a candidate — conservative. ONE job computes the
+    * candidate set DISTRIBUTED (keys test their own partition's blooms
+    * first) and returns it with the batch's partition values; only
+    * these small sets reach the driver. */
   private[graft] def candidateBaseFids(spark: SparkSession, df: DataFrame,
                                        keyCols: Seq[String],
                                        partCol: Option[String],
                                        slices: Seq[(String, String, String, String, Seq[String])],
                                        partTransform: String = "identity")
-      : Set[String] = {
+      : Candidates = {
     import org.apache.spark.sql.functions._
-    val withBloom = slices.flatMap { s =>
-      val f = new java.io.File(s._1 + ".bloom")
-      if (f.exists()) Some((s._2, s._3, readBloom(f))) else None
+    val sidecars = slices.map { s =>
+      val base = new java.io.File(s._1 + ".bloom")
+      val logs = s._5.map(p => new java.io.File(p + ".bloom"))
+      (s, if ((base +: logs).forall(_.exists()))
+        Some((readBloom(base), logs.map(readBloom))) else None)
     }
-    val noBloom = slices.collect {
-      case s if !new java.io.File(s._1 + ".bloom").exists() => s._3
-    }.toSet
-    if (withBloom.isEmpty) return slices.map(_._3).toSet
-    // partition → (fid, bloom) list, broadcast (8 KiB per base file)
-    val byPart: Map[String, Seq[(String, Array[Long])]] =
-      withBloom.groupBy(_._1).map { case (p, xs) =>
-        p -> xs.map(x => (x._2, x._3))
-      }
+    val noBloom = sidecars.collect { case (s, None) => s._3 }.toSet
+    // partition → (fid, (base bloom, log blooms)) list, broadcast
+    // (metadata-sized: 8 KiB per base file, a few hundred bytes per log)
+    val byPart: Map[String, Seq[(String, (Array[Long], Seq[Array[Long]]))]] =
+      sidecars.collect { case (s, Some(bs)) => (s._2, (s._3, bs)) }
+        .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
     val bc = spark.sparkContext.broadcast(byPart)
     val keyed = partCol match {
       case Some(p) => df.select(partExpr(df, p, partTransform).as("__p"),
@@ -1470,16 +1580,27 @@ object HudiLite {
       case None => df.select(lit(null).cast("string").as("__p"),
         bloomKeyCol(keyCols).as("__k"))
     }
-    val hits = keyed.rdd.mapPartitions { it =>
+    val perTask = keyed.rdd.mapPartitions { it =>
       val m = bc.value
       val seen = scala.collection.mutable.Set.empty[String]
+      val parts = scala.collection.mutable.Set.empty[Option[String]]
+      def sweep(groups: Iterable[(String, (Array[Long], Seq[Array[Long]]))],
+                k: String): Boolean = {
+        var hit = false
+        groups.foreach { case (fid, (base, logs)) =>
+          if (bloomContains(base, k) ||
+              logs.exists(bloomContains(_, k, LogBloomHashes))) {
+            hit = true; seen += fid
+          }
+        }
+        hit
+      }
       it.foreach { r =>
         val k = r.getString(1)
-        if (r.isNullAt(0)) {
-          m.values.flatten.foreach { case (fid, bits) =>
-            if (!seen.contains(fid) && bloomContains(bits, k)) seen += fid
-          }
-        } else {
+        val part = Option(r.getString(0))
+        parts += part
+        part match {
+          case None => sweep(m.values.flatten, k)
           // GLOBAL index, partition-first: a key tests its OWN
           // partition's blooms, and only when every one is negative
           // (exact — the key is certainly not there) does it sweep the
@@ -1488,23 +1609,14 @@ object HudiLite {
           // backstop in resolveKeyIndex re-sweeps any key the exact
           // scan then fails to place, so a false positive here cannot
           // hide a moved key from the partition-move guard.
-          val own = m.getOrElse(r.getString(0), Nil)
-          var ownHit = false
-          own.foreach { case (fid, bits) =>
-            if (bloomContains(bits, k)) { ownHit = true
-              if (!seen.contains(fid)) seen += fid
-            }
-          }
-          if (!ownHit) m.foreach { case (p, xs) =>
-            if (p != r.getString(0)) xs.foreach { case (fid, bits) =>
-              if (!seen.contains(fid) && bloomContains(bits, k)) seen += fid
-            }
-          }
+          case Some(p) =>
+            if (!sweep(m.getOrElse(p, Nil), k))
+              sweep(m.view.filterKeys(_ != p).values.flatten, k)
         }
       }
-      seen.iterator
-    }.distinct().collect().toSet
-    hits ++ noBloom
+      Iterator.single((seen.toSet, parts.toSet))
+    }.collect()
+    Candidates(perTask.flatMap(_._1).toSet ++ noBloom, perTask.flatMap(_._2).toSet)
   }
 
   /** The delete-aware key index for one incoming batch, bloom-pruned
@@ -1517,20 +1629,36 @@ object HudiLite {
     * bypass [[guardPartitionMove]] and hash-route as NEW — leaving a
     * live stale copy in the old partition that partition-filtered
     * reads serve (silent split-brain). The backstop costs one bloom
-    * sweep over the UNRESOLVED keys only, and adds base-file scans
+    * sweep over the UNRESOLVED keys only, and adds file-group scans
     * only when that sweep surfaces fids outside the first candidate
-    * set (genuinely moved keys, or foreign false positives) — the
-    * common all-new / all-in-place batch re-scans nothing. The
-    * returned frame is persisted (the staging path consumes it several
-    * times: fresh-row probe, fresh-base write, routing, commit stats);
-    * callers unpersist after their commit action. */
+    * set (genuinely moved keys, or foreign false positives).
+    *
+    * With NO candidate group, every key was own-partition-negative and
+    * therefore already swept against every partition: the batch is all
+    * new keys, and the index is an empty local frame — no scan, no
+    * persist, no backstop. Otherwise the returned frame is persisted
+    * (the staging path consumes it several times: fresh-row probe,
+    * fresh-base write, routing, commit stats); callers unpersist after
+    * their commit action. Also returns the batch's partition values
+    * from the same sweep. */
   private def resolveKeyIndex(spark: SparkSession, df: DataFrame,
                               keyCols: Seq[String], partCol: Option[String],
                               slices: Seq[(String, String, String, String, Seq[String])],
                               keySchema: org.apache.spark.sql.types.StructType,
                               partTransform: String,
-                              alsoGlobal: Option[DataFrame] = None): DataFrame = {
+                              alsoGlobal: Option[DataFrame] = None)
+      : (DataFrame, Set[Option[String]]) = {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val sweep = candidateBaseFids(spark, df, keyCols, partCol, slices,
+      partTransform)
+    val cand0 = sweep.fids ++
+      alsoGlobal.map(d => candidateBaseFids(spark, d, keyCols, None, slices).fids)
+        .getOrElse(Set.empty[String])
+    if (cand0.isEmpty)
+      return (spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType(keySchema.fields :+ StructField("__fid", StringType, nullable = false))),
+        sweep.parts)
     // the index is only ever PROBED with the batch's keys, so restrict
     // it to them (left-semi below, pushed UNDER the winner window in
     // [[keyIndex]]): the persisted frame and the window shuffle are
@@ -1543,97 +1671,81 @@ object HudiLite {
         .unionByName(d.select(keyCols.map(col): _*)).distinct()
       case None => df.select(keyCols.map(col): _*).distinct()
     }
-    val cand0 = candidateBaseFids(spark, df, keyCols, partCol, slices,
-      partTransform) ++
-      alsoGlobal.map(d => candidateBaseFids(spark, d, keyCols, None, slices))
-        .getOrElse(Set.empty[String])
     val idx0 = keyIndex(spark, keyCols, slices, cand0, keySchema,
       Some(incomingKeys)).persist()
-    if (partCol.isEmpty) return idx0 // global sweep — negatives already exact
+    if (partCol.isEmpty) return (idx0, sweep.parts) // global sweep — negatives already exact
     val unresolved = df.select(keyCols.map(col): _*).distinct()
       .join(idx0, keyCols, "left_anti")
-    val extra = candidateBaseFids(spark, unresolved, keyCols, None, slices) -- cand0
-    if (extra.isEmpty) idx0
+    val extra = candidateBaseFids(spark, unresolved, keyCols, None, slices).fids -- cand0
+    if (extra.isEmpty) (idx0, sweep.parts)
     else {
       val idx = keyIndex(spark, keyCols, slices, cand0 ++ extra, keySchema,
         Some(incomingKeys)).persist()
       idx0.unpersist()
-      idx
+      (idx, sweep.parts)
     }
   }
 
-  /** The record-key → file-group index of the current table state:
-    * DataFrame(keyCols..., __fid). Base keys come from one distributed
-    * key-column parquet scan (fileId resolved from `_metadata.file_path`
-    * through the metadata-sized slice map); log-borne keys (earlier
-    * upserts of NEW records) decode distributed from the log bytes.
-    * This is the Spark spelling of Hudi's record index / bloom-index
-    * lookup — the thing that pins a key to its group for life. */
-  /** The key → file-group index, DELETE-AWARE (r15): per key the
-    * LATEST record across bases and logs decides — a key whose winner
-    * is a delete block is ABSENT from the index (its re-insert is a
-    * new record that may land anywhere, including another partition;
-    * same-partition re-inserts hash-route like any new key and the MoR
-    * merge still resolves correctly because the tombstone ranks below
-    * the new record). Base rows rank at (baseInstant, -1), log rows at
-    * their block's (instant, seq) — the same order [[mergeSlices]]
-    * uses. Output: one row per LIVE key with its owning `__fid`. */
+  /** The key → file-group index of the `groups` file groups,
+    * DELETE-AWARE (r15): DataFrame(keyCols..., __fid), one row per LIVE
+    * key with its owning `__fid` — the Spark spelling of Hudi's record
+    * index / bloom-index lookup, the thing that pins a key to its group
+    * for life. Base keys come from one distributed key-column parquet
+    * scan (fileId resolved from `_metadata.file_path` through the
+    * metadata-sized slice map); log-borne keys (earlier upserts of NEW
+    * records, delete tombstones) decode distributed from the groups'
+    * logs ([[logRecords]]). Per key the LATEST record across bases and
+    * logs decides — a key whose winner is a delete block is ABSENT from
+    * the index (its re-insert is a new record that may land anywhere,
+    * including another partition; same-partition re-inserts hash-route
+    * like any new key and the MoR merge still resolves correctly
+    * because the tombstone ranks below the new record). Base rows rank
+    * at (baseInstant, -1), log rows at their block's (instant, seq) —
+    * the same order [[mergeSlices]] uses. */
   private def keyIndex(spark: SparkSession, keyCols: Seq[String],
                        slices: Seq[(String, String, String, String, Seq[String])],
-                       baseFids: Set[String],
+                       groups: Set[String],
                        keySchema: org.apache.spark.sql.types.StructType,
                        onlyKeys: Option[DataFrame] = None)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
+    // bloom-pruned: only the candidate groups' base files and logs are
+    // opened — a group whose sidecars all miss holds no record of any
+    // incoming key
+    val cands = slices.filter(s => groups.contains(s._3))
     // base files key as `_metadata.file_path` spells them, log files
-    // by the raw absolute path their bytes are decoded under
-    val fidByPath: Map[String, String] =
-      (slices.map(s => LakeFiles.key(s._1) -> s._3) ++
-        slices.flatMap(s => s._5.map(lp =>
-          new java.io.File(lp).getAbsolutePath -> s._3))).toMap
-    val instantByPath: Map[String, String] =
-      slices.map(s => LakeFiles.key(s._1) -> s._4).toMap
+    // by the absolute path [[logRecords]] decodes them under
+    val fidByBase = cands.map(s => LakeFiles.key(s._1) -> s._3).toMap
+    val instantByBase = cands.map(s => LakeFiles.key(s._1) -> s._4).toMap
+    val fidByLog = cands.flatMap(s => s._5.map(lp =>
+      new java.io.File(lp).getAbsolutePath -> s._3)).toMap
     val fidSchema = StructType(keySchema.fields ++ Array(
       StructField("__fid", StringType, nullable = false),
       StructField("__inst", StringType, nullable = false),
       StructField("__seq", LongType, nullable = false),
       StructField("__del", BooleanType, nullable = false)))
-    // bloom-pruned: only candidate base files are opened; LOG files
-    // always scan (they are batch-sized deltas until compaction folds
-    // them into bloom-carrying bases)
-    val basePaths = slices.filter(s => baseFids.contains(s._3)).map(_._1)
     val baseKeys =
-      if (basePaths.isEmpty)
+      if (cands.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[Row](), fidSchema)
-      else LakeFiles.scan(spark, basePaths)
+      else LakeFiles.scan(spark, cands.map(_._1))
         .select(keyCols.map(col) ++ Seq(
-          element_at(typedLit(fidByPath), LakeFiles.pathCol).as("__fid"),
-          element_at(typedLit(instantByPath), LakeFiles.pathCol).as("__inst"),
+          element_at(typedLit(fidByBase), LakeFiles.pathCol).as("__fid"),
+          element_at(typedLit(instantByBase), LakeFiles.pathCol).as("__inst"),
           lit(-1L).as("__seq"), lit(false).as("__del")): _*)
-    val logPaths = slices.flatMap(_._5)
     val all =
-      if (logPaths.isEmpty) baseKeys
+      if (fidByLog.isEmpty) baseKeys
       else {
-        val logRows = spark.sparkContext
-          .binaryFiles(logPaths.map(new java.io.File(_).getAbsolutePath).mkString(","))
-          .flatMap { case (p, pds) =>
-            // binaryFiles names the file unescaped: parse it as a Path
-            val fid = fidByPath(new java.io.File(
-              new org.apache.hadoop.fs.Path(p).toUri.getPath).getAbsolutePath)
-            parseLogBytes(pds.toArray()).flatMap { case (bt, inst, seq, recs) =>
-              recs.map { rec =>
-                val vals = keyCols.map { n =>
-                  rec.get(n) match {
-                    case u: org.apache.avro.util.Utf8 => u.toString
-                    case x => x
-                  }
-                }
-                Row.fromSeq(vals ++ Seq(fid, inst, seq, bt == BlockDelete))
-              }
+        val logRows = logRecords(spark, fidByLog.keys.toSeq) { (p, bt, inst, seq, rec) =>
+          val vals = keyCols.map { n =>
+            rec.get(n) match {
+              case u: org.apache.avro.util.Utf8 => u.toString
+              case x => x
             }
           }
+          Row.fromSeq(vals ++ Seq(fidByLog(p), inst, seq, bt == BlockDelete))
+        }
         baseKeys.unionByName(spark.createDataFrame(logRows, fidSchema))
       }
     // batch restriction BELOW the winner window: the window partitions
@@ -1774,43 +1886,12 @@ object HudiLite {
     // one index covers BOTH row sets — delete keys carry no partition
     // column, so they test every partition's blooms (exact negatives);
     // the upsert side gets the partition-first + backstop discipline
-    val index = resolveKeyIndex(spark, df, keyCols, Some(partCol), slices,
-      keySchema, partTransform, alsoGlobal = Some(delKeys))
-    // upsert rows: existing keys keep their group, NEW keys hash-route
-    // into their partition's groups (same routing as stageAndCommitOnce)
-    val tagged = df.join(index, keyCols, "left")
-    val groupRows = slices.groupBy(_._2).toSeq.sortBy(_._1).map {
-      case (part, ss) => (part, ss.map(_._3).distinct.sorted)
-    }
-    val groupsDf = spark.createDataFrame(groupRows).toDF("__gpart", "__fids")
-    val joinedUp = tagged
-      .join(broadcast(groupsDf),
-        partExpr(df, partCol, partTransform) === col("__gpart"), "left")
-    // NOT-MATCHED inserts into a NEVER-SEEN partition lay fresh base
-    // file groups in this same instant (lazy group creation); so do
-    // NEW keys into a FULL partition (every live base over the size
-    // bound) — groups are added as a partition grows
-    val fullUp = fullPartitions(spark, slices)
-    val fullUpPred =
-      if (fullUp.isEmpty) lit(false)
-      else col("__gpart").isin(fullUp.toSeq: _*)
-    val freshRows = joinedUp
-      .filter(col("__fid").isNull && (col("__fids").isNull || fullUpPred))
-      .select(df.columns.toSeq.map(col): _*)
-    val freshBases =
-      if (freshRows.isEmpty) Nil
-      else stageFreshBases(spark, tableDir, freshRows, keyCols, partCol,
-        partTransform, instant)
-    val routedUp = joinedUp
-      .filter(col("__fid").isNotNull ||
-        (col("__fids").isNotNull && !fullUpPred))
-      .withColumn("__fid", coalesce(col("__fid"),
-        element_at(col("__fids"),
-          (pmod(hash(keyCols.map(col): _*), size(col("__fids"))) + 1)
-            .cast("int"))))
-      .withColumn("__fid", guardPartitionMove(slices, keyCols,
-        partExpr(df, partCol, partTransform)))
-      .drop("__gpart", "__fids")
+    val (index, batchParts) = resolveKeyIndex(spark, df, keyCols, Some(partCol),
+      slices, keySchema, partTransform, alsoGlobal = Some(delKeys))
+    // upsert rows route as stageAndCommitOnce's do
+    val (routedUp, freshBases) = routeUpserts(spark, tableDir,
+      df.join(index, keyCols, "left"), df, keyCols, partCol, partTransform,
+      slices, batchParts, instant)
     // delete keys MUST resolve through the index (deleting an unknown
     // key is a premise violation, not a no-op)
     val routedDel = delKeys.join(index, keyCols, "left")
@@ -1823,12 +1904,13 @@ object HudiLite {
     val schema = df.select(dataCols.map(col): _*).schema
     // one routed frame; __bt picks the block kind, delete rows null-pad
     // the non-key columns (dropped again before the delete block writes)
-    val upSel = routedUp.select(
-      col("__fid") +: lit(BlockData).as("__bt") +: dataCols.map(col): _*)
-    val delSel = routedDel.select(
-      col("__fid") +: lit(BlockDelete).as("__bt") +: dataCols.map(c =>
+    val upSel = routedUp.select(Seq(col("__fid"), lit(BlockData).as("__bt")) ++
+      dataCols.map(col) :+ bloomKeyCol(keyCols).as("__bk"): _*)
+    val delSel = routedDel.select(Seq(col("__fid"), lit(BlockDelete).as("__bt")) ++
+      dataCols.map(c =>
         if (keyCols.contains(c)) col(c)
-        else lit(null).cast(schema(c).dataType).as(c)): _*)
+        else lit(null).cast(schema(c).dataType).as(c)) :+
+      bloomKeyCol(keyCols).as("__bk"): _*)
     val combined = upSel.unionByName(delSel)
     val metaByFid: Map[String, (String, String)] =
       slices.map(s => s._3 -> (s._2, s._4)).toMap
@@ -1838,6 +1920,7 @@ object HudiLite {
       case (c, i) if keyCols.contains(c) => i
     }
     val keySchemaL = keySchema
+    val nData = dataCols.size
     val writeToken =
       s"${ProcessHandle.current().pid()}-${logTokenCounter.incrementAndGet()}"
     val stats: Seq[(String, String, String, String)] = combined
@@ -1847,10 +1930,6 @@ object HudiLite {
         byFid.iterator.map { case (fid, rows) =>
           val (part, baseInstant) = bcMeta.value(fid)
           val rel = s"${partDir(part)}/${fid}_$baseInstant.log.${instant}_$writeToken"
-          val f = new java.io.File(tdir, rel)
-          val attemptId = org.apache.spark.TaskContext.get().taskAttemptId()
-          val tmp = new java.io.File(tdir, s"$rel.a$attemptId.tmp")
-          tmp.delete() // sequential-retry leftover
           val (delRows, dataRows) = rows.partition(_.getInt(1) == BlockDelete)
           val blocks =
             (if (delRows.nonEmpty) Seq(LogBlock(BlockDelete, instant,
@@ -1858,12 +1937,10 @@ object HudiLite {
               keySchemaL))
             else Nil) ++
               (if (dataRows.nonEmpty) Seq(LogBlock(BlockData, instant,
-                dataRows.map(r => Row.fromSeq(r.toSeq.drop(2))), schema))
+                dataRows.map(r => Row.fromSeq(r.toSeq.slice(2, 2 + nData))), schema))
               else Nil)
-          writeLogFile(tmp.getAbsolutePath, blocks)
-          java.nio.file.Files.move(tmp.toPath, f.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          (part, fid, baseInstant, rel)
+          (part, fid, baseInstant, placeLog(tdir, rel, blocks,
+            rows.map(_.getString(2 + nData))))
         }
       }.collect().toSeq.sortBy(_._4)
     index.unpersist()
@@ -1886,16 +1963,7 @@ object HudiLite {
         s"""{$schemaField"commitTimeMs":${stampMs(instant)},""" +
           s""""partitionToWriteStats":{$statsJson}}""")) true
     else {
-      stats.foreach { case (_, _, _, rel) =>
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(tableDir, rel)): Unit
-      }
-      freshBases.foreach { case (_, _, rel) =>
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(tableDir, rel)): Unit
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(tableDir, rel + ".bloom")): Unit
-      }
+      (stats.map(_._4) ++ freshBases.map(_._3)).foreach(deleteStaged(tableDir, _))
       false
     }
   }
@@ -1972,51 +2040,14 @@ object HudiLite {
     // GLOBAL index: partition-first blooms + exactness backstop (see
     // resolveKeyIndex) — the partition-move guard sees moved keys even
     // through an own-partition bloom false positive
-    val index = resolveKeyIndex(spark, df, keyCols, partCol, slices,
-      keySchema, partTransform)
+    val (index, batchParts) = resolveKeyIndex(spark, df, keyCols, partCol,
+      slices, keySchema, partTransform)
     val tagged = df.join(index, keyCols, "left")
-    // NEW keys (upserts only): route by key hash into the partition's
-    // existing groups — codegen element_at over a broadcast-small
-    // (partition → group list) frame, no UDF
     val dataCols = df.columns.toSeq
     val schema = df.select(dataCols.map(col): _*).schema
     val (routed, freshBases) = partCol match {
-      case Some(p) =>
-        val groupRows = slices.groupBy(_._2).toSeq.sortBy(_._1).map {
-          case (part, ss) => (part, ss.map(_._3).distinct.sorted)
-        }
-        val groupsDf = spark.createDataFrame(groupRows)
-          .toDF("__gpart", "__fids")
-        val joined = tagged
-          .join(broadcast(groupsDf),
-            partExpr(df, p, partTransform) === col("__gpart"), "left")
-        // rows of a NEVER-SEEN partition lay fresh base file groups in
-        // this same instant (lazy group creation, real Hudi's way) —
-        // they have no index hit and no group list to route into. NEW
-        // keys into a FULL partition (every live base over the size
-        // bound) ALSO lay fresh groups instead of logging against
-        // oversized bases — file groups are added as a partition grows.
-        val full = fullPartitions(spark, slices)
-        val fullPred =
-          if (full.isEmpty) lit(false)
-          else col("__gpart").isin(full.toSeq: _*)
-        val freshRows = joined
-          .filter(col("__fid").isNull && (col("__fids").isNull || fullPred))
-          .select(dataCols.map(col): _*)
-        val fresh =
-          if (blockType != BlockData || freshRows.isEmpty) Nil
-          else stageFreshBases(spark, tableDir, freshRows, keyCols, p,
-            partTransform, instant)
-        (joined
-          .filter(col("__fid").isNotNull ||
-            (col("__fids").isNotNull && !fullPred))
-          .withColumn("__fid", coalesce(col("__fid"),
-            element_at(col("__fids"),
-              (pmod(hash(keyCols.map(col): _*), size(col("__fids"))) + 1)
-                .cast("int"))))
-          .withColumn("__fid", guardPartitionMove(slices, keyCols,
-            partExpr(df, p, partTransform)))
-          .drop("__gpart", "__fids"), fresh)
+      case Some(p) => routeUpserts(spark, tableDir, tagged, df, keyCols, p,
+        partTransform, slices, batchParts, instant)
       case None =>
         (tagged.withColumn("__fid",
           when(col("__fid").isNull, raise_error(concat(
@@ -2035,30 +2066,19 @@ object HudiLite {
     // timeline JSON, never from name parsing.
     val writeToken =
       s"${ProcessHandle.current().pid()}-${logTokenCounter.incrementAndGet()}"
+    val nData = dataCols.size
     val stats: Seq[(String, String, String, String)] = routed
-      .select(col("__fid") +: dataCols.map(col): _*)
+      .select(col("__fid") +: dataCols.map(col) :+ bloomKeyCol(keyCols).as("__bk"): _*)
       .repartition(col("__fid"))
       .rdd.mapPartitions { it =>
         val byFid = it.toVector.groupBy(_.getString(0))
         byFid.iterator.map { case (fid, rows) =>
           val (part, baseInstant) = bcMeta.value(fid)
           val rel = s"${partDir(part)}/${fid}_$baseInstant.log.${instant}_$writeToken"
-          val f = new java.io.File(tdir, rel)
-          // stage under an attempt-unique name, then rename into place:
-          // under speculative execution two attempts of this partition
-          // run concurrently, and appending to a shared path would
-          // interleave their bytes into one corrupt log. Both attempts
-          // produce identical content, so the atomic REPLACE rename is
-          // race-free whichever lands last.
-          val attemptId = org.apache.spark.TaskContext.get().taskAttemptId()
-          val tmp = new java.io.File(tdir, s"$rel.a$attemptId.tmp")
-          tmp.delete() // sequential-retry leftover
-          writeLogFile(tmp.getAbsolutePath, Seq(LogBlock(blockType, instant,
-            rows.map(r => Row.fromSeq(r.toSeq.drop(1))), schema)))
-          // POSIX rename(2): atomic, replaces an existing target
-          java.nio.file.Files.move(tmp.toPath, f.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          (part, fid, baseInstant, rel)
+          (part, fid, baseInstant, placeLog(tdir, rel,
+            Seq(LogBlock(blockType, instant,
+              rows.map(r => Row.fromSeq(r.toSeq.slice(1, 1 + nData))), schema)),
+            rows.map(_.getString(1 + nData))))
         }
       }.collect().toSeq.sortBy(_._4)
     index.unpersist()
@@ -2090,18 +2110,8 @@ object HudiLite {
     // the batch twice. A commit landing between THIS check and the
     // casCreate necessarily owns our instant name, so the CAS fails
     // loudly — no silent window remains.
-    def cleanupStaged(): Unit = {
-      stats.foreach { case (_, _, _, rel) =>
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(tableDir, rel)): Unit
-      }
-      freshBases.foreach { case (_, _, rel) =>
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(tableDir, rel)): Unit
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(tableDir, rel + ".bloom")): Unit
-      }
-    }
+    def cleanupStaged(): Unit =
+      (stats.map(_._4) ++ freshBases.map(_._3)).foreach(deleteStaged(tableDir, _))
     if (batchId.exists(committedBatchIds(tableDir).contains)) {
       cleanupStaged()
       Some(false)
@@ -2140,10 +2150,11 @@ object HudiLite {
     def walk(d: java.io.File): Unit =
       Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
         if (f.isDirectory) { if (f.getName != ".hoodie") walk(f) }
-        else if ((f.getName.endsWith(".parquet") || f.getName.contains(".log.")) &&
+        else if ((f.getName.endsWith(".parquet") ||
+            (f.getName.contains(".log.") && !f.getName.endsWith(".bloom"))) &&
             !live.contains(f.getAbsolutePath) && f.delete()) {
           deleted += f.getAbsolutePath
-          // the base's bloom sidecar dies with it
+          // the file's bloom sidecar dies with it
           java.nio.file.Files.deleteIfExists(
             java.nio.file.Paths.get(f.getAbsolutePath + ".bloom")): Unit
         }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -447,6 +449,13 @@ class HudiMorSpec extends AnyFunSuite {
       HudiLite.readSnapshotMor(spark, dir, Seq("k"),
         instant = Some("002")).collect()
     }
+    // a live log's sidecar survives cleaning (its name holds ".log.")
+    HudiLite.upsert(spark, dir, Seq((3L, "A", 300)).toDF("k", "p", "v"),
+      keyCols = Seq("k"), partCol = "p", instant = "004")
+    HudiLite.clean(dir)
+    val logs = HudiLite.planFilesMor(dir).flatMap(_._5)
+    assert(logs.nonEmpty && logs.forall(l => new java.io.File(l + ".bloom").exists()),
+      s"live logs lost their sidecars: $logs")
   }
 
   test("exactly-once batch sink: create-then-upsert, redelivery skipped") {
@@ -510,6 +519,16 @@ class HudiMorSpec extends AnyFunSuite {
       .select("k", "v").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got == Set((1L, 1), (2L, 200), (3L, 300), (10L, 10), (11L, 11)),
       s"no lost update across the interleave: $got")
+    // the loser's first staging (logs and their sidecars) is gone: every
+    // sidecar belongs to a live file, and every live log has one
+    val files = org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir),
+      null, true).asScala.map(_.getAbsolutePath).toSet
+    val orphans = files.filter(f => f.endsWith(".bloom") &&
+      !files.contains(f.stripSuffix(".bloom")))
+    assert(orphans.isEmpty, s"orphan sidecars after the lost CAS: $orphans")
+    val liveLogs = HudiLite.planFilesMor(dir).flatMap(_._5)
+    assert(liveLogs.size == 2 && liveLogs.forall(l => files.contains(l + ".bloom")),
+      s"live logs without a sidecar: $liveLogs")
   }
 
   test("bloom index prunes the upsert's base scan to candidate files") {
@@ -527,12 +546,12 @@ class HudiMorSpec extends AnyFunSuite {
     // one existing key: candidates ⊊ all groups (bloom negatives are
     // exact; 8 KiB blooms over ≤100 keys ≈ zero false positives)
     val one = Seq((2L, "A", 999)).toDF("k", "p", "v")
-    val cand = HudiLite.candidateBaseFids(spark, one, Seq("k"), Some("p"), slices)
+    val cand = HudiLite.candidateBaseFids(spark, one, Seq("k"), Some("p"), slices).fids
     assert(cand.nonEmpty && cand.size < slices.size,
       s"one key must not candidate every group: ${cand.size}/${slices.size}")
     // an all-new batch: zero candidates, upsert still routes + lands
     val fresh = Seq((900L, "A", 1), (901L, "B", 2)).toDF("k", "p", "v")
-    assert(HudiLite.candidateBaseFids(spark, fresh, Seq("k"), Some("p"), slices).isEmpty,
+    assert(HudiLite.candidateBaseFids(spark, fresh, Seq("k"), Some("p"), slices).fids.isEmpty,
       "bloom-negative keys are genuinely new — no base file opens")
     HudiLite.upsert(spark, dir, fresh, Seq("k"), "p", "002")
     HudiLite.upsert(spark, dir, one, Seq("k"), "p", "003")
@@ -547,8 +566,90 @@ class HudiMorSpec extends AnyFunSuite {
       "compacted bases re-carry blooms (folded log keys bloom-visible)")
     // the log-born key now candidates through the NEW base's bloom
     val cand2 = HudiLite.candidateBaseFids(spark,
-      Seq((900L, "A", 0)).toDF("k", "p", "v"), Seq("k"), Some("p"), after)
+      Seq((900L, "A", 0)).toDF("k", "p", "v"), Seq("k"), Some("p"), after).fids
     assert(cand2.nonEmpty, "post-compaction blooms must cover folded keys")
+  }
+
+  test("log sidecars: log-only keys update in place; tables without " +
+    "sidecars route the same; a re-inserted key still trips the move guard") {
+    val s2 = spark
+    import s2.implicits._
+    def state(dir: String): Seq[(Long, String, Int)] =
+      HudiLite.readSnapshotMor(spark, dir, Seq("k")).select("k", "p", "v")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+        .sortBy(_._1).toSeq
+    def dropLogSidecars(dir: String): Unit =
+      org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir), null, true)
+        .asScala.filter(f => f.getName.contains(".log.") && f.getName.endsWith(".bloom"))
+        .foreach(_.delete())
+    // the owning group of each key's records, from the live logs
+    def logGroups(dir: String): Map[Long, Set[String]] =
+      HudiLite.planFilesMor(dir).flatMap(s => s._5.flatMap { l =>
+        HudiLite.parseLogBytes(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(l))).flatMap(_._4)
+          .map(r => r.get("k").asInstanceOf[Long] -> s._3)
+      }).groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).toSet }
+    val base = (1L to 20L).map(k => (k, if (k % 2 == 0) "A" else "B", k.toInt))
+    def run(dir: String, stripSidecars: Boolean): Unit = {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      HudiLite.createTable(spark, dir, base.toDF("k", "p", "v"), Seq("k"), "p", "001")
+      def step(): Unit = if (stripSidecars) dropLogSidecars(dir)
+      HudiLite.upsert(spark, dir, Seq((21L, "A", 21), (22L, "B", 22), (2L, "A", 200))
+        .toDF("k", "p", "v"), Seq("k"), "p", "002"); step()
+      HudiLite.upsert(spark, dir, Seq((21L, "A", 210), (22L, "B", 220), (23L, "A", 23))
+        .toDF("k", "p", "v"), Seq("k"), "p", "003"); step()
+      HudiLite.mergeCommit(spark, dir, Seq((23L, "A", 230)).toDF("k", "p", "v"),
+        Seq(22L).toDF("k"), Seq("k"), "p", "004"): Unit; step()
+      HudiLite.upsert(spark, dir, Seq((22L, "A", 2200), (21L, "A", 2100))
+        .toDF("k", "p", "v"), Seq("k"), "p", "005"); step()
+    }
+    val model = (base ++ Seq((2L, "A", 200), (21L, "A", 2100), (22L, "A", 2200),
+      (23L, "A", 230))).map(t => t._1 -> t).toMap.values.toSeq.sortBy(_._1)
+    val withSidecars = new java.io.File("target/hudi/mor_logbloom").getAbsolutePath
+    val stripped = new java.io.File("target/hudi/mor_logbloom_none").getAbsolutePath
+    run(withSidecars, stripSidecars = false)
+    run(stripped, stripSidecars = true)
+    assert(state(withSidecars) == model, "one row per key, latest value wins")
+    assert(state(stripped) == model, "no log sidecars: the same table")
+    // the log-only keys 21 and 23 stayed in their first group; 22 was
+    // deleted and re-inserted into partition A, a group of its own
+    val groups = logGroups(withSidecars)
+    assert(groups(21L).size == 1 && groups(23L).size == 1, s"$groups")
+    assert(groups == logGroups(stripped), "the same routing without sidecars")
+    // every writer's log carries a sidecar holding every key it logs
+    val logs = HudiLite.planFilesMor(withSidecars).flatMap(_._5)
+    logs.foreach { l =>
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(l + ".bloom"))
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      val bits = Array.fill(bytes.length / 8)(bb.getLong)
+      val keys = HudiLite.parseLogBytes(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(l))).flatMap(_._4).map(_.get("k").toString)
+      assert(bytes.length < 1024 && keys.forall(HudiLite.bloomContains(bits, _, HudiLite.LogBloomHashes)),
+        s"$l: ${bytes.length}-byte sidecar")
+    }
+    // the re-inserted key lives in A now: an upsert moving it back to
+    // B is refused, with and without log sidecars
+    for (dir <- Seq(withSidecars, stripped)) {
+      val e = intercept[Exception] {
+        HudiLite.upsert(spark, dir, Seq((22L, "B", 1)).toDF("k", "p", "v"),
+          Seq("k"), "p", "006")
+      }
+      assert(e.getMessage.contains("across partitions"), e.getMessage)
+    }
+    // logs written by writeDeltaCommits carry no sidecar: their groups
+    // stay candidates, so a key that lives only in such a log updates
+    // in place
+    val fixture = new java.io.File("target/hudi/mor_logbloom_fixture").getAbsolutePath
+    HudiLite.writeFixtureTable(spark, fixture, Seq((1L, "A", 1)).toDF("k", "p", "v"),
+      Seq(HudiLite.Commit("001", Seq(("A", "f1", Seq(Row(1L, "A", 10))),
+        ("A", "f2", Seq(Row(2L, "A", 20)))))))
+    HudiLite.writeDeltaCommits(fixture, Seq(HudiLite.DeltaCommit("002", Seq(
+      ("A", "f1", "001", Seq(HudiLite.LogBlock(HudiLite.BlockData, "002",
+        Seq(Row(9L, "A", 90)), schema)))))))
+    HudiLite.upsert(spark, fixture, Seq((9L, "A", 99), (1L, "A", 11))
+      .toDF("k", "p", "v"), Seq("k"), "p", "003")
+    assert(state(fixture) == Seq((1L, "A", 11), (2L, "A", 20), (9L, "A", 99)))
+    assert(logGroups(fixture)(9L) == Set("f1"), "the log-only key stays in f1")
   }
 
   test("log block framing round-trips multi-block files byte-exactly") {

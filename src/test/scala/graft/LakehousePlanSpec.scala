@@ -85,6 +85,32 @@ class LakehousePlanSpec extends AnyFunSuite {
     }
   }
 
+  test("hudi INSERT of new keys runs at most 5 jobs, and neither the " +
+    "INSERT's nor the read's job count grows with the log count") {
+    val parts = Seq("p0", "p1", "p2")
+    def rows(keys: Range, v: Int) = keys.map(k =>
+      s"($k, '${parts(k % parts.size)}', $v)").mkString(", ")
+    spark.sql(s"SELECT * FROM VALUES ${rows(0 until 24, 0)} AS t(k, p, v)")
+      .createOrReplaceTempView("lkplan_hbase")
+    spark.sql("CREATE OR REPLACE TABLE graft_hudi.lkplan_hj PRIMARY KEY (k) " +
+      "PARTITIONED BY (p) AS SELECT * FROM lkplan_hbase").collect()
+    val counts = (1 to 6).map { cycle =>
+      // every key new, every partition and file group gets a log
+      spark.sql(s"SELECT * FROM VALUES ${rows(cycle * 24 until cycle * 24 + 24, cycle)} " +
+        "AS t(k, p, v)").createOrReplaceTempView("lkplan_hins")
+      val insert = jobsOf(spark.sql(
+        "INSERT INTO graft_hudi.lkplan_hj SELECT * FROM lkplan_hins").collect())
+      val read = jobsOf(spark.sql("SELECT p, count(*) AS n, sum(v) AS s " +
+        "FROM graft_hudi.lkplan_hj GROUP BY p").collect())
+      (insert.size, read.size)
+    }
+    assert(counts.forall(_._1 <= 5) && counts(5) == counts(1),
+      s"(insert, read) jobs per cycle: ${counts.mkString(", ")}")
+    val got = spark.sql("SELECT count(*), count(DISTINCT k) " +
+      "FROM graft_hudi.lkplan_hj").head()
+    assert(got.getLong(0) == 168L && got.getLong(1) == 168L, s"$got")
+  }
+
   // a space, `%`, `=` and non-ASCII text: each is spelled differently
   // in `_metadata.file_path` than in the table's own file list
   private val awkward = Seq("4-NOT SPECIFIED", "50%off", "a=b", "ünï cødé", "plain")
