@@ -6,8 +6,9 @@ import graft.plans.MaterializedViews
 
 /** Public facade — the surface a reference (Doris) user programs
   * against after switching to this library. One import gives:
-  * a configured session, the SQL function surface (via
-  * `Graft.session()` / `install`), table-model views, MVs with
+  * a configured session with the SQL function surface
+  * (`Graft.session()`; `install` adds the surface to a session built
+  * without `GraftExtensions`), table-model views, MVs with
   * transparent rewrite, as-of joins, recursive CTEs, and the
   * training-pipeline operator set.
   *
@@ -25,7 +26,8 @@ object Graft {
   def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     GraftSession.local(cores)
 
-  /** Register the full custom function surface on an existing session. */
+  /** Register the full custom function surface on a session built
+    * without `GraftExtensions`. */
   def install(spark: SparkSession): SparkSession = GraftSession.install(spark)
 
   def registerTables(spark: SparkSession, dir: String): Unit =

@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Session factory: one place that wires the graft engine into Spark —
-  * custom function registry + optimizer rules via SparkSessionExtensions,
+  * the whole function surface + optimizer rules via SparkSessionExtensions,
   * and scale-appropriate defaults (AQE on, shuffle partitions sized for
   * the local core count rather than the 200 default).
   *
   * On a real cluster the same extensions class is passed via
-  * `spark.sql.extensions=graft.GraftExtensions`; nothing here is
-  * local-mode-specific except the master URL.
+  * `spark.sql.extensions=graft.GraftExtensions`, which carries the same
+  * function surface; nothing here is local-mode-specific except the
+  * master URL.
   */
 object GraftSession {
 
@@ -89,8 +90,8 @@ object GraftSession {
   /** The one session factory: `local[cores]` with shuffle partitions
     * sized to the core count, the engine config, then `conf` (a caller's
     * own settings, e.g. SpillProbe's constrained memory budget), then
-    * SPARK_GRAFT_CONF, each overriding the one before. The session comes
-    * back with the function surface installed. */
+    * SPARK_GRAFT_CONF, each overriding the one before. [[GraftExtensions]]
+    * gives the session the whole function surface. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             conf: Map[String, String] = Map.empty): SparkSession = {
     val b = configure(SparkSession.builder()
@@ -101,17 +102,15 @@ object GraftSession {
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    install(s)
+    s
   }
 
-  /** Idempotent per-session function registration. [[local]] already
-    * runs it; a session built elsewhere (a host application's, or one
-    * configured with `spark.sql.extensions=graft.GraftExtensions`) needs
-    * it too, because the extensions inject only the builder-registered
-    * functions and the UDF/UDAF modules (window_funnel_3d, the bitmap
-    * and behavior aggregates, ...) register per session. */
+  /** Gives a session built without [[GraftExtensions]] (a host
+    * application's plain session) the function surface the extensions
+    * inject: registers each graft function its registry lacks. A no-op
+    * on a session built with the extensions. */
   def install(spark: SparkSession): SparkSession = {
-    graft.functions.FunctionRegistry.registerAll(spark)
+    graft.functions.FunctionRegistry.install(spark)
     spark
   }
 }

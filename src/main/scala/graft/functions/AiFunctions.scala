@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-
 /** ai_* scalar family (reference: be/src/exec/expr/../function/ai/ —
   * ai_sentiment, ai_classify, ai_summarize, ai_translate, ai_extract,
   * ai_mask, ai_similarity, embed; FE regs
@@ -18,58 +16,43 @@ import org.apache.spark.sql.SparkSession
   */
 object AiFunctions {
 
-  private def sqlUdfs: Seq[String] = Seq(
+  def sqlDefs: Seq[String] = Seq(
     // hash-routed 3-class sentiment
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_sentiment(s STRING)
-       RETURNS STRING RETURN
+    """ai_sentiment(s STRING) RETURNS STRING RETURN
        element_at(array('positive', 'negative', 'neutral'),
          CAST(conv(substring(md5(s), 1, 4), 16, 10) AS INT) % 3 + 1)""",
     // first-k-words extractive "summary"
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_summarize(s STRING, k INT)
-       RETURNS STRING RETURN
+    """ai_summarize(s STRING, k INT) RETURNS STRING RETURN
        array_join(slice(split(s, ' '), 1, k), ' ')""",
     // hash-routed classifier over caller-provided labels
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_classify(s STRING, labels ARRAY<STRING>)
-       RETURNS STRING RETURN
+    """ai_classify(s STRING, labels ARRAY<STRING>) RETURNS STRING RETURN
        element_at(labels,
          CAST(CAST(conv(substring(md5(s), 1, 4), 16, 10) AS INT) % size(labels) + 1 AS INT))""",
     // identity "translation" tagged with the target language
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_translate(s STRING, lang STRING)
-       RETURNS STRING RETURN concat('[', lang, '] ', s)""",
+    """ai_translate(s STRING, lang STRING) RETURNS STRING RETURN concat('[', lang, '] ', s)""",
     // digit/email masking (the reference's ai_mask redacts PII spans)
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_mask(s STRING)
-       RETURNS STRING RETURN
+    """ai_mask(s STRING) RETURNS STRING RETURN
        regexp_replace(regexp_replace(s, '[0-9]', '#'),
                       '[a-zA-Z0-9.#_%+-]+@[a-zA-Z0-9.#-]+', '<email>')""",
     // token-jaccard "semantic" similarity
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_similarity(a STRING, b STRING)
-       RETURNS DOUBLE RETURN
+    """ai_similarity(a STRING, b STRING) RETURNS DOUBLE RETURN
        CAST(size(array_intersect(array_distinct(split(lower(a), ' ')),
                                  array_distinct(split(lower(b), ' ')))) AS DOUBLE)
        / size(array_union(array_distinct(split(lower(a), ' ')),
                           array_distinct(split(lower(b), ' '))))""",
     // 8-dim deterministic embedding from md5 bytes, L2-normalized
-    """CREATE OR REPLACE TEMPORARY FUNCTION embed(s STRING)
-       RETURNS ARRAY<DOUBLE> RETURN
+    """embed(s STRING) RETURNS ARRAY<DOUBLE> RETURN
        transform(sequence(0, 7), i ->
          (CAST(conv(substring(md5(s), i * 4 + 1, 4), 16, 10) AS DOUBLE) - 32767.5) / 32767.5)""",
     // pattern-guided extraction: words containing the target substring
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_extract(s STRING, what STRING)
-       RETURNS STRING RETURN
+    """ai_extract(s STRING, what STRING) RETURNS STRING RETURN
        array_join(filter(split(s, ' '), w -> contains(lower(w), lower(what))), ' ')""",
     // hash-routed boolean quality filter
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_filter(s STRING)
-       RETURNS BOOLEAN RETURN
+    """ai_filter(s STRING) RETURNS BOOLEAN RETURN
        CAST(conv(substring(md5(s), 1, 4), 16, 10) AS INT) % 2 = 0""",
     // whitespace-normalizing "grammar fix" (idempotent, deterministic)
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_fixgrammar(s STRING)
-       RETURNS STRING RETURN regexp_replace(trim(s), ' +', ' ')""",
+    """ai_fixgrammar(s STRING) RETURNS STRING RETURN regexp_replace(trim(s), ' +', ' ')""",
     // prompt-echo generation stub
-    """CREATE OR REPLACE TEMPORARY FUNCTION ai_generate(s STRING)
-       RETURNS STRING RETURN concat(s, ' [generated]')"""
+    """ai_generate(s STRING) RETURNS STRING RETURN concat(s, ' [generated]')"""
   )
-
-  def register(spark: SparkSession): Unit =
-    try sqlUdfs.foreach(spark.sql(_))
-    catch { case _: org.apache.spark.sql.catalyst.parser.ParseException => () }
 }

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 /** Doris-named aliases for capabilities Spark spells differently —
   * the "switch without rewriting queries" layer (reference name list:
   * fe/fe-core/.../catalog/BuiltinScalarFunctions.java). Every body is
-  * a native expression tree (SQL UDFs inline into codegen).
+  * a native expression tree (SQL-bodied definitions inline into codegen).
   *
   * Arity notes: SQL UDFs cannot overload, so multi-arity reference
   * functions get their canonical form (array_range start,end;
@@ -16,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   */
 object AliasFunctions {
 
-  private def defs: Seq[String] = Seq(
+  def sqlDefs: Seq[String] = Seq(
     // ---- date/time arithmetic (date_time_transforms.h *_add/_sub/_diff)
     "days_add(t TIMESTAMP, n INT) RETURNS TIMESTAMP RETURN timestampadd(DAY, n, t)",
     "days_sub(t TIMESTAMP, n INT) RETURNS TIMESTAMP RETURN timestampadd(DAY, -n, t)",
@@ -151,21 +152,18 @@ object AliasFunctions {
     "hll_from_base64(s STRING) RETURNS BINARY RETURN unbase64(s)"
   )
 
-  def register(spark: SparkSession): Unit = {
-    FunctionRegistry.registerSql(spark, "alias",
-      defs.map(d => s"CREATE OR REPLACE TEMPORARY FUNCTION $d"))
+  def udfs: Seq[(String, UserDefinedFunction)] = Seq(
     // bround demands a foldable scale, so the variable-scale banker's
     // round rides a JVM UDF instead of a SQL body
-    spark.udf.register("round_bankers", (x: Double, d: Int) =>
-      BigDecimal(x).setScale(d, scala.math.BigDecimal.RoundingMode.HALF_EVEN).toDouble)
+    "round_bankers" -> udf((x: Double, d: Int) =>
+      BigDecimal(x).setScale(d, scala.math.BigDecimal.RoundingMode.HALF_EVEN).toDouble),
     // first-occurrence-only regexp replace (regexp_replace_one)
-    spark.udf.register("regexp_replace_one", (s: String, r: String, repl: String) =>
-      if (s == null || r == null || repl == null) null else s.replaceFirst(r, repl))
+    "regexp_replace_one" -> udf((s: String, r: String, repl: String) =>
+      if (s == null || r == null || repl == null) null else s.replaceFirst(r, repl)),
     // gcd/lcm need iteration — JVM UDFs over BigInt
-    spark.udf.register("gcd", (a: Long, b: Long) =>
-      BigInt(a).gcd(BigInt(b)).toLong)
-    spark.udf.register("lcm", (a: Long, b: Long) =>
+    "gcd" -> udf((a: Long, b: Long) =>
+      BigInt(a).gcd(BigInt(b)).toLong),
+    "lcm" -> udf((a: Long, b: Long) =>
       if (a == 0L || b == 0L) 0L
-      else (BigInt(a) / BigInt(a).gcd(BigInt(b)) * BigInt(b)).abs.toLong)
-  }
+      else (BigInt(a) / BigInt(a).gcd(BigInt(b)) * BigInt(b)).abs.toLong))
 }

@@ -1,15 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-4 alias pack: the URL family (be/src/exprs/function/url/,
   * ClickHouse-derived domain heuristics), the remaining MySQL string
   * conveniences, and date/time tail names. Every body is a native
-  * expression tree (SQL UDFs inline into codegen).
+  * expression tree (SQL-bodied definitions inline into codegen).
   */
 object AliasFunctions2 {
 
-  private def defs: Seq[String] = Seq(
+  def sqlDefs: Seq[String] = Seq(
     // ---- URL family. domain() accepts bare hosts too (the reference
     // falls back to treating schemeless input as host[:port]/path).
     "protocol(u STRING) RETURNS STRING RETURN parse_url(u, 'PROTOCOL')",
@@ -148,11 +146,5 @@ object AliasFunctions2 {
     // (function_string_misc.cpp:253-300; list form via the JVM UDF)
     "auto_partition_name_range(unit STRING, t TIMESTAMP) RETURNS STRING RETURN concat('p', date_format(date_trunc(upper(unit), t), 'yyyyMMddHHmmss'))"
   )
-
-  // fail-fast: a broken definition must not silently shrink the
-  // declared-capability surface; collect every failure so one bad body
-  // never aborts the registrations after it, then throw with the names
-  def register(spark: SparkSession): Unit =
-    FunctionRegistry.registerSql(spark, "alias2",
-      defs.map(d => s"CREATE OR REPLACE TEMPORARY FUNCTION $d"))
 }
+

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.udaf
 
 /** Behavior-analytics aggregate family (SURVEY.md §2.5 "key
@@ -245,31 +245,27 @@ object BehaviorAggs {
     def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  def register(spark: SparkSession): Unit = {
+  def udfs: Seq[(String, UserDefinedFunction)] = {
     val evEnc: Encoder[Ev] = ExpressionEncoder()
-    // 3-cond variants bound to the common funnel shapes; windows in micros.
-    spark.udf.register("window_funnel_3d",
-      udaf(new WindowFunnelAgg(3L * 24 * 3600 * 1000000, 3), evEnc))
-    spark.udf.register("window_funnel_1h",
-      udaf(new WindowFunnelAgg(3600L * 1000000, 3), evEnc))
-    spark.udf.register("window_funnel_3d_dedup",
-      udaf(new WindowFunnelAgg(3L * 24 * 3600 * 1000000, 3, FunnelMode.Dedup), evEnc))
-    spark.udf.register("window_funnel_3d_fixed",
-      udaf(new WindowFunnelAgg(3L * 24 * 3600 * 1000000, 3, FunnelMode.Fixed), evEnc))
-    spark.udf.register("window_funnel_3d_increase",
-      udaf(new WindowFunnelAgg(3L * 24 * 3600 * 1000000, 3, FunnelMode.Increase), evEnc))
-    spark.udf.register("retention3", udaf(new RetentionAgg(3), Encoders.scalaInt))
-    spark.udf.register("sequence_match2", udaf(new SequenceAgg(2, false), evEnc))
-    spark.udf.register("sequence_count2", udaf(new SequenceAgg(2, true), evEnc))
-    spark.udf.register("sequence_match3", udaf(new SequenceAgg(3, false), evEnc))
-    spark.udf.register("sequence_count3", udaf(new SequenceAgg(3, true), evEnc))
-    spark.udf.register("sequence_match2_1h",
-      udaf(new SequenceAgg(2, false, 3600L * 1000000), evEnc))
-    spark.udf.register("sequence_match3_1h",
-      udaf(new SequenceAgg(3, false, 3600L * 1000000), evEnc))
-    spark.udf.register("topn5", udaf(new TopNAgg(5, 4096), Encoders.STRING))
-    spark.udf.register("topn_weighted5",
-      udaf(new TopNWeightedAgg(5, 4096), ExpressionEncoder[ItemCnt]()))
-    spark.udf.register("product_agg", udaf(new ProductAgg, Encoders.scalaDouble))
+    Seq(
+      // 3-cond variants bound to the common funnel shapes; windows in micros.
+      "window_funnel_3d" -> udaf(new WindowFunnelAgg(3L * 24 * 3600 * 1000000, 3), evEnc),
+      "window_funnel_1h" -> udaf(new WindowFunnelAgg(3600L * 1000000, 3), evEnc),
+      "window_funnel_3d_dedup" ->
+        udaf(new WindowFunnelAgg(3L * 24 * 3600 * 1000000, 3, FunnelMode.Dedup), evEnc),
+      "window_funnel_3d_fixed" ->
+        udaf(new WindowFunnelAgg(3L * 24 * 3600 * 1000000, 3, FunnelMode.Fixed), evEnc),
+      "window_funnel_3d_increase" ->
+        udaf(new WindowFunnelAgg(3L * 24 * 3600 * 1000000, 3, FunnelMode.Increase), evEnc),
+      "retention3" -> udaf(new RetentionAgg(3), Encoders.scalaInt),
+      "sequence_match2" -> udaf(new SequenceAgg(2, false), evEnc),
+      "sequence_count2" -> udaf(new SequenceAgg(2, true), evEnc),
+      "sequence_match3" -> udaf(new SequenceAgg(3, false), evEnc),
+      "sequence_count3" -> udaf(new SequenceAgg(3, true), evEnc),
+      "sequence_match2_1h" -> udaf(new SequenceAgg(2, false, 3600L * 1000000), evEnc),
+      "sequence_match3_1h" -> udaf(new SequenceAgg(3, false, 3600L * 1000000), evEnc),
+      "topn5" -> udaf(new TopNAgg(5, 4096), Encoders.STRING),
+      "topn_weighted5" -> udaf(new TopNWeightedAgg(5, 4096), ExpressionEncoder[ItemCnt]()),
+      "product_agg" -> udaf(new ProductAgg, Encoders.scalaDouble))
   }
 }

@@ -2,9 +2,9 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** Doris BITMAP type + function family re-expressed over Spark
@@ -78,36 +78,33 @@ object Bitmaps {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("bitmap_agg", udaf(new BitmapAgg, Encoders.scalaLong))
-    u.register("bitmap_union", udaf(new BitmapUnionAgg, Encoders.BINARY))
-    u.register("bitmap_intersect_agg", udaf(new BitmapIntersectAgg, Encoders.BINARY))
-    u.register("to_bitmap", (v: Long) => { val b = new Roaring64NavigableMap(); b.addLong(v); ser(b) })
+  def udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "bitmap_agg" -> udaf(new BitmapAgg, Encoders.scalaLong),
+    "bitmap_union" -> udaf(new BitmapUnionAgg, Encoders.BINARY),
+    "bitmap_intersect_agg" -> udaf(new BitmapIntersectAgg, Encoders.BINARY),
+    "to_bitmap" -> udf((v: Long) => { val b = new Roaring64NavigableMap(); b.addLong(v); ser(b) }),
     // INTENTIONAL override of Spark 4's builtin bitmap_count (which
     // counts bits of a fixed 4KB bitmap blob): Doris bitmap_count is
-    // the cardinality of a roaring bitmap. Drop first so the override
-    // is silent and deliberate rather than a replace-WARN.
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bitmap_count"))
-    u.register("bitmap_count", (b: Array[Byte]) => deser(b).getLongCardinality)
-    u.register("bitmap_contains", (b: Array[Byte], v: Long) => deser(b).contains(v))
+    // the cardinality of a roaring bitmap. The graft entry replaces the
+    // builtin (reviewed in RegistryShadowSpec).
+    "bitmap_count" -> udf((b: Array[Byte]) => deser(b).getLongCardinality),
+    "bitmap_contains" -> udf((b: Array[Byte], v: Long) => deser(b).contains(v)),
     // iterator order is already ascending-unsigned (Roaring64NavigableMap
     // iterates unsigned), matching the reference's BITMAP ordering and
     // bitmap_min/bitmap_max; .sorted would impose signed order instead
-    u.register("bitmap_to_array", (b: Array[Byte]) => deser(b).toArray)
-    u.register("bitmap_min", (b: Array[Byte]) => { val x = deser(b); if (x.isEmpty) null else java.lang.Long.valueOf(x.first()) })
-    u.register("bitmap_max", (b: Array[Byte]) => { val x = deser(b); if (x.isEmpty) null else java.lang.Long.valueOf(x.last()) })
-    u.register("bitmap_and", (a: Array[Byte], b: Array[Byte]) => binop(a, b)(_ and _))
-    u.register("bitmap_or", (a: Array[Byte], b: Array[Byte]) => binop(a, b)(_ or _))
-    u.register("bitmap_xor", (a: Array[Byte], b: Array[Byte]) => binop(a, b)(_ xor _))
-    u.register("bitmap_andnot", (a: Array[Byte], b: Array[Byte]) => binop(a, b)(_ andNot _))
-    u.register("bitmap_and_count", (a: Array[Byte], b: Array[Byte]) => deser(binop(a, b)(_ and _)).getLongCardinality)
-    u.register("bitmap_or_count", (a: Array[Byte], b: Array[Byte]) => deser(binop(a, b)(_ or _)).getLongCardinality)
-    u.register("bitmap_has_any", (a: Array[Byte], b: Array[Byte]) => {
+    "bitmap_to_array" -> udf((b: Array[Byte]) => deser(b).toArray),
+    "bitmap_min" -> udf((b: Array[Byte]) => { val x = deser(b); if (x.isEmpty) null else java.lang.Long.valueOf(x.first()) }),
+    "bitmap_max" -> udf((b: Array[Byte]) => { val x = deser(b); if (x.isEmpty) null else java.lang.Long.valueOf(x.last()) }),
+    "bitmap_and" -> udf((a: Array[Byte], b: Array[Byte]) => binop(a, b)(_ and _)),
+    "bitmap_or" -> udf((a: Array[Byte], b: Array[Byte]) => binop(a, b)(_ or _)),
+    "bitmap_xor" -> udf((a: Array[Byte], b: Array[Byte]) => binop(a, b)(_ xor _)),
+    "bitmap_andnot" -> udf((a: Array[Byte], b: Array[Byte]) => binop(a, b)(_ andNot _)),
+    "bitmap_and_count" -> udf((a: Array[Byte], b: Array[Byte]) => deser(binop(a, b)(_ and _)).getLongCardinality),
+    "bitmap_or_count" -> udf((a: Array[Byte], b: Array[Byte]) => deser(binop(a, b)(_ or _)).getLongCardinality),
+    "bitmap_has_any" -> udf((a: Array[Byte], b: Array[Byte]) => {
       val x = deser(a); x.and(deser(b)); !x.isEmpty
-    })
-    u.register("bitmap_subset_limit", (b: Array[Byte], start: Long, limit: Long) => {
+    }),
+    "bitmap_subset_limit" -> udf((b: Array[Byte], start: Long, limit: Long) => {
       val out = new Roaring64NavigableMap()
       val it = deser(b).iterator()
       var taken = 0L
@@ -116,13 +113,13 @@ object Bitmaps {
         if (v >= start) { out.addLong(v); taken += 1 }
       }
       ser(out)
-    })
+    }),
     // string codec + slicing surface (reference: bitmap_from_string /
     // bitmap_to_string / sub_bitmap / bitmap_subset_in_range in
     // be/src/exprs/function/function_bitmap.cpp)
     // unparseable tokens yield NULL (not an exception), matching the
     // reference's parse-failure contract
-    u.register("bitmap_from_string", (s: String) => {
+    "bitmap_from_string" -> udf((s: String) => {
       if (s == null) null
       else {
         val out = new Roaring64NavigableMap()
@@ -135,9 +132,9 @@ object Bitmaps {
         }
         if (ok) ser(out) else null
       }
-    })
+    }),
     // unsigned rendering, matching the reference's uint64 bitmap values
-    u.register("bitmap_to_string", (b: Array[Byte]) => {
+    "bitmap_to_string" -> udf((b: Array[Byte]) => {
       val sb = new StringBuilder
       val it = deser(b).iterator()
       while (it.hasNext) {
@@ -145,25 +142,25 @@ object Bitmaps {
         sb.append(java.lang.Long.toUnsignedString(it.next()))
       }
       sb.toString
-    })
+    }),
     // bitmap_hash / bitmap_hash64 (function_bitmap.cpp BitmapHash):
     // single-member bitmap of the unsigned murmur hash of the string —
     // 32-bit form seeded MURMUR3_32_SEED, 64-bit form x64_64 seed 0
-    u.register("bitmap_hash", (s: String) => {
+    "bitmap_hash" -> udf((s: String) => {
       val out = new Roaring64NavigableMap()
       if (s != null)
         out.addLong(Integer.toUnsignedLong(Murmur3.hash32(s.getBytes("UTF-8"), 104729)))
       ser(out)
-    })
-    u.register("bitmap_hash64", (s: String) => {
+    }),
+    "bitmap_hash64" -> udf((s: String) => {
       val out = new Roaring64NavigableMap()
       if (s != null) out.addLong(Murmur3.hash64(s.getBytes("UTF-8"), 0L))
       ser(out)
-    })
+    }),
     // offset = element rank (ascending unsigned); negative offsets count
     // from the end; NULL when limit<=0, |offset| exceeds cardinality, or
     // the slice selects nothing (BitmapValue::offset_limit's contract)
-    u.register("sub_bitmap", (b: Array[Byte], offset: Long, len: Long) => {
+    "sub_bitmap" -> udf((b: Array[Byte], offset: Long, len: Long) => {
       val m = deser(b)
       val card = m.getLongCardinality
       if (len <= 0 || math.abs(offset) > card) null
@@ -180,20 +177,19 @@ object Bitmaps {
         }
         if (taken == 0L) null else ser(out)
       }
-    })
-    u.register("bitmap_subset_in_range", (b: Array[Byte], lo: Long, hi: Long) => {
+    }),
+    "bitmap_subset_in_range" -> udf((b: Array[Byte], lo: Long, hi: Long) => {
       val out = new Roaring64NavigableMap()
       val it = deser(b).iterator()
       while (it.hasNext) { val v = it.next(); if (v >= lo && v < hi) out.addLong(v) }
       ser(out)
-    })
-    u.register("bitmap_remove", (b: Array[Byte], v: Long) => {
+    }),
+    "bitmap_remove" -> udf((b: Array[Byte], v: Long) => {
       val m = deser(b); m.removeLong(v); ser(m)
-    })
-    u.register("bitmap_has_all", (a: Array[Byte], b: Array[Byte]) => {
+    }),
+    "bitmap_has_all" -> udf((a: Array[Byte], b: Array[Byte]) => {
       val x = deser(b); x.andNot(deser(a)); x.isEmpty
-    })
-    u.register("bitmap_xor_count", (a: Array[Byte], b: Array[Byte]) =>
-      deser(binop(a, b)(_ xor _)).getLongCardinality)
-  }
+    }),
+    "bitmap_xor_count" -> udf((a: Array[Byte], b: Array[Byte]) =>
+      deser(binop(a, b)(_ xor _)).getLongCardinality))
 }

@@ -3,7 +3,8 @@ package graft.functions
 import java.io.ByteArrayOutputStream
 import java.util.zip.{Deflater, Inflater}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 /** compress/uncompress (reference: be/src/exprs/function/
   * function_compress.cpp — zlib codec over string columns; Doris
@@ -41,11 +42,9 @@ object CodecFunctions {
     out.toByteArray
   }
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("compress", (s: String) =>
-      if (s == null) null else compress(s.getBytes("UTF-8")))
-    u.register("uncompress", (b: Array[Byte]) =>
-      if (b == null) null else new String(uncompress(b), "UTF-8"))
-  }
+  def udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "compress" -> udf((s: String) =>
+      if (s == null) null else compress(s.getBytes("UTF-8"))),
+    "uncompress" -> udf((b: Array[Byte]) =>
+      if (b == null) null else new String(uncompress(b), "UTF-8")))
 }

@@ -1,16 +1,28 @@
 package graft.functions
 
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, HyperLogLogPlusPlus, Sum}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo,
+  InheritAnalysisRules, LambdaFunction, Literal, RuntimeReplaceable,
+  UnresolvedNamedLambdaVariable, With}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count,
+  HyperLogLogPlusPlus, Sum}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.graftshim.ColumnShim
 
 /** Central registry of graft's custom functions (reference FE:
   * fe/fe-core/.../catalog/BuiltinScalarFunctions.java:601+ and
-  * BuiltinAggregateFunctions.java — re-expressed as Catalyst
-  * extensions + session-registered UDAFs/SQL UDFs).
+  * BuiltinAggregateFunctions.java — one static registry per process,
+  * re-expressed as one JVM-wide list of Catalyst function entries that
+  * [[graft.GraftExtensions]] injects into every session).
   */
 object FunctionRegistry {
+
+  type Builder = Seq[Expression] => Expression
 
   /** Expression-backed functions injected via extensions — native
     * Catalyst builders (no UDF layer), so they plan and codegen exactly
@@ -26,7 +38,7 @@ object FunctionRegistry {
     * (regression-test/data/nereids_function_p0/scalar_function/M.out).
     * Spark's builtin hash() tail-mixing differs, hence the custom
     * Expression). */
-  def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  def builders: Seq[(String, Builder)] = Seq(
     "ndv" -> ((args: Seq[Expression]) =>
       new HyperLogLogPlusPlus(args.head).toAggregateExpression()),
     "approx_distinct" -> ((args: Seq[Expression]) =>
@@ -47,7 +59,7 @@ object FunctionRegistry {
         (seed, s) => MurmurHash3_64(s, seed)
       }),
     // standard XXH32, seed 0, chained (xxhash_64 = XXH3 lives in
-    // XxHash3.scala, registered as a session UDF)
+    // XxHash3.scala)
     "xxhash_32" -> ((args: Seq[Expression]) =>
       if (args.isEmpty) Literal(0xe28dbde7fe22e41cL.toInt)
       else args.foldLeft[Expression](Literal(0)) {
@@ -332,72 +344,113 @@ object FunctionRegistry {
     // longer blocks them — see LambdaArrays)
     LambdaArrays.builders
 
-  def registerExtensions(e: SparkSessionExtensions): Unit =
-    builders.foreach { case (name, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        builder))
-    }
+  /** SQL-bodied definitions, each `name(p T, ...) RETURNS R RETURN body`. */
+  private[graft] def sqlDefs: Seq[String] =
+    AiFunctions.sqlDefs ++ MiscFunctions.sqlDefs ++ VectorFunctions.sqlDefs ++
+      AliasFunctions.sqlDefs ++ AliasFunctions2.sqlDefs ++ MoreAggs.sqlDefs
 
-  /** Runs each SQL registration statement of `module`, then fails the
-    * session build naming every statement that failed: a broken body
-    * must not leave a session that silently lacks its function. */
-  private[graft] def registerSql(spark: SparkSession, module: String,
-                                 stmts: Seq[String]): Unit = {
-    val failed = stmts.flatMap { stmt =>
-      try { spark.sql(stmt); None }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          val name = stmt.trim.stripPrefix("CREATE OR REPLACE TEMPORARY FUNCTION ")
-            .takeWhile(_ != '(')
-          Some(s"$name: ${e.getMessage.linesIterator.nextOption().getOrElse("")}")
+  private def udfs: Seq[(String, UserDefinedFunction)] = Seq(Bitmaps.udfs, BehaviorAggs.udfs,
+    JsonFunctions.udfs, CodecFunctions.udfs, HllFunctions.udfs, AliasFunctions.udfs, Ipv6Functions.udfs,
+    MoreAggs.udfs, MapAggs.udfs, ParamAggs.udfs, MiscFunctions2.udfs, GeoFunctions.udfs, SmCrypto.udfs).flatten
+
+  /** Every graft function, built once per JVM: the native builders, the
+    * SQL-bodied definitions and the JVM UDFs/UDAFs. [[GraftExtensions]]
+    * injects it into each session, so a session registers nothing
+    * itself; an entry whose name is a Spark builtin replaces it. */
+  lazy val entries: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = {
+    val all = builders ++ sqlFunctions(sqlDefs) ++
+      udfs.map { case (name, u) => name -> udfBuilder(name, u) }
+    val dup = all.groupBy(_._1).collect { case (name, bs) if bs.size > 1 => name }
+    require(dup.isEmpty, s"duplicate graft function names: ${dup.mkString(", ")}")
+    all.map { case (name, b) => (FunctionIdentifier(name), new ExpressionInfo("graft.functions", name), b) }
+  }
+
+  def registerExtensions(e: SparkSessionExtensions): Unit = entries.foreach(e.injectFunction)
+
+  /** Registers on `spark` each entry its registry lacks, for a session
+    * built without [[GraftExtensions]]; a session built with them lacks
+    * none. A builtin of the same name is dropped first, so the override
+    * logs no replace warning. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    entries.foreach { case (id, info, builder) =>
+      if (!registry.lookupFunctionBuilder(id).contains(builder)) {
+        registry.dropFunction(id)
+        registry.registerFunction(id, info, builder)
       }
     }
-    require(failed.isEmpty, s"$module registrations failed: ${failed.mkString("; ")}")
   }
 
-  /** sessions already registered — re-running every `u.register` on the
-    * same session silently REPLACES each function (Spark logs a WARN per
-    * name), which defeats the fail-fast double-registration guard. Weak
-    * keys so dropped sessions don't leak. */
-  private val installed: java.util.Set[SparkSession] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+  private val Definition = """(?s)\s*(\w+)\s*\((.*?)\)\s*RETURNS\s+(.+?)\s+RETURN\s+(.+)""".r
 
-  /** Session-scoped registrations (UDAFs + SQL UDFs need a live
-    * session). Idempotent: a session is registered exactly once, so a
-    * genuine duplicate registration surfaces as a WARN instead of
-    * drowning in re-install noise. */
-  def registerAll(spark: SparkSession): Unit = {
-    if (!installed.add(spark)) return
-    val names = builders.map(_._1)
-    val dup = names.diff(names.distinct).distinct
-    require(dup.isEmpty, s"duplicate builder registrations: ${dup.mkString(", ")}")
-    builders.foreach { case (name, builder) =>
-      // sessions built with GraftExtensions already carry the builders
-      // (injectFunction) — re-registering would WARN-and-replace each
-      if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(name)))
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, builder, "internal")
+  /** Parses each definition into a builder, failing with the name of
+    * every definition that does not parse. */
+  private[graft] def sqlFunctions(defs: Seq[String]): Seq[(String, Builder)] = {
+    val parsed = defs.map(d => d -> Try(sqlFunction(d)))
+    val failed = parsed.collect { case (d, Failure(e)) =>
+      s"${d.trim.takeWhile(_ != '(')}: ${e.getMessage.linesIterator.nextOption().getOrElse("")}"
     }
-    Bitmaps.register(spark)
-    BehaviorAggs.register(spark)
-    VectorFunctions.register(spark)
-    MiscFunctions.register(spark)
-    JsonFunctions.register(spark)
-    CodecFunctions.register(spark)
-    HllFunctions.register(spark)
-    AliasFunctions.register(spark)
-    Ipv6Functions.register(spark)
-    AiFunctions.register(spark)
-    MoreAggs.register(spark)
-    MapAggs.register(spark)
-    ParamAggs.register(spark)
-    MiscFunctions2.register(spark)
-    GeoFunctions.register(spark)
-    SmCrypto.register(spark)
-    AliasFunctions2.register(spark)  // after AliasFunctions: bodies use week()/domain()
+    require(failed.isEmpty, s"SQL-bodied function definitions failed: ${failed.mkString("; ")}")
+    parsed.map(_._2.get)
   }
+
+  /** One SQL-bodied function, bound as Spark binds a SQL function
+    * (SessionCatalog.makeSQLFunctionPlan): each argument as Cast(arg, T),
+    * the body as Cast(body, R). Functions the body calls resolve by name
+    * when the call is analyzed. */
+  private def sqlFunction(definition: String): (String, Builder) = definition match {
+    case Definition(name, paramDdl, returns, text) =>
+      val params = if (paramDdl.isBlank) Nil else CatalystSqlParser.parseTableSchema(paramDdl).fields.toSeq
+      val returnType = CatalystSqlParser.parseDataType(returns)
+      val body = CatalystSqlParser.parseExpression(text)
+      name -> { args =>
+        if (args.size != params.size) throw ColumnShim.wrongNumArgs(name, params.size, args.size)
+        val bound = params.zip(args).map { case (p, a) => p.name.toLowerCase -> Cast(a, p.dataType) }
+        def bodyOver(env: Seq[(String, Expression)]) = Cast(bind(body, env.toMap), returnType)
+        // a nondeterministic argument is evaluated once per row, however
+        // often the body names it
+        val (shared, inlined) = bound.partition(!_._2.deterministic)
+        SqlFunctionCall(name, args,
+          if (shared.isEmpty) bodyOver(inlined)
+          else With(shared.map(_._2): _*)(refs => bodyOver(inlined ++ shared.map(_._1).zip(refs))))
+      }
+    case _ => throw new IllegalArgumentException("expected name(p T, ...) RETURNS R RETURN body")
+  }
+
+  /** `e` with each parameter reference replaced by its argument, except
+    * under a lambda that binds the same name. */
+  private def bind(e: Expression, args: Map[String, Expression]): Expression = e match {
+    case LambdaFunction(fn, vars, hidden) =>
+      LambdaFunction(bind(fn, args -- vars.map(_.name.toLowerCase)), vars, hidden)
+    case UnresolvedAttribute(Seq(n)) if args.contains(n.toLowerCase) => args(n.toLowerCase)
+    // the parser makes every name inside a lambda body a lambda variable
+    case UnresolvedNamedLambdaVariable(Seq(n)) if args.contains(n.toLowerCase) => args(n.toLowerCase)
+    case _ => e.mapChildren(bind(_, args))
+  }
+
+  /** A JVM UDF or UDAF bound as `spark.udf.register` binds it: a ScalaUDF
+    * of the UDF's arity, or the ScalaAggregator that function resolution
+    * wraps. */
+  private def udfBuilder(name: String, u: UserDefinedFunction): Builder = {
+    val named = u.withName(name)
+    args => {
+      ColumnShim.arity(u).filter(_ != args.size)
+        .foreach(n => throw ColumnShim.wrongNumArgs(name, n, args.size))
+      ColumnShim.expression(named(args.map(ColumnShim.column): _*)) match {
+        case agg: AggregateExpression => agg.aggregateFunction
+        case e => e
+      }
+    }
+  }
+}
+
+/** A call of a SQL-bodied graft function. The analyzer resolves its bound
+  * body in place; the call keeps the function's name in output column
+  * names, as a SQL function's does, and gives way to the body before
+  * optimization. */
+case class SqlFunctionCall(name: String, parameters: Seq[Expression], replacement: Expression)
+    extends RuntimeReplaceable with InheritAnalysisRules {
+  override def prettyName: String = name
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(replacement = newChild)
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 /** Geo function subset (reference: be/src/exprs/function/geo/
   * functions_geo.cpp over Google S2 — st_point/st_x/st_y/st_astext/
@@ -283,53 +284,53 @@ object GeoFunctions extends Serializable {
   private def touchesPointPoly(p: GPoint, g: GPoly): java.lang.Boolean =
     java.lang.Boolean.valueOf(onRing(p.x, p.y, g.ring))
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("st_point", (x: Double, y: Double) => asText(GPoint(x, y)))
-    u.register("st_x", (w: String) =>
+  def udfs: Seq[(String, UserDefinedFunction)] = {
+    val u = Seq.newBuilder[(String, UserDefinedFunction)]
+    u += "st_point" -> udf((x: Double, y: Double) => asText(GPoint(x, y)))
+    u += "st_x" -> udf((w: String) =>
       parse(w).collect { case GPoint(x, _) => java.lang.Double.valueOf(x) }.orNull)
-    u.register("st_y", (w: String) =>
+    u += "st_y" -> udf((w: String) =>
       parse(w).collect { case GPoint(_, y) => java.lang.Double.valueOf(y) }.orNull)
     def canon(w: String): String = parse(w).map(asText).orNull
-    u.register("st_astext", canon _)
-    u.register("st_aswkt", canon _)
-    u.register("st_geometryfromtext", canon _)
-    u.register("st_geomfromtext", canon _)
+    u += "st_astext" -> udf(canon _)
+    u += "st_aswkt" -> udf(canon _)
+    u += "st_geometryfromtext" -> udf(canon _)
+    u += "st_geomfromtext" -> udf(canon _)
     def lineOnly(w: String): String =
       parse(w).collect { case g: GLine => asText(g) }.orNull
-    u.register("st_linefromtext", lineOnly _)
-    u.register("st_linestringfromtext", lineOnly _)
+    u += "st_linefromtext" -> udf(lineOnly _)
+    u += "st_linestringfromtext" -> udf(lineOnly _)
     def polyOnly(w: String): String =
       parse(w).collect { case g: GPoly => asText(g) }.orNull
-    u.register("st_polygon", polyOnly _)
-    u.register("st_polyfromtext", polyOnly _)
-    u.register("st_polygonfromtext", polyOnly _)
-    u.register("st_circle", (x: Double, y: Double, r: Double) => asText(GCircle(x, y, r)))
-    u.register("st_geometrytype", (w: String) => parse(w).map {
+    u += "st_polygon" -> udf(polyOnly _)
+    u += "st_polyfromtext" -> udf(polyOnly _)
+    u += "st_polygonfromtext" -> udf(polyOnly _)
+    u += "st_circle" -> udf((x: Double, y: Double, r: Double) => asText(GCircle(x, y, r)))
+    u += "st_geometrytype" -> udf((w: String) => parse(w).map {
       case _: GPoint => "ST_Point"
       case _: GLine => "ST_LineString"
       case _: GPoly => "ST_Polygon"
       case _: GCircle => "ST_Circle"
     }.orNull)
-    u.register("st_numpoints", (w: String) => parse(w).map {
+    u += "st_numpoints" -> udf((w: String) => parse(w).map {
       case _: GPoint => java.lang.Integer.valueOf(1)
       case GLine(p) => java.lang.Integer.valueOf(p.length)
       case GPoly(r) => java.lang.Integer.valueOf(r.length)
       case _: GCircle => java.lang.Integer.valueOf(1)
     }.orNull)
-    u.register("st_npoints", (w: String) => parse(w).map {
+    u += "st_npoints" -> udf((w: String) => parse(w).map {
       case _: GPoint => java.lang.Integer.valueOf(1)
       case GLine(p) => java.lang.Integer.valueOf(p.length)
       case GPoly(r) => java.lang.Integer.valueOf(r.length)
       case _: GCircle => java.lang.Integer.valueOf(1)
     }.orNull)
-    u.register("st_distance_sphere", (lng1: Double, lat1: Double, lng2: Double, lat2: Double) =>
+    u += "st_distance_sphere" -> udf((lng1: Double, lat1: Double, lng2: Double, lat2: Double) =>
       R * centralAngle(lng1, lat1, lng2, lat2))
-    u.register("st_angle_sphere", (lng1: Double, lat1: Double, lng2: Double, lat2: Double) =>
+    u += "st_angle_sphere" -> udf((lng1: Double, lat1: Double, lng2: Double, lat2: Double) =>
       math.toDegrees(centralAngle(lng1, lat1, lng2, lat2)))
     // st_angle(p1, p2, p3): angle at p2 from p1 to p3, clockwise,
     // radians in [0, 2pi) (geo_types.cpp:673-675)
-    u.register("st_angle", (p1: String, p2: String, p3: String) =>
+    u += "st_angle" -> udf((p1: String, p2: String, p3: String) =>
       (parse(p1), parse(p2), parse(p3)) match {
         case (Some(GPoint(x1, y1)), Some(GPoint(x2, y2)), Some(GPoint(x3, y3))) =>
           val a = bearing(x2, y2, x3, y3)
@@ -339,32 +340,32 @@ object GeoFunctions extends Serializable {
         case _ => null
       })
     // st_azimuth(p1, p2): initial bearing p1 -> p2, radians in [0, 2pi)
-    u.register("st_azimuth", (p1: String, p2: String) =>
+    u += "st_azimuth" -> udf((p1: String, p2: String) =>
       (parse(p1), parse(p2)) match {
         case (Some(GPoint(x1, y1)), Some(GPoint(x2, y2))) =>
           val b = bearing(x1, y1, x2, y2)
           java.lang.Double.valueOf(if (b < 0) b + 2 * math.Pi else b)
         case _ => null
       })
-    u.register("st_length", (w: String) => parse(w).collect {
+    u += "st_length" -> udf((w: String) => parse(w).collect {
       case GLine(pts) =>
         java.lang.Double.valueOf(
           pts.sliding(2).map { case Array((x1, y1), (x2, y2)) =>
             R * centralAngle(x1, y1, x2, y2)
           }.sum)
     }.orNull)
-    u.register("st_area_square_meters", (w: String) => parse(w).collect {
+    u += "st_area_square_meters" -> udf((w: String) => parse(w).collect {
       case GPoly(ring) => java.lang.Double.valueOf(R * R * sphericalArea(ring))
       case GCircle(_, _, r) =>
         // spherical cap: 2*pi*R^2*(1-cos(r/R))
         java.lang.Double.valueOf(2 * math.Pi * R * R * (1 - math.cos(r / R)))
     }.orNull)
-    u.register("st_area_square_km", (w: String) => parse(w).collect {
+    u += "st_area_square_km" -> udf((w: String) => parse(w).collect {
       case GPoly(ring) => java.lang.Double.valueOf(R * R * sphericalArea(ring) / 1e6)
       case GCircle(_, _, r) =>
         java.lang.Double.valueOf(2 * math.Pi * R * R * (1 - math.cos(r / R)) / 1e6)
     }.orNull)
-    u.register("st_contains", (shape: String, pt: String) =>
+    u += "st_contains" -> udf((shape: String, pt: String) =>
       (parse(shape), parse(pt)) match {
         case (Some(GPoly(ring)), Some(GPoint(x, y))) =>
           java.lang.Boolean.valueOf(pointInRing(x, y, ring))
@@ -374,7 +375,7 @@ object GeoFunctions extends Serializable {
           java.lang.Boolean.valueOf(ax == x && ay == y)
         case _ => null
       })
-    u.register("st_disjoint", (shape: String, pt: String) =>
+    u += "st_disjoint" -> udf((shape: String, pt: String) =>
       (parse(shape), parse(pt)) match {
         case (Some(GPoly(ring)), Some(GPoint(x, y))) =>
           java.lang.Boolean.valueOf(!pointInRing(x, y, ring))
@@ -382,7 +383,7 @@ object GeoFunctions extends Serializable {
           java.lang.Boolean.valueOf(R * centralAngle(cx, cy, x, y) > r)
         case _ => null
       })
-    u.register("st_intersects", (shape: String, pt: String) =>
+    u += "st_intersects" -> udf((shape: String, pt: String) =>
       (parse(shape), parse(pt)) match {
         case (Some(GPoly(ring)), Some(GPoint(x, y))) =>
           java.lang.Boolean.valueOf(pointInRing(x, y, ring))
@@ -391,11 +392,11 @@ object GeoFunctions extends Serializable {
         case _ => null
       })
     // ---- multi-geometry surface (functions_geo.cpp:923-1000)
-    u.register("st_numgeometries", (w: String) =>
+    u += "st_numgeometries" -> udf((w: String) =>
       components(w).map(c => java.lang.Long.valueOf(c.length.toLong)).orNull)
-    u.register("st_geometries", (w: String) => components(w).orNull)
+    u += "st_geometries" -> udf((w: String) => components(w).orNull)
     // ---- touches (functions_geo.cpp:557, planar subset — see touches())
-    u.register("st_touches", (a: String, b: String) =>
+    u += "st_touches" -> udf((a: String, b: String) =>
       (parse(a), parse(b)) match {
         case (Some(ga), Some(gb)) => touches(ga, gb)
         case _ => null
@@ -403,12 +404,9 @@ object GeoFunctions extends Serializable {
     // ---- WKB codec (little-endian; POINT=1, LINESTRING=2, POLYGON=3).
     // INTENTIONAL override of Spark 4.1's st_asbinary/st_geomfromwkb
     // builtins (GEOMETRY-typed): this engine's geometry model is WKT
-    // strings, matching the reference's st_* string surface. Drop the
-    // builtins first so the override is silent and deliberate.
-    Seq("st_asbinary", "st_geomfromwkb").foreach(n =>
-      spark.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
-    u.register("st_asbinary", (w: String) => parse(w).collect {
+    // strings, matching the reference's st_* string surface. The
+    // graft entries replace the builtins (reviewed in RegistryShadowSpec).
+    u += "st_asbinary" -> udf((w: String) => parse(w).collect {
       case GPoint(x, y) =>
         val bb = java.nio.ByteBuffer.allocate(21).order(java.nio.ByteOrder.LITTLE_ENDIAN)
         bb.put(1.toByte); bb.putInt(1); bb.putDouble(x); bb.putDouble(y)
@@ -451,7 +449,8 @@ object GeoFunctions extends Serializable {
         }
       } catch { case _: Exception => null }
     }
-    u.register("st_geometryfromwkb", fromWkb _)
-    u.register("st_geomfromwkb", fromWkb _)
+    u += "st_geometryfromwkb" -> udf(fromWkb _)
+    u += "st_geomfromwkb" -> udf(fromWkb _)
+    u.result()
   }
 }

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.datasketches.hll.HllSketch
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 /** Doris HLL scalar codec surface (reference: be/src/exprs/function/
   * function_hll.cpp — hll_hash / hll_empty build single-value /
@@ -17,13 +18,11 @@ object HllFunctions {
 
   private val LgK = 12 // Spark's hll_* default lgConfigK
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("hll_hash", (s: String) => {
+  def udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "hll_hash" -> udf((s: String) => {
       val sk = new HllSketch(LgK)
       if (s != null) sk.update(s)
       sk.toUpdatableByteArray
-    })
-    u.register("hll_empty", () => new HllSketch(LgK).toUpdatableByteArray)
-  }
+    }),
+    "hll_empty" -> udf(() => new HllSketch(LgK).toUpdatableByteArray))
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import java.net.{Inet4Address, Inet6Address, InetAddress}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 /** IP function family (reference: be/src/exprs/function/function_ip
   * .cpp — the ClickHouse-derived surface: ipv4/6 num<->string, inet
@@ -55,14 +56,14 @@ object Ipv6Functions extends Serializable {
         "::" + groups.drop(bestStart + bestLen).map(Integer.toHexString).mkString(":"))
     }
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("ipv6_string_to_num", (s: String) => parse6(s).orNull)
-    u.register("ipv6_string_to_num_or_null", (s: String) => parse6(s).orNull)
-    u.register("ipv6_num_to_string", (b: Array[Byte]) => format6(b).orNull)
-    u.register("is_ipv6_string", (s: String) =>
+  def udfs: Seq[(String, UserDefinedFunction)] = {
+    val u = Seq.newBuilder[(String, UserDefinedFunction)]
+    u += "ipv6_string_to_num" -> udf((s: String) => parse6(s).orNull)
+    u += "ipv6_string_to_num_or_null" -> udf((s: String) => parse6(s).orNull)
+    u += "ipv6_num_to_string" -> udf((b: Array[Byte]) => format6(b).orNull)
+    u += "is_ipv6_string" -> udf((s: String) =>
       if (s == null) null else java.lang.Boolean.valueOf(parse6(s).isDefined))
-    u.register("ipv4_to_ipv6", (s: String) => {
+    u += "ipv4_to_ipv6" -> udf((s: String) => {
       // ::ffff:a.b.c.d mapping of a dotted-quad
       if (s == null) null
       else {
@@ -79,7 +80,7 @@ object Ipv6Functions extends Serializable {
     })
     // cut_ipv6(addr, bytesToCutForIPv6, bytesToCutForIPv4): zero the
     // trailing N bytes (the reference's anonymization cut)
-    u.register("cut_ipv6", (b: Array[Byte], cut6: Int, cut4: Int) =>
+    u += "cut_ipv6" -> udf((b: Array[Byte], cut6: Int, cut4: Int) =>
       if (b == null || b.length != 16) null
       else {
         val isMapped4 = b.take(10).forall(_ == 0) && b(10) == -1.toByte && b(11) == -1.toByte
@@ -90,11 +91,11 @@ object Ipv6Functions extends Serializable {
         out
       })
     // ---- IPv4 numeric family + MySQL inet aliases
-    u.register("inet_aton", parse4Num _)
-    u.register("ipv4_string_to_num_or_null", parse4Num _)
-    u.register("ipv4_string_to_num_or_default", (s: String) =>
+    u += "inet_aton" -> udf(parse4Num _)
+    u += "ipv4_string_to_num_or_null" -> udf(parse4Num _)
+    u += "ipv4_string_to_num_or_default" -> udf((s: String) =>
       java.lang.Long.valueOf(Option(parse4Num(s)).map(_.longValue).getOrElse(0L)))
-    u.register("inet_ntoa", format4 _)
+    u += "inet_ntoa" -> udf(format4 _)
     // inet6_aton accepts both families (ClickHouse IPv6StringToNum:
     // dotted-quads map to ::ffff:a.b.c.d)
     def aton6(s: String): Array[Byte] =
@@ -102,36 +103,36 @@ object Ipv6Functions extends Serializable {
       else if (!s.contains(':') && s.contains('.'))
         Option(parse4Num(s)).map(n => mapped4(n.longValue)).orNull
       else parse6(s).orNull
-    u.register("inet6_aton", aton6 _)
-    u.register("inet6_ntoa", (b: Array[Byte]) => format6(b).orNull)
-    u.register("ipv6_string_to_num_or_default", (s: String) =>
+    u += "inet6_aton" -> udf(aton6 _)
+    u += "inet6_ntoa" -> udf((b: Array[Byte]) => format6(b).orNull)
+    u += "ipv6_string_to_num_or_default" -> udf((s: String) =>
       Option(aton6(s)).getOrElse(new Array[Byte](16)))
     // ---- is_ipv4/is_ipv6 + to_* error modes (IPV4/IPV6 types surface
     // as canonical strings)
     def okay4(s: String): Boolean = parse4Num(s) != null
     def okay6(s: String): Boolean = s != null && parse6(s).isDefined
-    u.register("is_ipv4", (s: String) =>
+    u += "is_ipv4" -> udf((s: String) =>
       if (s == null) null else java.lang.Boolean.valueOf(okay4(s)))
-    u.register("is_ipv4_string", (s: String) =>
+    u += "is_ipv4_string" -> udf((s: String) =>
       if (s == null) null else java.lang.Boolean.valueOf(okay4(s)))
-    u.register("is_ipv6", (s: String) =>
+    u += "is_ipv6" -> udf((s: String) =>
       if (s == null) null else java.lang.Boolean.valueOf(okay6(s)))
-    u.register("to_ipv4", (s: String) =>
+    u += "to_ipv4" -> udf((s: String) =>
       if (okay4(s)) format4(parse4Num(s).longValue)
       else throw new IllegalArgumentException(s"invalid ipv4: $s"))
-    u.register("to_ipv4_or_null", (s: String) =>
+    u += "to_ipv4_or_null" -> udf((s: String) =>
       if (okay4(s)) format4(parse4Num(s).longValue) else null)
-    u.register("to_ipv4_or_default", (s: String) =>
+    u += "to_ipv4_or_default" -> udf((s: String) =>
       if (okay4(s)) format4(parse4Num(s).longValue) else "0.0.0.0")
-    u.register("to_ipv6", (s: String) =>
+    u += "to_ipv6" -> udf((s: String) =>
       parse6(s).flatMap(format6).getOrElse(
         throw new IllegalArgumentException(s"invalid ipv6: $s")))
-    u.register("to_ipv6_or_null", (s: String) =>
+    u += "to_ipv6_or_null" -> udf((s: String) =>
       parse6(s).flatMap(format6).orNull)
-    u.register("to_ipv6_or_default", (s: String) =>
+    u += "to_ipv6_or_default" -> udf((s: String) =>
       parse6(s).flatMap(format6).getOrElse("::"))
     // ---- MySQL binary-16 predicates
-    u.register("is_ipv4_compat", (b: Array[Byte]) =>
+    u += "is_ipv4_compat" -> udf((b: Array[Byte]) =>
       if (b == null || b.length != 16) null
       else {
         val last4 = ((b(12) & 0xffL) << 24) | ((b(13) & 0xffL) << 16) |
@@ -139,22 +140,22 @@ object Ipv6Functions extends Serializable {
         java.lang.Boolean.valueOf(
           b.take(12).forall(_ == 0) && last4 != 0L && last4 != 1L)
       })
-    u.register("is_ipv4_mapped", (b: Array[Byte]) =>
+    u += "is_ipv4_mapped" -> udf((b: Array[Byte]) =>
       if (b == null || b.length != 16) null
       else java.lang.Boolean.valueOf(
         b.take(10).forall(_ == 0) && b(10) == -1.toByte && b(11) == -1.toByte))
     // ---- CIDR ranges (struct(min, max) of canonical strings)
-    u.register("ipv4_cidr_to_range", (cidr: String) => {
+    u += "ipv4_cidr_to_range" -> udf((cidr: String) => {
       val r = range4(cidr)
       if (r == null) null else (format4(r._1), format4(r._2))
     })
-    u.register("ipv6_cidr_to_range", (cidr: String) => {
+    u += "ipv6_cidr_to_range" -> udf((cidr: String) => {
       val r = range6(cidr)
       if (r == null) null
       else (format6(r._1).orNull, format6(r._2).orNull)
     })
     // works for both families (ClickHouse isIPAddressInRange)
-    u.register("is_ip_address_in_range", (addr: String, cidr: String) => {
+    u += "is_ip_address_in_range" -> udf((addr: String, cidr: String) => {
       if (addr == null || cidr == null) null
       else if (cidr.contains('.')) {
         val r = range4(cidr)
@@ -170,7 +171,7 @@ object Ipv6Functions extends Serializable {
       }
     })
     // big-endian uint128 decimal string -> 16-byte binary
-    u.register("ipv6_from_uint128_string_or_null", (s: String) =>
+    u += "ipv6_from_uint128_string_or_null" -> udf((s: String) =>
       if (s == null) null
       else try {
         val v = new java.math.BigInteger(s.trim)
@@ -183,6 +184,7 @@ object Ipv6Functions extends Serializable {
           out
         }
       } catch { case _: Exception => null })
+    u.result()
   }
 
   // ---------------------------------------------------------- ipv4 utils

@@ -2,7 +2,8 @@ package graft.functions
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 /** Doris JSON/JSONB family that Spark lacks natively (reference:
   * be/src/exprs/function/function_jsonb.cpp — json_set / json_insert /
@@ -258,18 +259,18 @@ object JsonFunctions extends Serializable {
     }
   }
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("json_set", (d: String, p: String, v: String) => mutate(d, p, v, 0))
-    u.register("json_insert", (d: String, p: String, v: String) => mutate(d, p, v, 1))
-    u.register("json_replace", (d: String, p: String, v: String) => mutate(d, p, v, 2))
-    u.register("json_remove", (d: String, p: String) => remove(d, p))
-    u.register("jsonb_set", (d: String, p: String, v: String) => mutate(d, p, v, 0))
-    u.register("jsonb_insert", (d: String, p: String, v: String) => mutate(d, p, v, 1))
-    u.register("jsonb_replace", (d: String, p: String, v: String) => mutate(d, p, v, 2))
-    u.register("json_valid", (d: String) =>
+  def udfs: Seq[(String, UserDefinedFunction)] = {
+    val u = Seq.newBuilder[(String, UserDefinedFunction)]
+    u += "json_set" -> udf((d: String, p: String, v: String) => mutate(d, p, v, 0))
+    u += "json_insert" -> udf((d: String, p: String, v: String) => mutate(d, p, v, 1))
+    u += "json_replace" -> udf((d: String, p: String, v: String) => mutate(d, p, v, 2))
+    u += "json_remove" -> udf((d: String, p: String) => remove(d, p))
+    u += "jsonb_set" -> udf((d: String, p: String, v: String) => mutate(d, p, v, 0))
+    u += "jsonb_insert" -> udf((d: String, p: String, v: String) => mutate(d, p, v, 1))
+    u += "jsonb_replace" -> udf((d: String, p: String, v: String) => mutate(d, p, v, 2))
+    u += "json_valid" -> udf((d: String) =>
       if (d == null) null else java.lang.Boolean.valueOf(parse(d).isDefined))
-    u.register("jsonb_valid", (d: String) =>
+    u += "jsonb_valid" -> udf((d: String) =>
       if (d == null) null else java.lang.Boolean.valueOf(parse(d).isDefined))
     // json_type(doc, path): reference arity + its lowercase typeName
     // table (jsonb_document.h:738 — int32-fitting integers are "int",
@@ -286,19 +287,19 @@ object JsonFunctions extends Serializable {
       else if (n.isBoolean) "bool"
       else "null"
     }.orNull
-    u.register("json_type", typeName _)
-    u.register("jsonb_type", typeName _)
+    u += "json_type" -> udf(typeName _)
+    u += "jsonb_type" -> udf(typeName _)
     // number of object keys / array elements; 1 for scalars (MySQL/Doris)
-    u.register("json_length", (d: String) => parse(d).map { n =>
+    u += "json_length" -> udf((d: String) => parse(d).map { n =>
       if (n.isContainerNode) java.lang.Long.valueOf(n.size().toLong)
       else java.lang.Long.valueOf(1L)
     }.orNull)
     // json_quote: wrap a raw string as a JSON string literal (escapes);
     // json_unquote: parse a JSON string literal back (non-strings and
     // unparseable input pass through, MySQL-compatible)
-    u.register("json_quote", (s: String) =>
+    u += "json_quote" -> udf((s: String) =>
       if (s == null) null else mapper.writeValueAsString(mapper.getNodeFactory.textNode(s)))
-    u.register("json_unquote", (s: String) =>
+    u += "json_unquote" -> udf((s: String) =>
       if (s == null) null
       else parse(s) match {
         case Some(n) if n.isTextual => n.asText()
@@ -307,74 +308,74 @@ object JsonFunctions extends Serializable {
     // ---- extraction (jsonb_extract + typed variants, get_json_* legacy)
     def extract(d: String, p: String): String =
       resolve(d, p).map(mapper.writeValueAsString).orNull
-    u.register("json_extract", extract _)
-    u.register("jsonb_extract", extract _)
+    u += "json_extract" -> udf(extract _)
+    u += "jsonb_extract" -> udf(extract _)
     def exStr(d: String, p: String): String =
       resolve(d, p).map(n => if (n.isTextual) n.asText() else mapper.writeValueAsString(n)).orNull
-    u.register("json_extract_string", exStr _)
-    u.register("jsonb_extract_string", exStr _)
-    u.register("json_extract_no_quotes", exStr _)
-    u.register("get_json_string", exStr _)
+    u += "json_extract_string" -> udf(exStr _)
+    u += "jsonb_extract_string" -> udf(exStr _)
+    u += "json_extract_no_quotes" -> udf(exStr _)
+    u += "get_json_string" -> udf(exStr _)
     def exInt(d: String, p: String): Integer =
       resolve(d, p).collect { case n if n.isIntegralNumber && n.canConvertToInt =>
         java.lang.Integer.valueOf(n.asInt()) }.orNull
-    u.register("json_extract_int", exInt _)
-    u.register("jsonb_extract_int", exInt _)
-    u.register("get_json_int", exInt _)
+    u += "json_extract_int" -> udf(exInt _)
+    u += "jsonb_extract_int" -> udf(exInt _)
+    u += "get_json_int" -> udf(exInt _)
     def exBig(d: String, p: String): java.lang.Long =
       resolve(d, p).collect { case n if n.isIntegralNumber && n.canConvertToLong =>
         java.lang.Long.valueOf(n.asLong()) }.orNull
-    u.register("json_extract_bigint", exBig _)
-    u.register("jsonb_extract_bigint", exBig _)
-    u.register("get_json_bigint", exBig _)
+    u += "json_extract_bigint" -> udf(exBig _)
+    u += "jsonb_extract_bigint" -> udf(exBig _)
+    u += "get_json_bigint" -> udf(exBig _)
     // largeint exceeds Long — surfaced as its decimal string (documented
     // LARGEINT policy, SURVEY §7.4)
     def exLarge(d: String, p: String): String =
       resolve(d, p).collect { case n if n.isIntegralNumber => n.bigIntegerValue().toString }.orNull
-    u.register("json_extract_largeint", exLarge _)
-    u.register("jsonb_extract_largeint", exLarge _)
+    u += "json_extract_largeint" -> udf(exLarge _)
+    u += "jsonb_extract_largeint" -> udf(exLarge _)
     def exDouble(d: String, p: String): java.lang.Double =
       resolve(d, p).collect { case n if n.isNumber => java.lang.Double.valueOf(n.asDouble()) }.orNull
-    u.register("json_extract_double", exDouble _)
-    u.register("jsonb_extract_double", exDouble _)
-    u.register("get_json_double", exDouble _)
+    u += "json_extract_double" -> udf(exDouble _)
+    u += "jsonb_extract_double" -> udf(exDouble _)
+    u += "get_json_double" -> udf(exDouble _)
     def exBool(d: String, p: String): java.lang.Boolean =
       resolve(d, p).collect { case n if n.isBoolean => java.lang.Boolean.valueOf(n.asBoolean()) }.orNull
-    u.register("json_extract_bool", exBool _)
-    u.register("jsonb_extract_bool", exBool _)
+    u += "json_extract_bool" -> udf(exBool _)
+    u += "jsonb_extract_bool" -> udf(exBool _)
     def exIsNull(d: String, p: String): java.lang.Boolean =
       resolve(d, p).map(n => java.lang.Boolean.valueOf(n.isNull)).orNull
-    u.register("json_extract_isnull", exIsNull _)
-    u.register("jsonb_extract_isnull", exIsNull _)
+    u += "json_extract_isnull" -> udf(exIsNull _)
+    u += "jsonb_extract_isnull" -> udf(exIsNull _)
     // ---- parse family (jsonb_parse error modes)
     def parseStrict(s: String): String =
       if (s == null) null
       else parse(s).map(mapper.writeValueAsString)
         .getOrElse(throw new IllegalArgumentException(s"invalid json: $s"))
-    u.register("json_parse", parseStrict _)
-    u.register("jsonb_parse", parseStrict _)
+    u += "json_parse" -> udf(parseStrict _)
+    u += "jsonb_parse" -> udf(parseStrict _)
     def parseOrNull(s: String): String =
       if (s == null) null else parse(s).map(mapper.writeValueAsString).orNull
-    u.register("json_parse_error_to_null", parseOrNull _)
-    u.register("jsonb_parse_error_to_null", parseOrNull _)
+    u += "json_parse_error_to_null" -> udf(parseOrNull _)
+    u += "jsonb_parse_error_to_null" -> udf(parseOrNull _)
     def parseOrValue(s: String, dflt: String): String =
       if (s == null) null
       else parse(s).map(mapper.writeValueAsString)
         .getOrElse(parse(dflt).map(mapper.writeValueAsString).orNull)
-    u.register("json_parse_error_to_value", parseOrValue _)
-    u.register("jsonb_parse_error_to_value", parseOrValue _)
+    u += "json_parse_error_to_value" -> udf(parseOrValue _)
+    u += "jsonb_parse_error_to_value" -> udf(parseOrValue _)
     // ---- transforms (function_jsonb_transform.cpp)
     def doSort(s: String): String =
       parse(s).map(n => mapper.writeValueAsString(sortKeys(n))).orNull
-    u.register("sort_json_object_keys", doSort _)
-    u.register("sort_jsonb_object_keys", doSort _)
+    u += "sort_json_object_keys" -> udf(doSort _)
+    u += "sort_jsonb_object_keys" -> udf(doSort _)
     def doNorm(s: String): String =
       parse(s).map(n => mapper.writeValueAsString(normNumbers(n))).orNull
-    u.register("normalize_json_numbers_to_double", doNorm _)
-    u.register("normalize_jsonb_numbers_to_double", doNorm _)
-    u.register("json_object_flatten", (s: String) =>
+    u += "normalize_json_numbers_to_double" -> udf(doNorm _)
+    u += "normalize_jsonb_numbers_to_double" -> udf(doNorm _)
+    u += "json_object_flatten" -> udf((s: String) =>
       parse(s).map(n => mapper.writeValueAsString(flatten(n))).orNull)
-    u.register("json_search", search _)
+    u += "json_search" -> udf(search _)
     // json_contains(doc, candidate): MySQL containment — objects contain
     // a candidate object when every candidate key/value is contained;
     // arrays contain scalars/objects that match any element; scalars
@@ -408,7 +409,7 @@ object JsonFunctions extends Serializable {
         }
       } else target == cand
     }
-    u.register("json_contains", (d: String, c: String) =>
+    u += "json_contains" -> udf((d: String, c: String) =>
       (parse(d), parse(c)) match {
         case (Some(t), Some(cn)) => java.lang.Boolean.valueOf(contains(t, cn))
         case _ => null
@@ -416,8 +417,8 @@ object JsonFunctions extends Serializable {
     def existsPath(d: String, p: String): java.lang.Boolean =
       parse(d).map(root => java.lang.Boolean.valueOf(
         tokenize(p).exists(toks => walk(root, toks).nonEmpty))).orNull
-    u.register("json_exists_path", existsPath _)
-    u.register("jsonb_exists_path", existsPath _)
+    u += "json_exists_path" -> udf(existsPath _)
+    u += "jsonb_exists_path" -> udf(existsPath _)
     // json_keys(doc): JSON array of the root object's keys (insertion
     // order, MySQL-compatible); non-objects -> NULL
     def keysOf(d: String): String = parse(d).collect {
@@ -426,10 +427,10 @@ object JsonFunctions extends Serializable {
         n.fieldNames().forEachRemaining(k => arr.add(mapper.getNodeFactory.textNode(k)))
         mapper.writeValueAsString(arr)
     }.orNull
-    u.register("json_keys", keysOf _)
-    u.register("jsonb_keys", keysOf _)
+    u += "json_keys" -> udf(keysOf _)
+    u += "jsonb_keys" -> udf(keysOf _)
     // strip_null_value: drop null-valued keys of the root object
-    u.register("strip_null_value", (d: String) => parse(d).map { n =>
+    u += "strip_null_value" -> udf((d: String) => parse(d).map { n =>
       if (!n.isObject) mapper.writeValueAsString(n)
       else {
         val out = mapper.createObjectNode()
@@ -439,5 +440,6 @@ object JsonFunctions extends Serializable {
         mapper.writeValueAsString(out)
       }
     }.orNull)
+    u.result()
   }
 }

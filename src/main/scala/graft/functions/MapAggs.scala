@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.udaf
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
@@ -203,24 +203,25 @@ object MapAggs {
     def outputEncoder: Encoder[String] = Encoders.STRING
   }
 
-  def register(spark: SparkSession): Unit = {
+  def udfs: Seq[(String, UserDefinedFunction)] = {
     implicit val mapD: Encoder[Map[String, Double]] = ExpressionEncoder()
-    spark.udf.register("sum_map", udaf(new MapFoldAgg(_ + _)))
-    spark.udf.register("min_map", udaf(new MapFoldAgg(math.min)))
-    spark.udf.register("max_map", udaf(new MapFoldAgg(math.max)))
-    spark.udf.register("avg_map", udaf(new AvgMapAgg))
-    spark.udf.register("count_map", udaf(new CountMapAgg))
     implicit val seqL: Encoder[Seq[Long]] = ExpressionEncoder()
-    spark.udf.register("group_array_intersect", udaf(new GroupArrayIntersectAgg))
-    spark.udf.register("group_array_union", udaf(new GroupArrayUnionAgg))
-    spark.udf.register("bitmap_union_int", udaf(new BitmapUnionIntAgg, Encoders.scalaLong))
-    spark.udf.register("group_bitmap_xor", udaf(new GroupBitmapXorAgg, Encoders.BINARY))
-    spark.udf.register("bool_xor", udaf(new BoolXorAgg, Encoders.scalaBoolean))
-    spark.udf.register("boolxor_agg", udaf(new BoolXorAgg, Encoders.scalaBoolean))
     implicit val wv: Encoder[WVal] = ExpressionEncoder()
-    spark.udf.register("percentile_weighted_p50", udaf(new PercentileWeightedAgg(0.5)))
-    spark.udf.register("percentile_weighted_p90", udaf(new PercentileWeightedAgg(0.9)))
-    spark.udf.register("percentile_approx_weighted", udaf(new PercentileWeightedPAgg))
-    spark.udf.register("multi_distinct_group_concat", udaf(new DistinctConcatAgg(",")))
+    Seq(
+      "sum_map" -> udaf(new MapFoldAgg(_ + _)),
+      "min_map" -> udaf(new MapFoldAgg(math.min)),
+      "max_map" -> udaf(new MapFoldAgg(math.max)),
+      "avg_map" -> udaf(new AvgMapAgg),
+      "count_map" -> udaf(new CountMapAgg),
+      "group_array_intersect" -> udaf(new GroupArrayIntersectAgg),
+      "group_array_union" -> udaf(new GroupArrayUnionAgg),
+      "bitmap_union_int" -> udaf(new BitmapUnionIntAgg, Encoders.scalaLong),
+      "group_bitmap_xor" -> udaf(new GroupBitmapXorAgg, Encoders.BINARY),
+      "bool_xor" -> udaf(new BoolXorAgg, Encoders.scalaBoolean),
+      "boolxor_agg" -> udaf(new BoolXorAgg, Encoders.scalaBoolean),
+      "percentile_weighted_p50" -> udaf(new PercentileWeightedAgg(0.5)),
+      "percentile_weighted_p90" -> udaf(new PercentileWeightedAgg(0.9)),
+      "percentile_approx_weighted" -> udaf(new PercentileWeightedPAgg),
+      "multi_distinct_group_concat" -> udaf(new DistinctConcatAgg(",")))
   }
 }

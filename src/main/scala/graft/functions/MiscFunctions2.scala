@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 /** Round-4 scalar tail that needs JVM logic (reference:
   * function_string_misc.cpp ngram_search; function_string_replace.h
@@ -67,38 +68,38 @@ object MiscFunctions2 extends Serializable {
     (out(0), out(1))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("ngram_search", (t: String, p: String, n: Int) => ngramSearch(t, p, n))
-    u.register("edit_distance", (a: String, b: String) =>
+  def udfs: Seq[(String, UserDefinedFunction)] = {
+    val u = Seq.newBuilder[(String, UserDefinedFunction)]
+    u += "ngram_search" -> udf((t: String, p: String, n: Int) => ngramSearch(t, p, n))
+    u += "edit_distance" -> udf((a: String, b: String) =>
       if (a == null || b == null) null
       else java.lang.Integer.valueOf(
         org.apache.commons.text.similarity.LevenshteinDistance.getDefaultInstance.apply(a, b)))
-    u.register("levenshtein_distance", (a: String, b: String) =>
+    u += "levenshtein_distance" -> udf((a: String, b: String) =>
       if (a == null || b == null) null
       else java.lang.Integer.valueOf(
         org.apache.commons.text.similarity.LevenshteinDistance.getDefaultInstance.apply(a, b)))
-    u.register("damerau_levenshtein_distance", (a: String, b: String) =>
+    u += "damerau_levenshtein_distance" -> udf((a: String, b: String) =>
       if (a == null || b == null) null else java.lang.Integer.valueOf(damerau(a, b)))
     // replace_empty: like replace, except an EMPTY search string inserts
     // the replacement before every character and at the end
-    u.register("replace_empty", (s: String, old: String, nw: String) =>
+    u += "replace_empty" -> udf((s: String, old: String, nw: String) =>
       if (s == null || old == null || nw == null) null
       else if (old.nonEmpty) s.replace(old, nw)
       else if (nw.isEmpty) s
       else s.map(c => nw + c).mkString + nw)
-    u.register("parse_data_size", parseDataSize _)
-    u.register("convert_to", (s: String, charset: String) =>
+    u += "parse_data_size" -> udf(parseDataSize _)
+    u += "convert_to" -> udf((s: String, charset: String) =>
       if (s == null || charset == null) null
       else try s.getBytes(charset) catch { case _: Exception => null })
-    u.register("unicode_normalize", (s: String, form: String) =>
+    u += "unicode_normalize" -> udf((s: String, form: String) =>
       if (s == null || form == null) null
       else try java.text.Normalizer.normalize(
         s, java.text.Normalizer.Form.valueOf(form.toUpperCase))
       catch { case _: Exception => null })
     // MySQL INSERT(str, pos, len, newstr): 1-based; out-of-range pos
     // returns str unchanged; len beyond end replaces through the end
-    u.register("mysql_insert", (s: String, pos: Int, len: Int, nw: String) =>
+    u += "mysql_insert" -> udf((s: String, pos: Int, len: Int, nw: String) =>
       if (s == null || nw == null) null
       else if (pos < 1 || pos > s.length) s
       else {
@@ -107,14 +108,14 @@ object MiscFunctions2 extends Serializable {
         s.substring(0, start) + nw + s.substring(end)
       })
     // MySQL PASSWORD(): '*' + uppercase hex of SHA1(SHA1(pw))
-    u.register("password", (s: String) =>
+    u += "password" -> udf((s: String) =>
       if (s == null) null
       else {
         val md = java.security.MessageDigest.getInstance("SHA-1")
         val h = md.digest(md.digest(s.getBytes("UTF-8")))
         "*" + h.map("%02X".format(_)).mkString
       })
-    u.register("normal_cdf", (mean: Double, sd: Double, x: Double) =>
+    u += "normal_cdf" -> udf((mean: Double, sd: Double, x: Double) =>
       0.5 * (1.0 + org.apache.commons.math3.special.Erf.erf(
         (x - mean) / (sd * math.sqrt(2.0)))))
     // ---- encode_as_* / decode_as_varchar (function_encode_varchar.cpp:
@@ -132,17 +133,16 @@ object MiscFunctions2 extends Serializable {
       acc = acc.or(java.math.BigInteger.valueOf((bytes.length << 1) & 0xffL))
       acc.shiftRight(1) // sign bit is already 0 for <= width-1 chars of input
     }
-    u.register("encode_as_smallint", (s: String) =>
+    u += "encode_as_smallint" -> udf((s: String) =>
       Option(encode(s, 2)).map(v => java.lang.Short.valueOf(v.shortValueExact())).orNull)
-    u.register("encode_as_int", (s: String) =>
+    u += "encode_as_int" -> udf((s: String) =>
       Option(encode(s, 4)).map(v => java.lang.Integer.valueOf(v.intValueExact())).orNull)
-    u.register("encode_as_bigint", (s: String) =>
+    u += "encode_as_bigint" -> udf((s: String) =>
       Option(encode(s, 8)).map(v => java.lang.Long.valueOf(v.longValueExact())).orNull)
     // ---- uuid <-> int128 (reference uuid functions return LARGEINT =
     // signed int128; our LARGEINT policy is DECIMAL(38,0) with loud
     // rejection beyond 38 digits — SURVEY §7.4)
-    u.register("uuid_to_int",
-      new org.apache.spark.sql.api.java.UDF1[String, java.math.BigDecimal] {
+    u += "uuid_to_int" -> udf(new org.apache.spark.sql.api.java.UDF1[String, java.math.BigDecimal] {
         override def call(s: String): java.math.BigDecimal = {
           if (s == null) return null
           val hex = s.replace("-", "")
@@ -156,8 +156,7 @@ object MiscFunctions2 extends Serializable {
         }
       },
       org.apache.spark.sql.types.DecimalType(38, 0))
-    u.register("int_to_uuid",
-      new org.apache.spark.sql.api.java.UDF1[java.math.BigDecimal, String] {
+    u += "int_to_uuid" -> udf(new org.apache.spark.sql.api.java.UDF1[java.math.BigDecimal, String] {
         override def call(v: java.math.BigDecimal): String = {
           if (v == null) return null
           val signed = v.toBigIntegerExact
@@ -174,19 +173,19 @@ object MiscFunctions2 extends Serializable {
     // bitmap_empty / bitmap_not (= a MINUS b, :551-575) /
     // bitmap_from_array / to_bitmap_with_check; quantile_state codecs
     // ride the state's binary form like bitmap_to/from_base64)
-    u.register("bitmap_empty", () =>
+    u += "bitmap_empty" -> udf(() =>
       Bitmaps.ser(new org.roaringbitmap.longlong.Roaring64NavigableMap()))
-    u.register("bitmap_not", (a: Array[Byte], b: Array[Byte]) => {
+    u += "bitmap_not" -> udf((a: Array[Byte], b: Array[Byte]) => {
       val x = Bitmaps.deser(a)
       x.andNot(Bitmaps.deser(b))
       Bitmaps.ser(x)
     })
-    u.register("bitmap_from_array", (xs: Seq[Long]) => {
+    u += "bitmap_from_array" -> udf((xs: Seq[Long]) => {
       val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()
       if (xs != null) xs.foreach(bm.addLong)
       Bitmaps.ser(bm)
     })
-    u.register("to_bitmap_with_check", (v: Long) =>
+    u += "to_bitmap_with_check" -> udf((v: Long) =>
       if (v < 0) throw new IllegalArgumentException(s"to_bitmap_with_check: negative input $v")
       else {
         val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()
@@ -198,11 +197,11 @@ object MiscFunctions2 extends Serializable {
     // the int128 decimal string = (h2 << 64) | h1 (LARGEINT policy:
     // beyond-38-digit values cannot ride DECIMAL(38,0), so the string
     // IS the canonical form here — documented)
-    u.register("murmur_hash3_64_v2", (s: String) =>
+    u += "murmur_hash3_64_v2" -> udf((s: String) =>
       if (s == null) null
       else java.lang.Long.valueOf(murmur3x64128(s.getBytes("UTF-8"), 0L, 0L)._1))
-    u.register("murmur_hash3_u64_v2",
-      new org.apache.spark.sql.api.java.UDF1[String, java.math.BigDecimal] {
+    u += "murmur_hash3_u64_v2" ->
+      udf(new org.apache.spark.sql.api.java.UDF1[String, java.math.BigDecimal] {
         override def call(s: String): java.math.BigDecimal =
           if (s == null) null
           else new java.math.BigDecimal(
@@ -223,8 +222,8 @@ object MiscFunctions2 extends Serializable {
           else unsigned
         signed.toString
       }
-    u.register("murmur_hash3_128", pack128 _)
-    u.register("murmur_hash3_u128", (s: String) =>
+    u += "murmur_hash3_128" -> udf(pack128 _)
+    u += "murmur_hash3_u128" -> udf((s: String) =>
       if (s == null) null
       else {
         val (h1, h2) = murmur3x64128(s.getBytes("UTF-8"), 0L, 0L)
@@ -238,29 +237,27 @@ object MiscFunctions2 extends Serializable {
     // the hash of args 1..N-1, mirroring the murmur forms)
     // multi_search_all_positions(haystack, needles): 1-based positions,
     // 0 when absent (functions_multi_string_position.cpp)
-    u.register("multi_search_all_positions", (s: String, pats: Seq[String]) =>
+    u += "multi_search_all_positions" -> udf((s: String, pats: Seq[String]) =>
       if (s == null || pats == null) null
       else pats.map(p => if (p == null) 0L else (s.indexOf(p) + 1).toLong))
     // fresh-per-row randomness: nondeterministic, like Spark's own
     // rand()/uuid(), so subexpression elimination / filter pushdown /
     // retry re-execution never collapse or reorder calls
-    u.register("random_bytes",
-      org.apache.spark.sql.functions.udf((n: Int) => {
+    u += "random_bytes" -> org.apache.spark.sql.functions.udf((n: Int) => {
         val b = new Array[Byte](math.max(0, n))
         java.util.concurrent.ThreadLocalRandom.current().nextBytes(b)
         b
-      }).asNondeterministic())
-    u.register("uuid_numeric",
-      org.apache.spark.sql.functions.udf(
+      }).asNondeterministic()
+    u += "uuid_numeric" -> org.apache.spark.sql.functions.udf(
         new org.apache.spark.sql.api.java.UDF0[java.math.BigDecimal] {
           override def call(): java.math.BigDecimal =
             new java.math.BigDecimal(new java.math.BigInteger(126,
               java.util.concurrent.ThreadLocalRandom.current().asInstanceOf[java.util.Random]))
         },
-        org.apache.spark.sql.types.DecimalType(38, 0)).asNondeterministic())
+        org.apache.spark.sql.types.DecimalType(38, 0)).asNondeterministic()
     // bounded sleep (the reference blocks for N seconds; capped here so
     // a stray call can never stall an executor)
-    u.register("sleep", (secs: Double) => {
+    u += "sleep" -> udf((secs: Double) => {
       Thread.sleep(math.min(100L, math.max(0L, (secs * 1000).toLong)))
       true
     })
@@ -280,7 +277,7 @@ object MiscFunctions2 extends Serializable {
       }
       sb.toString
     }
-    u.register("auto_partition_name", (typ: String, a: String, b: String) => {
+    u += "auto_partition_name" -> udf((typ: String, a: String, b: String) => {
       if (typ == null) null
       else if (typ.startsWith("list"))
         "p" + escapeListVal(Option(a).getOrElse("")) +
@@ -303,23 +300,23 @@ object MiscFunctions2 extends Serializable {
         }
       } else null
     })
-    u.register("quantile_state_empty", () => Array.emptyByteArray)
-    u.register("quantile_state_to_base64", (b: Array[Byte]) =>
+    u += "quantile_state_empty" -> udf(() => Array.emptyByteArray)
+    u += "quantile_state_to_base64" -> udf((b: Array[Byte]) =>
       if (b == null) null else java.util.Base64.getEncoder.encodeToString(b))
-    u.register("quantile_state_from_base64", (s: String) =>
+    u += "quantile_state_from_base64" -> udf((s: String) =>
       if (s == null) null
       else try java.util.Base64.getDecoder.decode(s) catch { case _: Exception => null })
     // explicit Decimal(38,0) — the default BigDecimal inference is
     // (38,18) which overflows for high first bytes
-    u.register("encode_as_largeint",
-      new org.apache.spark.sql.api.java.UDF1[String, java.math.BigDecimal] {
+    u += "encode_as_largeint" ->
+      udf(new org.apache.spark.sql.api.java.UDF1[String, java.math.BigDecimal] {
         override def call(s: String): java.math.BigDecimal =
           Option(encode(s, 16)).map(v => new java.math.BigDecimal(v)).orNull
       },
       org.apache.spark.sql.types.DecimalType(38, 0))
     // canonical BIGINT decode (the FE dispatches on arg type; BIGINT is
     // the documented canonical form here)
-    u.register("decode_as_varchar", (v: java.lang.Long) =>
+    u += "decode_as_varchar" -> udf((v: java.lang.Long) =>
       if (v == null) null
       else {
         val full = java.math.BigInteger.valueOf(v).shiftLeft(1)
@@ -333,5 +330,6 @@ object MiscFunctions2 extends Serializable {
           new String(out, "UTF-8")
         }
       })
+    u.result()
   }
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 
 /** Histogram / EMA / count_by_enum aggregates + HLL aliases
   * (reference: be/src/exprs/aggregate/aggregate_function_
@@ -125,22 +125,19 @@ object MoreAggs {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("group_concat_ord",
-      udaf(new GroupConcatOrdAgg(",", distinct = false), ExpressionEncoder[KeyedStr]()))
-    spark.udf.register("group_concat_distinct_ord",
-      udaf(new GroupConcatOrdAgg(",", distinct = true), ExpressionEncoder[KeyedStr]()))
-    spark.udf.register("linear_histogram_100",
-      udaf(new LinearHistogramAgg(100.0), Encoders.scalaDouble))
-    spark.udf.register("ema3", udaf(new EmaAgg(0.3), ExpressionEncoder[TsVal]()))
-    spark.udf.register("count_by_enum", udaf(new CountByEnumAgg, Encoders.STRING))
-    spark.udf.register("to_quantile_state",
-      udaf(new QuantileStateAgg, Encoders.scalaDouble))
-    spark.udf.register("quantile_union",
-      udaf(new QuantileUnionAgg, Encoders.BINARY))
+  def udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "group_concat_ord" ->
+      udaf(new GroupConcatOrdAgg(",", distinct = false), ExpressionEncoder[KeyedStr]()),
+    "group_concat_distinct_ord" ->
+      udaf(new GroupConcatOrdAgg(",", distinct = true), ExpressionEncoder[KeyedStr]()),
+    "linear_histogram_100" -> udaf(new LinearHistogramAgg(100.0), Encoders.scalaDouble),
+    "ema3" -> udaf(new EmaAgg(0.3), ExpressionEncoder[TsVal]()),
+    "count_by_enum" -> udaf(new CountByEnumAgg, Encoders.STRING),
+    "to_quantile_state" -> udaf(new QuantileStateAgg, Encoders.scalaDouble),
+    "quantile_union" -> udaf(new QuantileUnionAgg, Encoders.BINARY),
     // quantile_percent(state, p): exact linear-interpolated percentile
     // from a serialized state (scalar, like the reference's)
-    spark.udf.register("quantile_percent", (b: Array[Byte], p: Double) => {
+    "quantile_percent" -> udf((b: Array[Byte], p: Double) => {
       if (b == null || b.length < 8) null
       else {
         val bb = java.nio.ByteBuffer.wrap(b)
@@ -150,13 +147,9 @@ object MoreAggs {
         val hi = math.min(lo + 1, vs.length - 1)
         java.lang.Double.valueOf(vs(lo) + (rank - lo) * (vs(hi) - vs(lo)))
       }
-    })
-    // Doris-named HLL surface over Spark's datasketches built-ins
-    try {
-      spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION hll_cardinality(s BINARY)
-                   RETURNS BIGINT RETURN hll_sketch_estimate(s)""")
-    } catch { case e: org.apache.spark.sql.AnalysisException =>
-      System.err.println(s"[graft] UDF registration failed: ${e.getMessage.linesIterator.next()}")
-    }
-  }
+    }))
+
+  /** Doris-named HLL surface over Spark's datasketches built-ins. */
+  def sqlDefs: Seq[String] = Seq(
+    "hll_cardinality(s BINARY) RETURNS BIGINT RETURN hll_sketch_estimate(s)")
 }

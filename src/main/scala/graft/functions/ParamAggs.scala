@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.udaf
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
@@ -487,34 +487,32 @@ object ParamAggs {
     def outputEncoder: Encoder[String] = Encoders.STRING
   }
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("window_funnel", udaf(new WindowFunnelNamed, ExpressionEncoder[FunnelRow]()))
-    u.register("window_funnel_v1", udaf(new WindowFunnelNamed, ExpressionEncoder[FunnelRow]()))
-    u.register("window_funnel_v2", udaf(new WindowFunnelNamed, ExpressionEncoder[FunnelRow]()))
-    u.register("retention", udaf(new RetentionNamed, ExpressionEncoder[Bools3]()))
-    u.register("sequence_match", udaf(new SequenceNamed(false), ExpressionEncoder[SeqRow]()))
-    u.register("sequence_count", udaf(new SequenceNamed(true), ExpressionEncoder[SeqRow]()))
-    u.register("topn", udaf(new TopNNamed, ExpressionEncoder[ItemK]()))
-    u.register("topn_array", udaf(new TopNArrayNamed, ExpressionEncoder[ItemK]()))
-    u.register("topn_weighted", udaf(new TopNWeightedNamed, ExpressionEncoder[ItemWK]()))
-    u.register("linear_histogram", udaf(new LinearHistogramNamed, ExpressionEncoder[VW]()))
-    u.register("histogram", udaf(new HistogramNamed, ExpressionEncoder[VNb]()))
-    u.register("hist", udaf(new HistogramNamed, ExpressionEncoder[VNb]()))
-    u.register("exponential_moving_average", udaf(new EmaNamed, ExpressionEncoder[EmaRow]()))
-    u.register("bitmap_union_count", udaf(new BitmapUnionCountNamed, Encoders.BINARY))
-    u.register("orthogonal_bitmap_union_count", udaf(new BitmapUnionCountNamed, Encoders.BINARY))
-    u.register("bitmap_intersect", udaf(new Bitmaps.BitmapIntersectAgg, Encoders.BINARY))
-    u.register("intersect_count", udaf(new IntersectCountNamed, ExpressionEncoder[ICRow]()))
-    u.register("orthogonal_bitmap_intersect_count",
-      udaf(new IntersectCountNamed, ExpressionEncoder[ICRow]()))
-    u.register("orthogonal_bitmap_intersect",
-      udaf(new OrthogonalBitmapIntersectNamed, ExpressionEncoder[ICRow]()))
-    u.register("orthogonal_bitmap_expr_calculate",
-      udaf(new BitmapExprCalcNamed, ExpressionEncoder[ExprRow]()))
-    u.register("orthogonal_bitmap_expr_calculate_count",
-      udaf(new BitmapExprCalcCountNamed, ExpressionEncoder[ExprRow]()))
-    u.register("group_concat", udaf(new GroupConcatNamed, ExpressionEncoder[SSep]()))
-    u.register("ai_agg", udaf(new AiAggStub, ExpressionEncoder[SPrompt]()))
-  }
+  def udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "window_funnel" -> udaf(new WindowFunnelNamed, ExpressionEncoder[FunnelRow]()),
+    "window_funnel_v1" -> udaf(new WindowFunnelNamed, ExpressionEncoder[FunnelRow]()),
+    "window_funnel_v2" -> udaf(new WindowFunnelNamed, ExpressionEncoder[FunnelRow]()),
+    "retention" -> udaf(new RetentionNamed, ExpressionEncoder[Bools3]()),
+    "sequence_match" -> udaf(new SequenceNamed(false), ExpressionEncoder[SeqRow]()),
+    "sequence_count" -> udaf(new SequenceNamed(true), ExpressionEncoder[SeqRow]()),
+    "topn" -> udaf(new TopNNamed, ExpressionEncoder[ItemK]()),
+    "topn_array" -> udaf(new TopNArrayNamed, ExpressionEncoder[ItemK]()),
+    "topn_weighted" -> udaf(new TopNWeightedNamed, ExpressionEncoder[ItemWK]()),
+    "linear_histogram" -> udaf(new LinearHistogramNamed, ExpressionEncoder[VW]()),
+    "histogram" -> udaf(new HistogramNamed, ExpressionEncoder[VNb]()),
+    "hist" -> udaf(new HistogramNamed, ExpressionEncoder[VNb]()),
+    "exponential_moving_average" -> udaf(new EmaNamed, ExpressionEncoder[EmaRow]()),
+    "bitmap_union_count" -> udaf(new BitmapUnionCountNamed, Encoders.BINARY),
+    "orthogonal_bitmap_union_count" -> udaf(new BitmapUnionCountNamed, Encoders.BINARY),
+    "bitmap_intersect" -> udaf(new Bitmaps.BitmapIntersectAgg, Encoders.BINARY),
+    "intersect_count" -> udaf(new IntersectCountNamed, ExpressionEncoder[ICRow]()),
+    "orthogonal_bitmap_intersect_count" ->
+      udaf(new IntersectCountNamed, ExpressionEncoder[ICRow]()),
+    "orthogonal_bitmap_intersect" ->
+      udaf(new OrthogonalBitmapIntersectNamed, ExpressionEncoder[ICRow]()),
+    "orthogonal_bitmap_expr_calculate" ->
+      udaf(new BitmapExprCalcNamed, ExpressionEncoder[ExprRow]()),
+    "orthogonal_bitmap_expr_calculate_count" ->
+      udaf(new BitmapExprCalcCountNamed, ExpressionEncoder[ExprRow]()),
+    "group_concat" -> udaf(new GroupConcatNamed, ExpressionEncoder[SSep]()),
+    "ai_agg" -> udaf(new AiAggStub, ExpressionEncoder[SPrompt]()))
 }

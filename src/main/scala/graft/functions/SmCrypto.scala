@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 /** Chinese national-standard crypto family the reference exposes
   * (be/src/exprs/function/function_encryption.cpp sm4_encrypt/
@@ -143,21 +144,21 @@ object SmCrypto extends Serializable {
     else out.dropRight(pad)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val u = spark.udf
+  def udfs: Seq[(String, UserDefinedFunction)] = {
     def hexs(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
-    u.register("sm3", (s: String) => if (s == null) null else hexs(sm3(s.getBytes("UTF-8"))))
-    u.register("sm3sum", (s: String) => if (s == null) null else hexs(sm3(s.getBytes("UTF-8"))))
-    u.register("sm4_encrypt", (s: String, key: String) =>
-      if (s == null || key == null) null
-      else sm4EncryptEcb(s.getBytes("UTF-8"), key.getBytes("UTF-8")))
-    u.register("sm4_decrypt", (c: Array[Byte], key: String) =>
-      if (c == null || key == null) null
-      else Option(sm4DecryptEcb(c, key.getBytes("UTF-8")))
-        .map(new String(_, "UTF-8")).orNull)
-    // raw-block forms for the published standard vectors (no padding)
-    u.register("sm4_encrypt_block", (p: Array[Byte], key: Array[Byte]) =>
-      if (p == null || key == null || key.length != 16 || p.length != 16) null
-      else cryptBlock(p, 0, roundKeys(key)))
+    Seq(
+      "sm3" -> udf((s: String) => if (s == null) null else hexs(sm3(s.getBytes("UTF-8")))),
+      "sm3sum" -> udf((s: String) => if (s == null) null else hexs(sm3(s.getBytes("UTF-8")))),
+      "sm4_encrypt" -> udf((s: String, key: String) =>
+        if (s == null || key == null) null
+        else sm4EncryptEcb(s.getBytes("UTF-8"), key.getBytes("UTF-8"))),
+      "sm4_decrypt" -> udf((c: Array[Byte], key: String) =>
+        if (c == null || key == null) null
+        else Option(sm4DecryptEcb(c, key.getBytes("UTF-8")))
+          .map(new String(_, "UTF-8")).orNull),
+      // raw-block forms for the published standard vectors (no padding)
+      "sm4_encrypt_block" -> udf((p: Array[Byte], key: Array[Byte]) =>
+        if (p == null || key == null || key.length != 16 || p.length != 16) null
+        else cryptBlock(p, 0, roundKeys(key))))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Array/vector distance functions (reference:
@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   *
   * Implemented as compositions of native higher-order functions
   * (zip_with + aggregate), so they stay inside whole-stage codegen —
-  * no UDF serialization on the 100 TB scan path. Also registered as
-  * SQL UDFs (Spark 4 `CREATE FUNCTION … RETURN expr`), which inline to
-  * the same codegen'd expressions.
+  * no UDF serialization on the 100 TB scan path. The SQL surface is the
+  * same bodies as SQL-bodied definitions, which inline to the same
+  * codegen'd expressions.
   */
 object VectorFunctions {
 
@@ -36,45 +36,25 @@ object VectorFunctions {
   def cosineDistance(a: Column, b: Column): Column =
     lit(1.0) - cosineSimilarity(a, b)
 
-  /** SQL-surface registration; the RETURN bodies mirror the Column
-    * helpers exactly. */
-  def register(spark: SparkSession): Unit = {
-    def fallback(): Unit = {
-      def s(xs: Seq[Double]) = xs
-      spark.udf.register("inner_product",
-        (a: Seq[Double], b: Seq[Double]) => s(a).zip(b).map { case (x, y) => x * y }.foldLeft(0.0)(_ + _))
-      spark.udf.register("l1_distance",
-        (a: Seq[Double], b: Seq[Double]) => s(a).zip(b).map { case (x, y) => math.abs(x - y) }.foldLeft(0.0)(_ + _))
-      spark.udf.register("l2_distance",
-        (a: Seq[Double], b: Seq[Double]) => math.sqrt(s(a).zip(b).map { case (x, y) => (x - y) * (x - y) }.foldLeft(0.0)(_ + _)))
-      spark.udf.register("cosine_distance", (a: Seq[Double], b: Seq[Double]) => {
-        val ip = s(a).zip(b).map { case (x, y) => x * y }.foldLeft(0.0)(_ + _)
-        1.0 - ip / (math.sqrt(a.map(x => x * x).foldLeft(0.0)(_ + _)) *
-          math.sqrt(b.map(x => x * x).foldLeft(0.0)(_ + _)))
-      })
-    }
-    def create(name: String, body: String): Unit = spark.sql(
-      s"""CREATE OR REPLACE TEMPORARY FUNCTION $name(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>)
-          RETURNS DOUBLE RETURN $body""")
-    try {
-    create("inner_product",
-      "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-    create("l1_distance",
-      "aggregate(zip_with(a, b, (x, y) -> abs(x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-    create("l2_distance",
-      "sqrt(aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v))")
-    create("cosine_distance",
+  /** SQL surface; the RETURN bodies mirror the Column helpers exactly. */
+  def sqlDefs: Seq[String] = Seq(
+    "inner_product" ->
+      "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)",
+    "l1_distance" ->
+      "aggregate(zip_with(a, b, (x, y) -> abs(x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)",
+    "l2_distance" ->
+      "sqrt(aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v))",
+    "cosine_distance" ->
       """1.0 - aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)
              / (sqrt(aggregate(transform(a, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v))
-              * sqrt(aggregate(transform(b, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v)))""")
+              * sqrt(aggregate(transform(b, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v)))""",
     // similarity form — NOT 1-cosine_distance (that round-trips through
     // two IEEE subtractions and can differ in the last ulp)
-    create("cosine_sim",
+    "cosine_sim" ->
       """aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)
              / (sqrt(aggregate(transform(a, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v))
-              * sqrt(aggregate(transform(b, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v)))""")
-    } catch {
-      case _: org.apache.spark.sql.catalyst.parser.ParseException => fallback()
-    }
+              * sqrt(aggregate(transform(b, x -> x * x), CAST(0 AS DOUBLE), (acc, v) -> acc + v)))"""
+  ).map { case (name, body) =>
+    s"$name(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) RETURNS DOUBLE RETURN $body"
   }
 }

@@ -505,7 +505,6 @@ object StreamQueries {
     // overwrites its own batch=N partition dir.
     "stream_corpus_dedup" -> ((s, dir) => {
       import graft.ops.Dedup
-      graft.GraftSession.install(s)
       val (ckpt, out) = fresh("corpus_dedup")
       val (_, stage) = fresh("corpus_dedup_src")
       val docs = graft.Tables.load(s, dir, "documents")

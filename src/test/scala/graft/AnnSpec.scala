@@ -63,7 +63,6 @@ class AnnSpec extends AnyFunSuite {
   test("cross-set minhash pairs == union pairs restricted to the split") {
     import org.apache.spark.sql.functions._
     import graft.ops.Dedup
-    GraftSession.install(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .filter(col("doc_id") < 3000)
     val corpus = docs.filter(col("doc_id") % 3 =!= 0)

@@ -9,7 +9,6 @@ class GraftFacadeSpec extends AnyFunSuite {
   import TestSpark._
 
   test("facade: sql functions + models + ops reachable") {
-    Graft.install(spark)
     Graft.registerTables(spark, sf)
     assert(spark.sql(
       "SELECT bitmap_count(bitmap_agg(c_custkey)) AS n FROM customer")
@@ -31,7 +30,6 @@ class GraftFacadeSpec extends AnyFunSuite {
   }
 
   test("facade: IVF search, batch decode, named datetime/HOF functions") {
-    Graft.install(spark)
     Graft.registerTables(spark, sf)
     val emb = Tables.load(spark, sf, "embeddings")
     val ivf = Graft.annTopKIvf(emb, emb.filter(col("vec_id") < 2),
@@ -60,7 +58,6 @@ class GraftFacadeSpec extends AnyFunSuite {
   }
 
   test("facade: week() pins MySQL mode-0 vectors incl. Sunday-start years") {
-    Graft.install(spark)
     // Pinned MySQL WEEK(d, 0) outputs (independent of the SQL-UDF
     // arithmetic; ADVICE r03 — 2017/2023 start on Sunday, so there is
     // no week 0 and Jan 1-7 are week 1)
@@ -101,7 +98,6 @@ class GraftFacadeSpec extends AnyFunSuite {
   }
 
   test("facade: reference edge semantics — sub_bitmap, bitmap_from_string, murmur seed") {
-    Graft.install(spark)
     // sub_bitmap: negative offset counts from the end; out-of-range and
     // non-positive limits are NULL (BitmapValue::offset_limit contract)
     val bm = spark.sql("""

@@ -39,7 +39,6 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     "ml_dedup_incremental")
 
   test("31 representative queries are shuffle-partition invariant (3 vs 32)") {
-    GraftSession.install(spark) // session-scoped UDF surface (idempotent)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     def runAt(n: String, key: String) = {
       spark.conf.set("spark.sql.shuffle.partitions", n)

@@ -7,11 +7,7 @@ import graft.plans.QualifySql
   * injected parser (reference: LogicalQualify/QualifyToFilter). */
 class QualifySpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = GraftSession.local(4)
-    GraftSession.install(s)
-    s
-  }
+  private lazy val spark = GraftSession.local(4)
 
   test("no QUALIFY: text passes through untouched (same reference)") {
     val q = "SELECT a FROM t WHERE b = 'plain' ORDER BY a"

@@ -83,7 +83,6 @@ class SearchDslSpec extends AnyFunSuite {
 
   test("score() SQL name: BM25 under the search predicate; helpful error without one") {
     import TestSpark._
-    GraftSession.install(spark)
     graft.Tables.registerAll(spark, sf)
     val top = spark.sql("""
       SELECT doc_id, round(score(), 6) AS relevance
@@ -109,7 +108,6 @@ class SearchDslSpec extends AnyFunSuite {
   test("search() column filters like the hand-built predicate") {
     import TestSpark._
     import org.apache.spark.sql.functions._
-    GraftSession.install(spark) // tokenize/match_* session registrations
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val viaDsl = docs.where(SearchDsl.search("text:slow AND NOT lang:EXACT(zh)")).count()
     val byHand = docs.where(
