@@ -75,6 +75,25 @@ object GraftSession {
       Int.MaxValue.toString)
     .config("spark.sql.cbo.enabled", "true")
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    // Whole-stage codegen stands in for precompiled vectorized kernels,
+    // so a class the engine reuses must stay compiled. Spark keeps the
+    // compiled classes in one JVM-wide cache capped at 100 entries. One
+    // perfbench `analytics` pass needs 146 distinct classes and a
+    // `lakehouse_dml` pass about 127. At the default a timed pass
+    // compiled 37-122 classes (`analytics`) and 7-57 (`lakehouse_dml`)
+    // on a 4-core host, most of them compiled the pass before; at 1024
+    // a pass compiles only a statement shape's first run. 100 thrashes
+    // even below a working set of 100: the cache is a segmented Guava
+    // cache that evicts per segment, so it can evict before it holds
+    // its cap. 1024 is about 7x either working set; the cost is
+    // Metaspace for the classes kept. The 146 classes belong to
+    // distinct plan shapes, so no plan edit brings the set under 100.
+    // This is a static conf that Spark reads once per JVM, when the
+    // `CodeGenerator` object initializes (`SQLConf.get` in its static
+    // initializer, spark-catalyst 4.1.2). It takes effect only if a
+    // session built here exists before the JVM's first codegen;
+    // CodegenCacheSpec pins it.
+    .config("spark.sql.codegen.cache.maxEntries", "1024")
     .config("spark.ui.enabled", "false")
     .withExtensions(new GraftExtensions)
   }

@@ -399,8 +399,12 @@ object Dedup {
           min(when(col("e.dst") === col("e.src"), col("l.lab"))).as("old"))
         .select(col("src"), col("nlab").as("lab"),
           (col("nlab") =!= col("old")).as("chg"))
-      val next2 = pre.localCheckpoint(eager = true)
-      changed = next2.filter(col("chg")).count()
+      // the changed labels are counted inside the checkpoint's own job,
+      // as an observed metric: a filter + count after it ran two more
+      // jobs per round
+      val observed = pre.observe(s"cc_changed_$i", count_if(col("chg")))
+      val next2 = observed.localCheckpoint(eager = true)
+      changed = observed.queryExecution.observedMetrics(s"cc_changed_$i").getLong(0)
       labels = next2.select(col("src"), col("lab"))
       i += 1
     }

@@ -26,7 +26,7 @@ import graft.ops.{DeltaLite, DeltaWriter, HudiLite, IcebergLite, IcebergWriter, 
   * `_graft_table.json` sidecar written at CREATE, so INSERT/SELECT
   * need only the name. Writes execute eagerly during the parse
   * pre-pass (the RecursiveSql precedent) and the statement resolves to
-  * `SELECT <version> AS committed_version`; reads substitute each
+  * a one-row `committed_version` table ([[answer]]); reads substitute each
   * reference with a temp view over the format's independent read path
   * (snapshot semantics: the view is re-registered per statement).
   * Paimon without PRIMARY KEY creates an append-only table.
@@ -916,6 +916,15 @@ object LakehouseSql {
   def rewrite(spark: SparkSession, sql: String): String =
     rewriteResolved(spark, mergeSubqueryPrepass(spark, sql))
 
+  /** The one-row answer of a write statement, e.g. its
+    * `committed_version`. Spelled as an inline table, which Spark plans
+    * as a LocalTableScan and runs without generated code: a one-row
+    * SELECT of the value plans as a Project whose generated class
+    * inlines the literal, so each new version compiled new classes. */
+  private def answer(value: Any, column: String = "committed_version",
+                     sqlType: String = "BIGINT"): String =
+    s"SELECT * FROM VALUES (CAST($value AS $sqlType)) AS t($column)"
+
   private def rewriteResolved(spark: SparkSession, sql: String): String = sql match {
     case CreateRe(orReplace, ifNotExists, fmt, name, pkRaw, partRaw, select) =>
       val dir = tableDir(spark, fmt, name)
@@ -925,7 +934,7 @@ object LakehouseSql {
         "OR REPLACE and IF NOT EXISTS are mutually exclusive")
       if (exists && ifNotExists != null)
         // standard DDL: an existing table is a successful no-op
-        return "SELECT CAST(-1 AS BIGINT) AS committed_version"
+        return answer(-1)
       require(!exists || orReplace != null,
         s"table graft_$fmt.$name already exists (use CREATE OR REPLACE)")
       if (exists) org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
@@ -973,7 +982,7 @@ object LakehouseSql {
       if (fmt == "paimon") PaimonWriter.createEmpty(spark, dir, created.schema)
       val version = appendTo(spark, fmt, dir, props, created, create = true)
       writeProps(dir, props)
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
 
     case CreateEmptyRe(orReplace, ifNotExists, fmt, name, colsRaw, pkRaw, partRaw) =>
       // standard DDL: CREATE TABLE t (cols...) with no AS SELECT — an
@@ -988,7 +997,7 @@ object LakehouseSql {
       require(orReplace == null || ifNotExists == null,
         "OR REPLACE and IF NOT EXISTS are mutually exclusive")
       if (exists && ifNotExists != null)
-        return "SELECT CAST(-1 AS BIGINT) AS committed_version"
+        return answer(-1)
       require(!exists || orReplace != null,
         s"table graft_$fmt.$name already exists (use CREATE OR REPLACE)")
       if (exists) org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
@@ -1063,7 +1072,7 @@ object LakehouseSql {
             dir, ".hoodie", "schema.json"), schema.json)
       }
       writeProps(dir, props)
-      "SELECT CAST(0 AS BIGINT) AS committed_version"
+      answer(0)
 
     case TruncatePartRe(fmt, name, colName, qv, bv) =>
       // TRUNCATE one partition, metadata-only: Iceberg rewrites only
@@ -1092,7 +1101,7 @@ object LakehouseSql {
           else DeltaWriter.deleteWhere(spark, dir, pred)
         case _ => HudiLite.truncatePartition(dir, v, nextInstant(dir))
       }
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
 
     case TruncateRe(fmt, name) =>
       // TRUNCATE TABLE: all rows gone in ONE atomic commit (Delta
@@ -1107,7 +1116,7 @@ object LakehouseSql {
         case "paimon" => PaimonWriter.truncate(spark, dir)
         case "hudi" => HudiLite.truncateTable(dir, nextInstant(dir))
       }
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
 
     case InsertOverwriteRe(fmt, name, select) =>
       // atomic full replace: Delta commits removes+adds in ONE commit,
@@ -1143,7 +1152,7 @@ object LakehouseSql {
             p.partCol.get, instant, partTransform = p.partTransform)
           instant.toLong
       }
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
 
     case InsertColsRe(fmt, name, colsRaw, select) =>
       // INSERT INTO t (a, b) SELECT/VALUES ...: standard column-subset
@@ -1171,7 +1180,7 @@ object LakehouseSql {
         (if (cols.contains(f.name)) col(f.name).cast(f.dataType)
         else lit(null).cast(f.dataType)).as(f.name)): _*)
       val version = appendTo(spark, fmt, dir, p, aligned, create = false)
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
 
     case InsertRe(fmt, name, select) =>
       val dir = tableDir(spark, fmt, name)
@@ -1197,7 +1206,7 @@ object LakehouseSql {
         org.apache.spark.sql.functions.col(f.name).cast(f.dataType)
           .as(f.name)): _*)
       val version = appendTo(spark, fmt, dir, p, aligned, create = false)
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
     case DeleteAllRe(fmt, name) =>
       // delete-all routes through the row-level machinery with a TRUE
       // predicate — the change feed ships every row as a delete, the
@@ -1229,8 +1238,7 @@ object LakehouseSql {
       if (reader(spark, fmt, dir, p, None, prune, name, mfPrune)
           .filter(org.apache.spark.sql.functions.expr(cond))
           .limit(1).count() == 0)
-        return s"SELECT CAST(${graft.streaming.CdfFeed.coordinate(spark, fmt, dir)} " +
-          "AS BIGINT) AS committed_version"
+        return answer(graft.streaming.CdfFeed.coordinate(spark, fmt, dir))
       // each format's native row-delete spelling: Iceberg position
       // deletes, Delta deletion vectors, Paimon -D retraction rows,
       // Hudi delete blocks. The non-iceberg formats store TRANSFORMED
@@ -1263,7 +1271,7 @@ object LakehouseSql {
           HudiLite.deleteKeys(spark, dir, keys, p.keyCols, instant)
           instant.toLong
       }
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
     case DescribeRe(fmt, name) =>
       // DESCRIBE: (col_name, data_type, comment) — comments mark the
       // partition column and PRIMARY KEY membership
@@ -1385,7 +1393,7 @@ object LakehouseSql {
         s"table graft_$fmt.$name does not exist (use DROP TABLE IF EXISTS)")
       if (exists)
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)): Unit
-      s"SELECT ${exists} AS dropped"
+      answer(exists, "dropped", "BOOLEAN")
 
     case DropStreamRe(streamName) =>
       val f = streamFile(spark, streamName)
@@ -1577,7 +1585,7 @@ object LakehouseSql {
         case "paimon" => PaimonWriter.expireSnapshots(dir, keep).size
         case "hudi" => HudiLite.clean(dir).size
       }
-      s"SELECT CAST($reclaimed AS BIGINT) AS reclaimed_files"
+      answer(reclaimed, "reclaimed_files")
 
     case RestoreRe(name, v) =>
       // Delta RESTORE TABLE ... TO VERSION AS OF n: one metadata commit
@@ -1585,7 +1593,7 @@ object LakehouseSql {
       val dir = tableDir(spark, "delta", name)
       readProps(dir): Unit
       val version = DeltaWriter.restore(spark, dir, v.toLong)
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
 
     case UpdateRe(fmt, name, setsRaw, cond) =>
       // UPDATE ... SET ... WHERE: matched rows re-land updated, spelled
@@ -1615,8 +1623,7 @@ object LakehouseSql {
       val updated = cur.filter(expr(cond)).select(cur.columns.toSeq.map(c =>
         setMap.get(c).map(e => expr(e).as(c)).getOrElse(col(c))): _*)
       if (updated.limit(1).count() == 0)
-        s"SELECT CAST(${graft.streaming.CdfFeed.coordinate(spark, fmt, dir)} " +
-          "AS BIGINT) AS committed_version"
+        answer(graft.streaming.CdfFeed.coordinate(spark, fmt, dir))
       else {
         val identityPrune: Option[String => Boolean] = prune.map(_.pred)
           .filter(_ => p.partCol.isDefined && p.partTransform == "identity")
@@ -1642,7 +1649,7 @@ object LakehouseSql {
           case "hudi" | "paimon" =>
             applyUpsert(spark, fmt, dir, p, updated)
         }
-        s"SELECT CAST($version AS BIGINT) AS committed_version"
+        answer(version)
       }
 
     case MergeRe(fmt, name, tAliasRaw, subqRaw, srcViewRaw, sAliasRaw, cond,
@@ -1971,8 +1978,7 @@ object LakehouseSql {
       val hasInserts = insertDf.exists(_.limit(1).count() == 1)
       if (!hasUpdated && !hasDeleted && !hasInserts)
         // zero-match MERGE is a successful no-op (standard SQL)
-        return s"SELECT CAST(${graft.streaming.CdfFeed.coordinate(spark, fmt, dir)} " +
-          "AS BIGINT) AS committed_version"
+        return answer(graft.streaming.CdfFeed.coordinate(spark, fmt, dir))
       // the positional writers' matched set: the claimed rows'
       // (file, pos) straight from the persisted join frame — the
       // writer's lazily-built scan argument is never executed
@@ -2075,7 +2081,7 @@ object LakehouseSql {
               sys.error("unreachable: zero-match MERGE is handled above")
           }
       }
-      s"SELECT CAST($version AS BIGINT) AS committed_version"
+      answer(version)
       } finally {
         mat.unpersist(): Unit
         srcMat.unpersist(): Unit

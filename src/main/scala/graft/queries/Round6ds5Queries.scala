@@ -325,12 +325,16 @@ object Round6ds5Queries {
       ORDER BY mgr, avg_monthly_sales, sum_sales, moy
       LIMIT 100""",
 
-    // q67: the big 8-dimension ROLLUP with a per-category sales rank
+    // q67: the big 8-dimension ROLLUP with a per-category sales rank.
+    // Each ascending rank key spells NULLS FIRST, Spark's default:
+    // DuckDB sorts NULLs last, so a ROLLUP subtotal that ties its
+    // detail row on sales ranked differently on the two engines
     "ds_rollup8_rank" -> """
       SELECT * FROM (
         SELECT p_type, p_brand, p_name, d_year, qoy, moy, s_name, sumsales,
-               rank() OVER (PARTITION BY p_type ORDER BY sumsales DESC, p_brand, p_name,
-                            d_year, qoy, moy, s_name) AS rk
+               rank() OVER (PARTITION BY p_type ORDER BY sumsales DESC,
+                            p_brand NULLS FIRST, p_name NULLS FIRST, d_year NULLS FIRST,
+                            qoy NULLS FIRST, moy NULLS FIRST, s_name NULLS FIRST) AS rk
         FROM (SELECT p_type, p_brand, p_name, year(l_shipdate) AS d_year,
                      quarter(l_shipdate) AS qoy, month(l_shipdate) AS moy, s_name,
                      CAST(SUM(coalesce(CAST(l_extendedprice AS DECIMAL(16,2))

@@ -111,6 +111,38 @@ class LakehousePlanSpec extends AnyFunSuite {
     assert(got.getLong(0) == 168L && got.getLong(1) == 168L, s"$got")
   }
 
+  test("after a table's first INSERT, later INSERTs compile no new " +
+    "generated class, on all four formats") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val ddl = Map(
+      "iceberg" -> "PRIMARY KEY (k) PARTITIONED BY (p)",
+      "delta" -> "PARTITIONED BY (p)",
+      "paimon" -> "PRIMARY KEY (p, k) PARTITIONED BY (p)",
+      "hudi" -> "PRIMARY KEY (k) PARTITIONED BY (p)")
+    def batch(from: Int) = (from until from + 8).map(k =>
+      s"($k, 'p${k % 2}', $k)").mkString(", ")
+    spark.sql(s"SELECT * FROM VALUES ${batch(0)} AS t(k, p, v)")
+      .createOrReplaceTempView("lkplan_cg")
+    for ((f, d) <- ddl.toSeq.sortBy(_._1)) {
+      val t = s"graft_$f.lkplan_cg"
+      spark.sql(s"CREATE OR REPLACE TABLE $t $d AS SELECT * FROM lkplan_cg").collect()
+      // each statement's answer runs to the noop sink, as perfbench's do
+      def insert(i: Int): Unit = {
+        spark.sql(s"SELECT * FROM VALUES ${batch(i * 8)} AS t(k, p, v)")
+          .createOrReplaceTempView("lkplan_cg_ins")
+        spark.sql(s"INSERT INTO $t SELECT * FROM lkplan_cg_ins")
+          .write.format("noop").mode("overwrite").save()
+      }
+      insert(1)
+      val before = compiles
+      insert(2)
+      insert(3)
+      assert(compiles - before == 0L, s"classes compiled by the $f INSERTs")
+      assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0) == 32L, f)
+    }
+  }
+
   // a space, `%`, `=` and non-ASCII text: each is spelled differently
   // in `_metadata.file_path` than in the table's own file list
   private val awkward = Seq("4-NOT SPECIFIED", "50%off", "a=b", "ünï cødé", "plain")
