@@ -402,9 +402,9 @@ object Dedup {
       // the changed labels are counted inside the checkpoint's own job,
       // as an observed metric: a filter + count after it ran two more
       // jobs per round
-      val observed = pre.observe(s"cc_changed_$i", count_if(col("chg")))
+      val observed = pre.observe("cc_changed", count_if(col("chg")))
       val next2 = observed.localCheckpoint(eager = true)
-      changed = observed.queryExecution.observedMetrics(s"cc_changed_$i").getLong(0)
+      changed = observed.queryExecution.observedMetrics("cc_changed").getLong(0)
       labels = next2.select(col("src"), col("lab"))
       i += 1
     }
