@@ -6,7 +6,8 @@
 # results) — the DuckDB oracle over every declared query at sf0.01
 # (Verify, then scripts/oracle_check.py, which exits 1 on any bad key)
 # and one untimed perfbench run per workload, which must
-# build, run and end with "correct": true. Each stage's exit code is
+# build, run, end with "correct": true and keep its JIT code cache
+# under 90% full. Each stage's exit code is
 # printed and the script exits non-zero if ANY stage failed, so
 # "bash scripts/gates.sh" is the whole CI-style verdict.
 #
@@ -42,15 +43,34 @@ oracle() {
 }
 run oracle oracle
 
+# The engine's JIT code cache must keep headroom over its compiled
+# working set: near full, the sweeper flushes compiled methods that
+# later passes compile again, and when full the JVM stops compiling.
+# Reads the JVM's -XX:+PrintCodeCache exit report from a run's log and
+# fails when a heap's max_used reaches 90% of its size.
+codecache() { # log
+  local lines
+  if grep -q 'CodeCache is full' "$1"; then echo "$1: CodeCache is full"; return 1; fi
+  lines="$(grep -E 'size=[0-9]+Kb .*max_used=[0-9]+Kb' "$1")" ||
+    { echo "$1: no code cache report"; return 1; }
+  echo "$lines"
+  awk '{ for (i = 1; i <= NF; i++) { split($i, kv, "="); v[kv[1]] = kv[2] + 0 }
+         if (v["max_used"] >= 0.9 * v["size"]) bad = 1 }
+       END { exit bad }' <<<"$lines"
+}
+
 # perfbench compiles against GraftSession.local/install, SparkEntry and
 # Tables: a run that fails to build, throws, or checks an output wrong
-# fails the stage. The verdict is the last stdout line's "correct".
+# fails the stage. The verdict is the last stdout line's "correct",
+# and then the code cache's headroom in the run's log.
 perfbench() {
   local w last rc=0
   for w in analytics lakehouse_dml; do
-    last="$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 0 --trace 0 | tail -n 1)"
+    last="$(JAVA_TOOL_OPTIONS=-XX:+PrintCodeCache python3 perfbench/run.py \
+      --workload "$w" --seed 1 --seconds 0 --trace 0 | tail -n 1)"
     echo "$w: $last"
     case "$last" in *'"correct": true'*) ;; *) rc=1 ;; esac
+    codecache "perfbench/work/runs/$w-s1-t0.log" || rc=1
   done
   return $rc
 }

@@ -34,14 +34,19 @@ object TextOps {
   }
 
   /** quality score in [0,1]: token volume, lexical diversity, mean
-    * token length (the shape of Doris-era heuristic quality filters). */
+    * token length (the shape of Doris-era heuristic quality filters).
+    * Rounded as a DECIMAL: `round(double, 6)` breaks a tie one way in
+    * Spark (HALF_UP on the double's shortest decimal form) and the
+    * other in DuckDB (scales by 10^6 first), so the oracle casts the
+    * same way. */
   def qualityScore(text: Column): Column = {
     val ws = split(text, " ")
     val n = size(ws).cast("double")
     val diversity = size(array_distinct(ws)).cast("double") / n
     val avgLen = aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("double") / n
-    round(least(lit(1.0), n / 50.0) * 0.4 + diversity * 0.3 +
-      least(lit(1.0), avgLen / 8.0) * 0.3, 6)
+    val q = least(lit(1.0), n / 50.0) * 0.4 + diversity * 0.3 +
+      least(lit(1.0), avgLen / 8.0) * 0.3
+    round(q.cast("decimal(18,10)"), 6).cast("double")
   }
 
   /** whitespace token count + BPE-ish subword count (alpha runs,

@@ -400,10 +400,10 @@ object MlQueries {
     "ml_text_stats" -> """
       SELECT doc_id, len(string_split(text, ' ')) AS n_ws,
         len(regexp_extract_all(text, '[a-z]+|[A-Z][a-z]*|[0-9]+|[^a-zA-Z0-9 ]')) AS n_sub,
-        round(least(1.0, len(string_split(text, ' ')) / 50.0) * 0.4
+        CAST(round(CAST(least(1.0, len(string_split(text, ' ')) / 50.0) * 0.4
           + (len(list_distinct(string_split(text, ' ')))::DOUBLE / len(string_split(text, ' '))) * 0.3
           + least(1.0, (list_sum(list_transform(string_split(text, ' '), w -> length(w)))::DOUBLE
-                        / len(string_split(text, ' '))) / 8.0) * 0.3, 6) AS q,
+                        / len(string_split(text, ' '))) / 8.0) * 0.3 AS DECIMAL(18,10)), 6) AS DOUBLE) AS q,
         list_reduce(list_prepend(CAST(0 AS BIGINT),
           list_transform(string_split(text, ' '),
             w -> CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT))),

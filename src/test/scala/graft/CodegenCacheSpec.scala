@@ -1,5 +1,8 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import com.sun.management.{HotSpotDiagnosticMXBean, VMOption}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `CodeGenerator` first initializes; it holds here because every test
   * session comes from `GraftSession.local` (TestSpark) before any
   * query runs. At Spark's default of 100 entries the second run
-  * recompiles dozens of classes. */
+  * recompiles dozens of classes. The JVM's JIT code cache, which
+  * holds what HotSpot compiles, is sized by the build's JVM options
+  * (`build.sbt` `javaOptions`), and this forked test JVM gets them. */
 class CodegenCacheSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -24,6 +29,14 @@ class CodegenCacheSpec extends AnyFunSuite {
 
   test("the session carries the engine's codegen cache cap") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024")
+  }
+
+  test("the JVM runs with the code cache the build declares") {
+    val opt = ManagementFactory.getPlatformMXBean(classOf[HotSpotDiagnosticMXBean])
+      .getVMOption("ReservedCodeCacheSize")
+    assert(opt.getValue == (240L << 20).toString)
+    assert(opt.getOrigin == VMOption.Origin.VM_CREATION,
+      "set on the JVM's command line, not picked by its ergonomics")
   }
 
   test("the analytics keys compile nothing when run a second time") {

@@ -143,6 +143,46 @@ class LakehousePlanSpec extends AnyFunSuite {
     }
   }
 
+  test("a hudi table in perfbench's shape compiles no new generated class " +
+    "after its first INSERT of new keys, nor after its first update") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val schema = StructType(Seq(StructField("k", LongType), StructField("c", LongType),
+      StructField("p", StringType), StructField("v", DoubleType)))
+    val rng = new scala.util.Random(12)
+    // a key keeps its partition: an update may not move it
+    def rows(keys: Seq[Long]) = spark.createDataFrame(java.util.Arrays.asList(keys.map(k =>
+      Row(k, rng.nextInt(1000000).toLong, Seq("F", "O", "P")((k % 3).toInt),
+        (100000 + rng.nextInt(49900000)) / 100.0)): _*), schema)
+    rows(0L until 1200L).createOrReplaceTempView("lkplan_hcg_base")
+    val t = "graft_hudi.lkplan_hcg"
+    spark.sql(s"CREATE OR REPLACE TABLE $t PRIMARY KEY (k) PARTITIONED BY (p) " +
+      "AS SELECT * FROM lkplan_hcg_base").collect()
+    // one perfbench pass on the table: an INSERT, then the aggregate read
+    def cycle(keys: Seq[Long]): Unit = {
+      rows(keys).createOrReplaceTempView("lkplan_hcg_ins")
+      Seq(s"INSERT INTO $t SELECT * FROM lkplan_hcg_ins",
+        s"SELECT p, count(*) AS n, sum(c) AS s_ck, " +
+          s"CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s_tp FROM $t GROUP BY p")
+        .foreach(spark.sql(_).write.format("noop").mode("overwrite").save())
+    }
+    def fresh(i: Int) = (0 until 200).map(1000000000L + i * 200 + _)
+    cycle(fresh(0))
+    val before = compiles
+    (1 to 4).foreach(i => cycle(fresh(i)))
+    assert(compiles - before == 0L, "classes compiled by INSERTs of new keys")
+    // an update opens the file groups through the key index, as a new
+    // key does when a bloom sidecar falsely claims it
+    cycle(0L until 200L)
+    val beforeUpdates = compiles
+    cycle(200L until 400L)
+    assert(compiles - beforeUpdates == 0L, "classes compiled by updates")
+    val got = spark.sql(s"SELECT count(*), count(DISTINCT k) FROM $t").head()
+    assert(got.getLong(0) == 2200L && got.getLong(1) == 2200L, s"$got")
+  }
+
   // a space, `%`, `=` and non-ASCII text: each is spelled differently
   // in `_metadata.file_path` than in the table's own file list
   private val awkward = Seq("4-NOT SPECIFIED", "50%off", "a=b", "ünï cødé", "plain")
