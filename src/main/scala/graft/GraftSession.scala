@@ -98,13 +98,17 @@ object GraftSession {
     .withExtensions(new GraftExtensions)
   }
 
-  /** SPARK_GRAFT_CONF settings, e.g.
-    * "spark.sql.shuffle.partitions=8;spark.x=y" (experiment hook). */
-  private def envConf: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.split("=", 2)).collect {
-        case Array(k, v) => (k.trim, v.trim)
+  /** Settings written "k=v;k2=v2", as SPARK_GRAFT_CONF carries them.
+    * Empty segments are skipped; an entry with no `=` or no key fails
+    * naming it, so a mistyped setting is never silently left out. */
+  private[graft] def parseConf(text: String): Seq[(String, String)] =
+    text.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { entry =>
+      entry.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => (k.trim, v.trim)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$entry' is not key=value")
       }
+    }
 
   /** The one session factory: `local[cores]` with shuffle partitions
     * sized to the core count, the engine config, then `conf` (a caller's
@@ -117,7 +121,7 @@ object GraftSession {
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString))
-    val s = (conf.toSeq ++ envConf)
+    val s = (conf.toSeq ++ sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(parseConf))
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -153,77 +157,43 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // PK-FK / unique join elimination over declared RELY constraints
     // (reference: EliminateJoinByFK.java + EliminateJoinByUnique.java)
     e.injectOptimizerRule(s => new graft.plans.FkJoinEliminationRule(s))
-    // eager aggregation (reference: PushDownAggThroughJoinOneSide.java;
-    // opt-in via spark.graft.eagerAgg.enabled, like Doris's session-
-    // variable-gated exploration rules)
-    e.injectOptimizerRule(s => new graft.plans.EagerAggRule(s))
-    // double-eager aggregation: partials on BOTH join inputs, join
-    // multiplicity restored via per-group counts (reference:
-    // PushDownAggThroughJoin.java; opt-in via
-    // spark.graft.eagerAggBoth.enabled)
-    e.injectOptimizerRule(s => new graft.plans.EagerAggBothRule(s))
+    GraftExtensions.measuredRules.foreach(r => e.injectOptimizerRule(_ => r))
+  }
+}
+
+object GraftExtensions {
+  import graft.plans._
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.catalyst.rules.Rule
+
+  /** Rewrites that run in every session because each measurably helps:
+    * each made its demo query faster on a 25x key-shifted TPC-H set in
+    * at least 9 of 10 interleaved pairs (CHANGES.md has the figures).
+    * RuleDifferentialSpec checks them against Spark's plans with the
+    * same rules excluded. */
+  val measuredRules: Seq[Rule[LogicalPlan]] = Seq(
     // outer-join + equi-key IS NULL filter -> anti join (reference:
-    // ConvertOuterJoinToAntiJoin.java; opt-in via
-    // spark.graft.outerToAnti.enabled)
-    e.injectOptimizerRule(s => new graft.plans.OuterToAntiRule(s))
-    // correlated scalar-agg subquery -> window over a single scan
-    // (reference: AggScalarSubQueryToWindowFunction.java; opt-in via
-    // spark.graft.scalarAggWindow.enabled)
-    e.injectOptimizerRule(s => new graft.plans.ScalarAggToWindowRule(s))
-    // N exact percentiles over one column -> one array-percentile buffer
-    // (reference: MergePercentileToArray.java; opt-in via
-    // spark.graft.mergePercentile.enabled)
-    e.injectOptimizerRule(s => new graft.plans.MergePercentileRule(s))
+    // ConvertOuterJoinToAntiJoin.java)
+    OuterToAntiRule,
     // drop the UNION dedup aggregate when RELY-unique branches carry
     // pairwise-distinct literal tags (reference:
-    // InferSetOperatorDistinct.java; opt-in via
-    // spark.graft.inferSetOpDistinct.enabled)
-    e.injectOptimizerRule(s => new graft.plans.InferSetOpDistinctRule(s))
-    // (a1 JOIN r) UNION ALL (a2 JOIN r) -> (a1 UNION ALL a2) JOIN r
-    // (reference: PullUpJoinFromUnionAll.java; opt-in via
-    // spark.graft.pullUpUnionJoin.enabled)
-    e.injectOptimizerRule(s => new graft.plans.PullUpUnionJoinRule(s))
-    // GROUP BY a RELY-unique key over one scan -> stateless projection
-    // (reference: EliminateGroupByKey.java + EliminateAggregate.java;
-    // opt-in via spark.graft.aggByUnique.enabled)
-    e.injectOptimizerRule(s => new graft.plans.AggByUniqueRule(s))
-    // ORDER BY graft_l2sq(col, const) LIMIT k over a vector-indexed
-    // table -> EXACT triangle-inequality-pruned cell scan (reference:
-    // PushDownVectorTopNIntoOlapScan.java; opt-in via
-    // spark.graft.vectorTopN.enabled)
-    e.injectOptimizerRule(s => new graft.plans.VectorTopNRule(s))
+    // InferSetOperatorDistinct.java)
+    InferSetOpDistinctRule,
     // GROUP BY coarse over (GROUP BY fine) -> one aggregate when every
     // outer call derives from the inner partials (reference:
-    // MergeAggregate.java; opt-in via spark.graft.mergeAggregate.enabled)
-    e.injectOptimizerRule(s => new graft.plans.MergeAggregateRule(s))
-    // GROUP BY k, f(k) -> GROUP BY k (reference: SimplifyAggGroupBy.java;
-    // opt-in via spark.graft.simplifyAggGroupBy.enabled)
-    e.injectOptimizerRule(s => new graft.plans.SimplifyAggGroupByRule(s))
+    // MergeAggregate.java)
+    MergeAggregateRule,
     // ORDER BY + LIMIT pushed below outer/cross joins (row-preserved
-    // side) and UNION ALL branches (reference:
-    // PushDownTopNThroughJoin.java + PushDownTopNThroughUnion.java;
-    // opt-in via spark.graft.topnPushdown.enabled)
-    e.injectOptimizerRule(s => new graft.plans.TopNPushdownRule(s))
-    // sum(col + k) -> sum(col) + count(col)*k (SumLiteralRewrite.java)
-    e.injectOptimizerRule(s => new graft.plans.SumLiteralRule(s))
+    // side), and below DISTINCT over such a join or over UNION ALL
+    // (reference: PushDownTopNThroughJoin.java +
+    // PushDownTopNDistinctThrough{Join,Union}.java)
+    TopNPushdownRule,
     // HAVING min(a) < k derives row predicate a < k below the agg, down
-    // to the parquet scan (reference: MaxMinFilterPushDown.java; opt-in
-    // via spark.graft.maxMinFilter.enabled)
-    e.injectOptimizerRule(s => new graft.plans.MaxMinFilterRule(s))
-    // ORDER BY rank-output LIMIT k -> Filter(rank <= k) above the
-    // window, which native InferWindowGroupLimit compiles to a
-    // per-partition group limit (reference: PushDownTopNThroughWindow
-    // .java; opt-in via spark.graft.topnWindow.enabled)
-    e.injectOptimizerRule(s => new graft.plans.TopNWindowRule(s))
+    // to the parquet scan (reference: MaxMinFilterPushDown.java)
+    MaxMinFilterRule,
     // derive per-column pushable predicates from OR-of-AND filters so
     // untranslatable legs stop blanking PushedFilters (reference:
     // ExtractSingleTableExpressionFromDisjunction.java /
-    // InferInPredicateFromOr.java; opt-in via
-    // spark.graft.orExtract.enabled)
-    e.injectOptimizerRule(s => new graft.plans.OrExtractRule(s))
-    // transitive range inference through non-equi comparison chains
-    // (reference: UnequalPredicateInfer.java; opt-in via
-    // spark.graft.unequalInfer.enabled)
-    e.injectOptimizerRule(s => new graft.plans.UnequalPredicateInferRule(s))
-  }
+    // InferInPredicateFromOr.java)
+    OrExtractRule)
 }

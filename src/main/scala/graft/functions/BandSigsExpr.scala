@@ -263,13 +263,9 @@ case class DotProduct(left: Expression, right: Expression)
 /** graft_l2sq(a, b) -> DOUBLE — squared Euclidean distance as one
   * codegen kernel call. Accepts ARRAY<FLOAT> or ARRAY<DOUBLE> on
   * either side (floats widen per element inside the kernel), so the
-  * embeddings scan needs no cast projection. Doubles as the SORT-KEY
-  * MARKER the [[graft.plans.VectorTopNRule]] pattern-matches on: an
-  * `ORDER BY graft_l2sq(col, literal) LIMIT k` over a vector-indexed
-  * table is rewritten to a cell-pruned index scan (reference:
-  * PushDownVectorTopNIntoOlapScan.java — the FE pushing a top-n by
-  * distance into the ANN index scan). Monotone in true L2, so sorting
-  * by l2sq == sorting by the distance itself, without the sqrt. */
+  * embeddings scan needs no cast projection. Monotone in true L2, so
+  * `ORDER BY graft_l2sq(col, q) LIMIT k` sorts by the distance itself,
+  * without the sqrt. */
 case class L2Squared(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
 

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -24,12 +23,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     UNION pattern).
   *
   * Then `Distinct(Union(...))` == `Union(...)` row-for-row and the
-  * aggregate is dropped. OPT-IN via
-  * `spark.graft.inferSetOpDistinct.enabled`. */
-class InferSetOpDistinctRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.inferSetOpDistinct.enabled").contains("true")
+  * aggregate is dropped. */
+object InferSetOpDistinctRule extends Rule[LogicalPlan] {
 
   /** pure-dedup aggregate: groups on exactly its child's output. */
   private def isDedup(agg: Aggregate): Boolean = {
@@ -83,8 +78,7 @@ class InferSetOpDistinctRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+    plan.transformUp {
       case agg @ Aggregate(_, _, u: Union, _)
           if isDedup(agg) && u.children.size >= 2 &&
             u.children.forall(branchUnique) && disjointTags(u.children) =>

@@ -327,16 +327,14 @@ class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * filters inside a join side bail — the MV pre-joined unfiltered
     * rows — EXCEPT IsNotNull guards on the join keys themselves, which
     * the optimizer infers from the inner equi-join and which cannot
-    * change its output. Gated by `spark.graft.mvJoinRewrite.enabled`
-    * (the reference's enable_materialized_view_rewrite session switch):
-    * unlike the single-table rewrite, a join MV can serve ANY
-    * aggregate-over-that-join in the session, so the user opts in. */
+    * change its output. Like the single-table rewrite it applies
+    * whenever a registered join MV matches: creating the MV is the
+    * opt-in. */
   private def tryJoinRewrite(agg: Aggregate, groupExprs: Seq[Expression],
                              aggExprs: Seq[NamedExpression],
                              conjuncts: Seq[Expression],
                              j: Join): Option[LogicalPlan] = j match {
-    case Join(lc, rc, org.apache.spark.sql.catalyst.plans.Inner, Some(cond), _)
-        if spark.conf.getOption("spark.graft.mvJoinRewrite.enabled").contains("true") =>
+    case Join(lc, rc, org.apache.spark.sql.catalyst.plans.Inner, Some(cond), _) =>
       for {
         (lguards, lrel) <- stripSide(lc, Set.empty)
         (rguards, rrel) <- stripSide(rc, Set.empty)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -39,22 +38,16 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   *
   * The HAVING filter is KEPT (the rewrite adds, never moves), so the
   * rewrite is exact. A tag on the Aggregate stops re-derivation inside
-  * the fixpoint batch.
-  *
-  * OPT-IN via `spark.graft.maxMinFilter.enabled`. */
+  * the fixpoint batch. */
 object MaxMinFilter {
   val Derived = TreeNodeTag[Boolean]("graft.maxMinFilter.derived")
 }
 
-class MaxMinFilterRule(spark: SparkSession)
+object MaxMinFilterRule
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.maxMinFilter.enabled").contains("true")
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformDown {
+    plan.transformDown {
       case f @ Filter(cond, agg: Aggregate)
           if agg.getTagValue(MaxMinFilter.Derived).isEmpty =>
         agg.setTagValue(MaxMinFilter.Derived, true)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -30,17 +29,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * NULL on empty input where the fused COUNT is 0); no
   * DISTINCT/FILTER on either level; only Project/SubqueryAlias
   * between the two aggregates. COUNT(*) at the outer level counts
-  * inner GROUPS — not derivable, bail.
-  *
-  * OPT-IN via `spark.graft.mergeAggregate.enabled`. */
-class MergeAggregateRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.mergeAggregate.enabled").contains("true")
+  * inner GROUPS — not derivable, bail. */
+object MergeAggregateRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+    plan.transformUp {
       case outer @ Aggregate(g2, a2, child, _) if g2.nonEmpty =>
         tryMerge(outer, g2, a2, child).getOrElse(outer)
     }

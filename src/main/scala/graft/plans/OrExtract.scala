@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -51,22 +50,16 @@ object OrExtract {
   * which conjunct-list dedup alone would re-add it every iteration.
   * The Doris reference likewise applies this rule exactly once.
   * Native PushDownPredicates then sinks the derived conjuncts to the
-  * scan inside the same operator-optimization batch.
-  *
-  * OPT-IN via `spark.graft.orExtract.enabled`. */
-class OrExtractRule(spark: SparkSession)
+  * scan inside the same operator-optimization batch. */
+object OrExtractRule
     extends Rule[LogicalPlan] with PredicateHelper {
   import OrExtract.Derived
-
-  private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.orExtract.enabled").contains("true")
 
   /** Bail out of pathological predicates instead of enumerating them. */
   private val MaxDisjuncts = 16
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformDown {
+    plan.transformDown {
       case f @ Filter(cond, child) if f.getTagValue(Derived).isEmpty =>
         val conjuncts = splitConjunctivePredicates(cond)
         val derived = conjuncts.collect { case or: Or => deriveFromOr(or) }.flatten

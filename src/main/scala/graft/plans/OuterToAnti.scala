@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -33,15 +32,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * emitted for unmatched rows (all right columns null, same exprIds),
   * so the ORIGINAL filter — including conjuncts referencing right
   * columns — evaluates identically above it and the parent's schema is
-  * untouched. RIGHT OUTER mirrors. OPT-IN via
-  * `spark.graft.outerToAnti.enabled` (Doris applies it by default; this
-  * engine gates every extra rewrite behind the reference's
-  * session-variable discipline).
+  * untouched. RIGHT OUTER mirrors. Runs by default, as in Doris.
   */
-class OuterToAntiRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.outerToAnti.enabled").contains("true")
+object OuterToAntiRule extends Rule[LogicalPlan] {
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(a, b) => conjuncts(a) ++ conjuncts(b)
@@ -70,8 +63,7 @@ class OuterToAntiRule(spark: SparkSession) extends Rule[LogicalPlan] {
     attrs.map(a => Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId))
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+    plan.transformUp {
       case Filter(cond, Join(l, r, LeftOuter, Some(jc), hint))
           if fires(cond, jc, r) =>
         Filter(cond, Project(

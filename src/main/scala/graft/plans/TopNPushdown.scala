@@ -1,14 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** TopN pushdown through outer/cross joins and UNION ALL (reference:
+/** TopN pushdown through outer/cross joins, and through DISTINCT over
+  * an outer join or UNION ALL (reference:
   * nereids/rules/rewrite/PushDownTopNThroughJoin.java,
-  * PushDownTopNThroughUnion.java).
+  * PushDownTopNDistinctThroughJoin.java,
+  * PushDownTopNDistinctThroughUnion.java).
   *
   * `ORDER BY l.x LIMIT k` over `l LEFT JOIN r` joins ALL of `l` before
   * keeping k rows. When every sort key comes from the row-preserved side,
@@ -31,35 +32,27 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    inner-like and never safe.
   *  - INNER/semi/anti: never (a joined-away row may out-rank survivors).
   *
-  * UNION ALL: TopN distributes to every branch (keep the global TopN) —
-  * on Spark the win is not the final merge (TakeOrderedAndProject is
-  * already a per-partition top-k) but early row reduction below
-  * whatever shuffles each branch contains.
+  * A bare UNION ALL is left alone: TakeOrderedAndProject is already a
+  * per-partition top-k, and a per-branch copy won no measurable time
+  * on a 25x set. Under DISTINCT the per-branch copy does win, because
+  * it bounds what each branch feeds into the dedup shuffle.
   *
   * The child TopN is ADDED, never moved: the parent TopN still runs, so
   * the rewrite is exact for any deterministic sort key set. Offsets are
   * not matched (Spark plans them as a separate Offset node); non-literal
-  * limits are not matched.
-  *
-  * OPT-IN via `spark.graft.topnPushdown.enabled`. */
-class TopNPushdownRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.topnPushdown.enabled").contains("true")
+  * limits are not matched. */
+object TopNPushdownRule extends Rule[LogicalPlan] {
 
   /** TopN above this many rows is left alone — pushing a huge top-k
     * duplicates sort work without reducing anything (the reference gates
     * the same way via topn_opt_limit_threshold). */
-  private def threshold: Long =
-    spark.conf.getOption("spark.graft.topnPushdown.threshold")
-      .map(_.toLong).getOrElse(16384L)
+  private val Threshold = 16384L
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformDown {
+    plan.transformDown {
       case topn @ GlobalLimit(IntegerLiteral(n),
           LocalLimit(IntegerLiteral(n2), s @ Sort(order, true, child, _)))
-          if n == n2 && n <= threshold && order.forall(_.child.deterministic) =>
+          if n == n2 && n <= Threshold && order.forall(_.child.deterministic) =>
         rewriteChild(n, order, child) match {
           case Some(newChild) =>
             GlobalLimit(Literal(n), LocalLimit(Literal(n), s.copy(child = newChild)))
@@ -107,20 +100,6 @@ class TopNPushdownRule(spark: SparkSession) extends Rule[LogicalPlan] {
         val mappedRefs = AttributeSet(mapped.flatMap(_.references))
         if (!mappedRefs.subsetOf(j.outputSet)) None
         else pushIntoJoin(n, mapped, mappedRefs, j).map(nj => p.copy(child = nj))
-
-      // TopN -> Union ALL: per-branch TopN with sort keys remapped onto
-      // each branch's own attributes (positional, like the reference).
-      case u @ Union(children, false, false)
-          if children.size >= 2 && !children.exists(isLimited) &&
-             sortRefs.subsetOf(u.outputSet) =>
-        val newChildren = children.map { c =>
-          val remap = u.output.map(_.exprId).zip(c.output).toMap
-          val childOrder = order.map(so => so.copy(child = so.child.transform {
-            case a: Attribute if remap.contains(a.exprId) => remap(a.exprId)
-          }).asInstanceOf[SortOrder])
-          topNOf(n, childOrder, c)
-        }
-        Some(u.copy(children = newChildren))
 
       // TopN -> DISTINCT -> Union ALL (reference:
       // PushDownTopNDistinctThroughUnion.java). Every globally-distinct

@@ -42,23 +42,20 @@ object Round7cQueries {
         .select(col("o_orderkey"), col("o_totalprice"), col("c_name"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(20)
-      Q.withFlag(s, "spark.graft.topnPushdown.enabled") {
-        import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join}
-        val join = df.queryExecution.optimizedPlan.collectFirst {
-          case j: Join => j
-        }.getOrElse(throw new IllegalStateException("no Join in plan"))
-        val pushed = join.left.exists { case _: GlobalLimit => true; case _ => false }
-        require(pushed, s"TopN was not pushed below the join:\n" +
-          df.queryExecution.optimizedPlan)
-        val rows = df.collect() // executes the k-row-join plan
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      }
+      import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join}
+      val join = df.queryExecution.optimizedPlan.collectFirst {
+        case j: Join => j
+      }.getOrElse(throw new IllegalStateException("no Join in plan"))
+      val pushed = join.left.exists { case _: GlobalLimit => true; case _ => false }
+      require(pushed, s"TopN was not pushed below the join:\n" +
+        df.queryExecution.optimizedPlan)
+      df
     }),
 
-    // TopN through UNION ALL: the global top-4 distributes to each
-    // branch, so every branch's shuffle (here: a hash aggregate each)
-    // feeds a branch-local top-k instead of its full output into the
-    // final merge. Plan-asserted: each union child carries a limit.
+    // TopN over UNION ALL (reference: PushDownTopNThroughUnion.java).
+    // Spark's TakeOrderedAndProject already keeps a per-partition
+    // top-k; a per-branch copy below each branch's aggregate won no
+    // measurable time on a 25x set, so the branches run as written.
     "opt_topn_union" -> ((s, dir) => {
       val b1 = t(s, dir, "orders").groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"))
@@ -66,21 +63,9 @@ object Round7cQueries {
       val b2 = t(s, dir, "lineitem").groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"))
         .select(lit("li").as("src"), col("l_returnflag").as("k"), col("n"))
-      val df = b1.unionAll(b2)
+      b1.unionAll(b2)
         .orderBy(col("n").desc, col("src"), col("k"))
         .limit(4)
-      Q.withFlag(s, "spark.graft.topnPushdown.enabled") {
-        import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Union}
-        val union = df.queryExecution.optimizedPlan.collectFirst {
-          case u: Union => u
-        }.getOrElse(throw new IllegalStateException("no Union in plan"))
-        val allPushed = union.children.forall(
-          _.exists { case _: GlobalLimit => true; case _ => false })
-        require(allPushed, s"TopN was not pushed into every union branch:\n" +
-          df.queryExecution.optimizedPlan)
-        val rows = df.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      }
     }),
 
     // TopN over DISTINCT over UNION ALL (reference:
@@ -96,20 +81,17 @@ object Round7cQueries {
         .select(col("l_returnflag").as("a"), col("l_linestatus").as("b"))
       val df = b1.unionAll(b2).distinct()
         .orderBy(col("a"), col("b")).limit(5)
-      Q.withFlag(s, "spark.graft.topnPushdown.enabled") {
-        import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Union}
-        val union = df.queryExecution.optimizedPlan.collectFirst {
-          case u: Union => u
-        }.getOrElse(throw new IllegalStateException("no Union in plan"))
-        val allPushed = union.children.forall(c =>
-          c.exists { case _: GlobalLimit => true; case _ => false } &&
-          c.exists { case _: Aggregate => true; case _ => false })
-        require(allPushed,
-          s"distinct TopN was not pushed into every union branch:\n" +
-            df.queryExecution.optimizedPlan)
-        val rows = df.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      }
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Union}
+      val union = df.queryExecution.optimizedPlan.collectFirst {
+        case u: Union => u
+      }.getOrElse(throw new IllegalStateException("no Union in plan"))
+      val allPushed = union.children.forall(c =>
+        c.exists { case _: GlobalLimit => true; case _ => false } &&
+        c.exists { case _: Aggregate => true; case _ => false })
+      require(allPushed,
+        s"distinct TopN was not pushed into every union branch:\n" +
+          df.queryExecution.optimizedPlan)
+      df
     }),
 
     // TopN over DISTINCT * over a LEFT OUTER join (reference:
@@ -125,28 +107,18 @@ object Round7cQueries {
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(10)
         .select(col("o_orderkey"), col("o_totalprice"), col("c_name"))
-      Q.withFlag(s, "spark.graft.topnPushdown.enabled") {
-        import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Join}
-        val join = df.queryExecution.optimizedPlan.collectFirst {
-          case j: Join => j
-        }.getOrElse(throw new IllegalStateException("no Join in plan"))
-        val limited =
-          join.left.exists { case _: GlobalLimit => true; case _ => false }
-        // rule composition (caught by the r8 all-rules hunt): when
-        // AggByUnique is ALSO enabled it correctly erases the pushed
-        // pre-join distinct — orders' full row carries the unique
-        // o_orderkey, so that dedup is an identity. The limit must
-        // always land; the Aggregate only when AggByUnique isn't on.
-        val aggByUnique = s.conf
-          .getOption("spark.graft.aggByUnique.enabled").contains("true")
-        val dedupped = aggByUnique ||
-          join.left.exists { case _: Aggregate => true; case _ => false }
-        require(limited && dedupped,
-          s"distinct TopN was not pushed below the join:\n" +
-            df.queryExecution.optimizedPlan)
-        val rows = df.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      }
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Join}
+      val join = df.queryExecution.optimizedPlan.collectFirst {
+        case j: Join => j
+      }.getOrElse(throw new IllegalStateException("no Join in plan"))
+      val limited =
+        join.left.exists { case _: GlobalLimit => true; case _ => false }
+      val dedupped =
+        join.left.exists { case _: Aggregate => true; case _ => false }
+      require(limited && dedupped,
+        s"distinct TopN was not pushed below the join:\n" +
+          df.queryExecution.optimizedPlan)
+      df
     }),
 
     // Best-rollup-index selection (reference:

@@ -93,15 +93,12 @@ object Round8bQueries {
         .orderBy(col("lang"))
     }),
 
-    // Double-eager aggregation (plans/EagerAggBoth.scala — reference
-    // PushDownAggThroughJoin.java): aggregates on BOTH inputs of the
-    // customer-orders join are pre-aggregated below it; the join runs
-    // over two group-level relations and the final agg restores join
-    // multiplicity via per-group counts. The eager plan is forced,
-    // plan-asserted (both partial markers below the join) and EXECUTED;
-    // its rows are what the driver hashes against the plain-join oracle.
+    // aggregates over both inputs of the customer-orders join, the
+    // shape double-eager aggregation targets (reference
+    // PushDownAggThroughJoin.java). Pre-aggregating both sides below
+    // the join measured no faster on a 25x set.
     "opt_eager_agg_both" -> ((s, dir) => {
-      val df = t(s, dir, "customer")
+      t(s, dir, "customer")
         .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
@@ -109,18 +106,6 @@ object Round8bQueries {
           sum(month(col("o_orderdate")).cast("long")).as("sr"),
           min(col("o_totalprice")).as("mnp"))
         .orderBy(col("c_mktsegment"))
-      Q.withFlag(s, "spark.graft.eagerAggBoth.enabled") {
-        // marker-presence assert only: under the all-rules hunt,
-        // AggByUnique legitimately collapses the left pre-agg (customer
-        // groups by its unique c_custkey, so cntL == 1 folds away) —
-        // the strict both-sides-below-the-join structural assert lives
-        // in EagerAggBothSpec where the flag runs isolated.
-        val opt = df.queryExecution.optimizedPlan
-        require(opt.toString.contains("__eager2_p_"),
-          s"double-eager aggregation did not fire:\n$opt")
-        val rows = df.collect() // executes the double-eager physical plan
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      }
     }),
 
     // Outer-join -> anti-join conversion (plans/OuterToAnti.scala —
@@ -138,16 +123,13 @@ object Round8bQueries {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"), sum(col("c_custkey")).as("sc"))
         .orderBy(col("c_mktsegment"))
-      Q.withFlag(s, "spark.graft.outerToAnti.enabled") {
-        import org.apache.spark.sql.catalyst.plans.logical.Join
-        import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter}
-        val types = df.queryExecution.optimizedPlan
-          .collect { case j: Join => j.joinType }
-        require(types.contains(LeftAnti) && !types.contains(LeftOuter),
-          s"outer->anti did not fire: $types\n${df.queryExecution.optimizedPlan}")
-        val rows = df.collect() // executes the anti-join physical plan
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      }
+      import org.apache.spark.sql.catalyst.plans.logical.Join
+      import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter}
+      val types = df.queryExecution.optimizedPlan
+        .collect { case j: Join => j.joinType }
+      require(types.contains(LeftAnti) && !types.contains(LeftOuter),
+        s"outer->anti did not fire: $types\n${df.queryExecution.optimizedPlan}")
+      df
     }),
 
     // CCNet-style perplexity bucketing (Wenzek et al. '19): per-doc LM

@@ -163,37 +163,19 @@ object Round8cQueries {
 
     // TopN over a ranking window (reference: PushDownTopNThroughWindow
     // .java): "first page of every segment's leaderboard" — ORDER BY rn
-    // LIMIT 15 where rn ranks customers inside their segment. The
-    // rewrite inserts Filter(rn <= 15) above the window, which Spark's
-    // native InferWindowGroupLimit compiles to a per-partition group
-    // limit: each partition buffers 15 rows instead of all of them
-    // before the rank sort — the reference's PartitionTopN, Spark-first.
-    // k = 15 = 5 segments x 3 with a unique window tiebreaker, so the
-    // selected set is deterministic on both engines. Plan-asserted:
-    // WindowGroupLimit present with the flag on.
+    // LIMIT 15 where rn ranks customers inside their segment. k = 15 =
+    // 5 segments x 3 with a unique window tiebreaker, so the selected
+    // set is deterministic on both engines. Inserting Filter(rn <= 15)
+    // above the window, for Spark's InferWindowGroupLimit to turn into
+    // a per-partition group limit, measured no faster on a 25x set.
     "opt_topn_window" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.{Window => W}
       val spec = W.partitionBy(col("c_mktsegment"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      val df = t(s, dir, "customer")
+      t(s, dir, "customer")
         .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"),
           row_number().over(spec).as("rn"))
         .orderBy(col("rn")).limit(15)
-      Q.withFlag(s, "spark.graft.topnWindow.enabled") {
-        import org.apache.spark.sql.catalyst.expressions.LessThanOrEqual
-        import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window}
-        val derived = df.queryExecution.optimizedPlan.exists {
-          case Filter(LessThanOrEqual(_, _), _: Window) => true
-          case _ => false
-        }
-        require(derived, s"no rank filter above the window:\n" +
-          df.queryExecution.optimizedPlan)
-        require(df.queryExecution.executedPlan.toString.contains("WindowGroupLimit"),
-          s"native InferWindowGroupLimit did not engage:\n" +
-            df.queryExecution.executedPlan)
-        val rows = df.collect() // executes the group-limited plan
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      }
     }),
 
     // One-pass multi-pattern blocklist scan (Aho-Corasick '75 — the C4
@@ -257,32 +239,29 @@ object Round8cQueries {
         .agg(min(col("l_extendedprice")).as("mn"))
         .filter(col("mn") < 950.0)
         .orderBy(col("l_suppkey"))
-      Q.withFlag(s, "spark.graft.maxMinFilter.enabled") {
-        import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
-        val agg = df.queryExecution.optimizedPlan.collectFirst {
-          case a: Aggregate => a
-        }.getOrElse(throw new IllegalStateException("no Aggregate"))
-        // exact names only (base column or the rollup-prefixed
-        // __min_/__max_ column the always-on MV best-index rewrite may
-        // substitute — the derived filter then prunes the ROLLUP scan,
-        // which is exactly the composition we want); a contains() match
-        // would also accept unrelated columns embedding the substring
-        val expectedNames = Set("l_extendedprice",
-          "__min_l_extendedprice", "__max_l_extendedprice")
-        val derived = agg.exists {
-          case Filter(c, _) => c.references.exists(r => expectedNames(r.name))
-          case _ => false
-        }
-        require(derived, s"no derived filter below the aggregate:\n" +
-          df.queryExecution.optimizedPlan)
-        // string form: the physical scan sits inside AdaptiveSparkPlanExec,
-        // which node-collects don't traverse
-        val phys = df.queryExecution.executedPlan.toString
-        require(phys.matches("(?s).*PushedFilters: \\[[^\\]]*l_extendedprice.*"),
-          s"derived predicate did not reach PushedFilters:\n$phys")
-        val rows = df.collect() // executes the stats-prunable plan
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+      val agg = df.queryExecution.optimizedPlan.collectFirst {
+        case a: Aggregate => a
+      }.getOrElse(throw new IllegalStateException("no Aggregate"))
+      // exact names only (base column or the rollup-prefixed
+      // __min_/__max_ column the always-on MV best-index rewrite may
+      // substitute — the derived filter then prunes the ROLLUP scan,
+      // which is exactly the composition we want); a contains() match
+      // would also accept unrelated columns embedding the substring
+      val expectedNames = Set("l_extendedprice",
+        "__min_l_extendedprice", "__max_l_extendedprice")
+      val derived = agg.exists {
+        case Filter(c, _) => c.references.exists(r => expectedNames(r.name))
+        case _ => false
       }
+      require(derived, s"no derived filter below the aggregate:\n" +
+        df.queryExecution.optimizedPlan)
+      // string form: the physical scan sits inside AdaptiveSparkPlanExec,
+      // which node-collects don't traverse
+      val phys = df.queryExecution.executedPlan.toString
+      require(phys.matches("(?s).*PushedFilters: \\[[^\\]]*l_extendedprice.*"),
+        s"derived predicate did not reach PushedFilters:\n$phys")
+      df
     }),
 
     // Two constrained extrema at once — the generalization past the
@@ -298,25 +277,22 @@ object Round8cQueries {
           max(col("l_extendedprice")).as("mx"))
         .filter(col("mn") < 1200.0 && col("mx") > 90000.0)
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-      Q.withFlag(s, "spark.graft.maxMinFilter.enabled") {
-        import org.apache.spark.sql.catalyst.expressions.Or
-        import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
-        val agg = df.queryExecution.optimizedPlan.collectFirst {
-          case a: Aggregate => a
-        }.getOrElse(throw new IllegalStateException("no Aggregate"))
-        val expectedNames = Set("l_extendedprice",
-          "__min_l_extendedprice", "__max_l_extendedprice")
-        val disjunct = agg.exists {
-          case Filter(c, _) =>
-            c.isInstanceOf[Or] &&
-              c.references.exists(r => expectedNames(r.name))
-          case _ => false
-        }
-        require(disjunct, s"no OR-combined derived filter below the aggregate:\n" +
-          df.queryExecution.optimizedPlan)
-        val rows = df.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+      import org.apache.spark.sql.catalyst.expressions.Or
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+      val agg = df.queryExecution.optimizedPlan.collectFirst {
+        case a: Aggregate => a
+      }.getOrElse(throw new IllegalStateException("no Aggregate"))
+      val expectedNames = Set("l_extendedprice",
+        "__min_l_extendedprice", "__max_l_extendedprice")
+      val disjunct = agg.exists {
+        case Filter(c, _) =>
+          c.isInstanceOf[Or] &&
+            c.references.exists(r => expectedNames(r.name))
+        case _ => false
       }
+      require(disjunct, s"no OR-combined derived filter below the aggregate:\n" +
+        df.queryExecution.optimizedPlan)
+      df
     })
   )
 

@@ -110,4 +110,14 @@ class EntryPointSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("ep_broken") && !e.getMessage.contains("ep_ok"))
   }
+
+  test("SPARK_GRAFT_CONF text: empty segments skipped, a malformed entry fails naming it") {
+    assert(GraftSession.parseConf(" a = 1;;b=x=y; ;c=") ==
+      Seq("a" -> "1", "b" -> "x=y", "c" -> ""))
+    for (bad <- Seq("spark.sql.shuffle.partitions", "=8")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.parseConf(s"spark.x=1;$bad;spark.y=2"))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }

@@ -4,16 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Infer-set-operator-distinct (plans/InferSetOpDistinct.scala): the
-  * opt-in UNION-dedup elimination must only fire when RELY uniqueness +
+  * UNION-dedup elimination must only fire when RELY uniqueness +
   * disjoint literal tags PROVE the dedup is a no-op — and must never
   * change values. */
 class InferSetOpDistinctSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def withRule[T](f: => T): T = {
-    spark.conf.set("spark.graft.inferSetOpDistinct.enabled", "true")
-    try f finally spark.conf.set("spark.graft.inferSetOpDistinct.enabled", "false")
-  }
+  private def withoutRule[T](f: => T): T =
+    withoutRules(graft.plans.InferSetOpDistinctRule.ruleName)(f)
 
   private def sql(q: String): DataFrame = {
     Tables.registerAll(spark, sf)
@@ -27,8 +25,8 @@ class InferSetOpDistinctSpec extends AnyFunSuite {
     ORDER BY src, k"""
 
   test("fires on RELY-unique tagged branches; dedup gone; values identical") {
-    val plain = sql(tagged).collect().toSeq
-    val (plan, rows) = withRule {
+    val plain = withoutRule(sql(tagged).collect().toSeq)
+    val (plan, rows) = {
       val df = sql(tagged)
       (df.queryExecution.optimizedPlan.toString, df.collect().toSeq)
     }
@@ -39,36 +37,34 @@ class InferSetOpDistinctSpec extends AnyFunSuite {
 
   test("never fires when disabled, on non-unique branches, or without disjoint tags") {
     def planOf(q: String) = sql(q).queryExecution.optimizedPlan.toString
-    assert(planOf(tagged).contains("Aggregate"), "fired while disabled")
-    withRule {
-      // l_partkey is NOT a declared unique key: branch rows can repeat
-      val nonUnique = """
-        SELECT 'a' AS src, l_partkey AS k FROM lineitem
-        UNION
-        SELECT 'b' AS src, s_suppkey AS k FROM supplier"""
-      assert(planOf(nonUnique).contains("Aggregate"),
-        "fired on a branch without RELY uniqueness")
-      // same tag on both branches: cross-branch overlap possible
-      val sameTag = """
-        SELECT 'x' AS src, c_custkey AS k FROM customer
-        UNION
-        SELECT 'x' AS src, s_suppkey AS k FROM supplier"""
-      assert(planOf(sameTag).contains("Aggregate"),
-        "fired without disjoint tags")
-      // no tag column at all
-      val noTag = """
-        SELECT c_custkey AS k FROM customer
-        UNION
-        SELECT s_suppkey AS k FROM supplier"""
-      assert(planOf(noTag).contains("Aggregate"), "fired without tags")
-      // UNION ALL has no dedup to remove and must be left alone
-      val unionAll = """
-        SELECT 'c' AS src, c_custkey AS k FROM customer
-        UNION ALL
-        SELECT 's' AS src, s_suppkey AS k FROM supplier"""
-      val p = planOf(unionAll)
-      assert(p.contains("Union") && !p.contains("Aggregate"))
-    }
+    assert(withoutRule(planOf(tagged)).contains("Aggregate"), "fired while excluded")
+    // l_partkey is NOT a declared unique key: branch rows can repeat
+    val nonUnique = """
+      SELECT 'a' AS src, l_partkey AS k FROM lineitem
+      UNION
+      SELECT 'b' AS src, s_suppkey AS k FROM supplier"""
+    assert(planOf(nonUnique).contains("Aggregate"),
+      "fired on a branch without RELY uniqueness")
+    // same tag on both branches: cross-branch overlap possible
+    val sameTag = """
+      SELECT 'x' AS src, c_custkey AS k FROM customer
+      UNION
+      SELECT 'x' AS src, s_suppkey AS k FROM supplier"""
+    assert(planOf(sameTag).contains("Aggregate"),
+      "fired without disjoint tags")
+    // no tag column at all
+    val noTag = """
+      SELECT c_custkey AS k FROM customer
+      UNION
+      SELECT s_suppkey AS k FROM supplier"""
+    assert(planOf(noTag).contains("Aggregate"), "fired without tags")
+    // UNION ALL has no dedup to remove and must be left alone
+    val unionAll = """
+      SELECT 'c' AS src, c_custkey AS k FROM customer
+      UNION ALL
+      SELECT 's' AS src, s_suppkey AS k FROM supplier"""
+    val p = planOf(unionAll)
+    assert(p.contains("Union") && !p.contains("Aggregate"))
   }
 
   test("joined branch does not count as unique even when a key column flows through") {
@@ -77,15 +73,13 @@ class InferSetOpDistinctSpec extends AnyFunSuite {
     // removes it first, correctly leaving a provably-unique branch and
     // letting this rule fire. The composition is sound; the negative
     // case needs a join that genuinely duplicates rows:
-    withRule {
-      // one customer row per matching order — c_custkey repeats
-      val joined = """
-        SELECT 'a' AS src, c_custkey AS k FROM customer JOIN orders
-          ON c_custkey = o_custkey
-        UNION
-        SELECT 'b' AS src, s_suppkey AS k FROM supplier"""
-      val p = sql(joined).queryExecution.optimizedPlan.toString
-      assert(p.contains("Aggregate"), s"fired through a duplicating join:\n$p")
-    }
+    // one customer row per matching order — c_custkey repeats
+    val joined = """
+      SELECT 'a' AS src, c_custkey AS k FROM customer JOIN orders
+        ON c_custkey = o_custkey
+      UNION
+      SELECT 'b' AS src, s_suppkey AS k FROM supplier"""
+    val p = sql(joined).queryExecution.optimizedPlan.toString
+    assert(p.contains("Aggregate"), s"fired through a duplicating join:\n$p")
   }
 }

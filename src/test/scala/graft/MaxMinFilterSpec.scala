@@ -13,10 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class MaxMinFilterSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def withRule[T](f: => T): T = {
-    spark.conf.set("spark.graft.maxMinFilter.enabled", "true")
-    try f finally spark.conf.set("spark.graft.maxMinFilter.enabled", "false")
-  }
+  private def withoutRule[T](f: => T): T =
+    withoutRules(graft.plans.MaxMinFilterRule.ruleName)(f)
 
   /** Derived filters strictly below the first Aggregate that reference
     * the given column — by exact name, or by the rollup-prefixed name
@@ -40,10 +38,9 @@ class MaxMinFilterSpec extends AnyFunSuite {
       .agg(min(col("l_extendedprice")).as("mn"))
       .filter(col("mn") < 2000.0)
       .orderBy(col("l_suppkey"))
-    val plain = q.collect().toSeq
-    val (nDerived, rows) = withRule {
+    val plain = withoutRule(q.collect().toSeq)
+    val (nDerived, rows) =
       (derivedFilters(q, "l_extendedprice").size, q.collect().toSeq)
-    }
     assert(nDerived == 1, "expected exactly one derived filter")
     assert(rows == plain)
   }
@@ -53,10 +50,9 @@ class MaxMinFilterSpec extends AnyFunSuite {
       .agg(max(col("l_quantity")).as("mx"))
       .filter(col("mx") > 49.0)
       .orderBy(col("l_returnflag"))
-    val plain = q.collect().toSeq
-    val (nDerived, rows) = withRule {
+    val plain = withoutRule(q.collect().toSeq)
+    val (nDerived, rows) =
       (derivedFilters(q, "l_quantity").size, q.collect().toSeq)
-    }
     assert(nDerived == 1)
     assert(rows == plain)
   }
@@ -76,8 +72,8 @@ class MaxMinFilterSpec extends AnyFunSuite {
       .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
       .filter(col("mn") < 5 && col("mx") > 5)
       .orderBy(col("k"))
-    val plain = q.collect().toSeq
-    val (filters, rows) = withRule { (derivedFilters(q, "x"), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (filters, rows) = (derivedFilters(q, "x"), q.collect().toSeq)
     assert(filters.size == 1 && filters.head.condition.isInstanceOf[Or],
       s"expected one OR-combined derived filter, got $filters")
     assert(rows == plain)
@@ -90,10 +86,9 @@ class MaxMinFilterSpec extends AnyFunSuite {
       .agg(min(col("l_extendedprice")).as("mn"), count(lit(1)).as("n"))
       .filter(col("mn") < 2000.0)
       .orderBy(col("l_suppkey"))
-    val plain = q.collect().toSeq
-    val (nDerived, rows) = withRule {
+    val plain = withoutRule(q.collect().toSeq)
+    val (nDerived, rows) =
       (derivedFilters(q, "l_extendedprice").size, q.collect().toSeq)
-    }
     assert(nDerived == 0, "must not fire with count in the output")
     assert(rows == plain)
   }
@@ -108,8 +103,8 @@ class MaxMinFilterSpec extends AnyFunSuite {
     val df = spark.read.parquet(dir)
     def q = df.groupBy(col("k")).agg(min(col("x")).as("mn"))
       .filter(col("mn") > 5)
-    val plain = q.collect().toSeq
-    val (nDerived, rows) = withRule { (derivedFilters(q, "x").size, q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (nDerived, rows) = (derivedFilters(q, "x").size, q.collect().toSeq)
     assert(nDerived == 0, "must not fire on min > k")
     assert(rows == plain)
     assert(rows.isEmpty) // group a has min 1, fails HAVING
@@ -117,11 +112,9 @@ class MaxMinFilterSpec extends AnyFunSuite {
 
   test("global (ungrouped) extremum fires and stays correct") {
     def q = li.agg(min(col("l_extendedprice")).as("mn")).filter(col("mn") < 1e9)
-    val plain = q.collect().toSeq
-    val rows = withRule {
-      assert(derivedFilters(q, "l_extendedprice").size == 1)
-      q.collect().toSeq
-    }
+    val plain = withoutRule(q.collect().toSeq)
+    assert(derivedFilters(q, "l_extendedprice").size == 1)
+    val rows = q.collect().toSeq
     assert(rows == plain)
   }
 
@@ -130,10 +123,9 @@ class MaxMinFilterSpec extends AnyFunSuite {
       .agg(min(col("l_extendedprice")).as("mn"))
       .filter(lit(2000.0) > col("mn"))
       .orderBy(col("l_suppkey"))
-    val plain = q.collect().toSeq
-    val (nDerived, rows) = withRule {
+    val plain = withoutRule(q.collect().toSeq)
+    val (nDerived, rows) =
       (derivedFilters(q, "l_extendedprice").size, q.collect().toSeq)
-    }
     assert(nDerived == 1)
     assert(rows == plain)
   }

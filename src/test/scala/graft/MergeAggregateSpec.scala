@@ -5,17 +5,15 @@ import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Agg-over-agg fusion (plans/MergeAggregate.scala): the opt-in merge
-  * of GROUP BY coarse over (GROUP BY fine) must collapse to one
+/** Agg-over-agg fusion (plans/MergeAggregate.scala): the merge of
+  * GROUP BY coarse over (GROUP BY fine) must collapse to one
   * Aggregate when derivable and NEVER change values; underivable
   * shapes must be left alone. */
 class MergeAggregateSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def withMerge[T](f: => T): T = {
-    spark.conf.set("spark.graft.mergeAggregate.enabled", "true")
-    try f finally spark.conf.set("spark.graft.mergeAggregate.enabled", "false")
-  }
+  private def withoutRule[T](f: => T): T =
+    withoutRules(graft.plans.MergeAggregateRule.ruleName)(f)
 
   private def nAggs(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
@@ -32,10 +30,10 @@ class MergeAggregateSpec extends AnyFunSuite {
         min(col("mnd")).as("mn"), max(col("mxd")).as("mx"),
         max(col("l_orderkey")).as("last_ord"))
       .orderBy(col("l_returnflag"))
-    val plain = q.collect().toSeq
-    val (k, fused) = withMerge { (nAggs(q), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (k, fused) = (nAggs(q), q.collect().toSeq)
     assert(k == 1, "expected a single fused Aggregate")
-    assert(nAggs(q) == 2, "baseline should keep two Aggregates")
+    assert(withoutRule(nAggs(q)) == 2, "baseline should keep two Aggregates")
     assert(fused == plain)
   }
 
@@ -43,8 +41,8 @@ class MergeAggregateSpec extends AnyFunSuite {
     def q = inner.groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_groups"))
       .orderBy(col("l_returnflag"))
-    val plain = q.collect().toSeq
-    val (k, res) = withMerge { (nAggs(q), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (k, res) = (nAggs(q), q.collect().toSeq)
     assert(k == 2, "count(*) outer must not fuse")
     assert(res == plain)
   }
@@ -53,16 +51,16 @@ class MergeAggregateSpec extends AnyFunSuite {
     def q = inner.groupBy(col("l_returnflag"))
       .agg(avg(col("sq")).as("a"))
       .orderBy(col("l_returnflag"))
-    val plain = q.collect().toSeq
-    val (k, res) = withMerge { (nAggs(q), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (k, res) = (nAggs(q), q.collect().toSeq)
     assert(k == 2, "avg outer must not fuse")
     assert(res == plain)
   }
 
   test("global (no group key) outer aggregate does not fuse") {
     def q = inner.agg(sum(col("cnt")).as("n"))
-    val plain = q.collect().toSeq
-    val (k, res) = withMerge { (nAggs(q), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (k, res) = (nAggs(q), q.collect().toSeq)
     assert(k == 2, "empty outer grouping must not fuse (NULL vs 0 on empty)")
     assert(res == plain)
   }
@@ -71,10 +69,10 @@ class MergeAggregateSpec extends AnyFunSuite {
     def q = inner.groupBy(col("l_returnflag"))
       .agg((sum(col("sq")) / sum(col("cnt"))).as("qty_per_row"))
       .orderBy(col("l_returnflag"))
-    val plain = q.collect().toSeq
-    val (k, res, schema) = withMerge { (nAggs(q), q.collect().toSeq, q.schema) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (k, res, schema) = (nAggs(q), q.collect().toSeq, q.schema)
     assert(k == 1)
     assert(res == plain)
-    assert(schema == q.schema)
+    assert(schema == withoutRule(q.schema))
   }
 }

@@ -13,12 +13,7 @@ import graft.plans.MaterializedViews
 class MvJoinSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def withJoinMv[T](f: => T): T = {
-    spark.conf.set("spark.graft.mvJoinRewrite.enabled", "true")
-    try f finally spark.conf.set("spark.graft.mvJoinRewrite.enabled", "false")
-  }
-
-  private def fired(df: DataFrame): Boolean = withJoinMv {
+  private def fired(df: DataFrame): Boolean = {
     val p = df.queryExecution.optimizedPlan.toString
     p.contains("__cnt") && !p.contains("Join")
   }
@@ -44,8 +39,8 @@ class MvJoinSpec extends AnyFunSuite {
     mk()
     try {
       val df = q(li, ord)
-      assert(fired(df), s"no rewrite:\n${withJoinMv(df.queryExecution.optimizedPlan)}")
-      assert(withJoinMv(df.collect().toSeq) == plain)
+      assert(fired(df), s"no rewrite:\n${df.queryExecution.optimizedPlan}")
+      assert(df.collect().toSeq == plain)
     } finally MaterializedViews.drop("mvj_spec")
   }
 

@@ -9,14 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /** plans/OrExtract.scala: disjunction-derived single-table predicates
   * (reference ExtractSingleTableExpressionFromDisjunction.java /
   * InferInPredicateFromOr.java). Soundness counter-examples, scan
-  * pushdown, value identity flag-on-vs-off, and the apply-once tag
+  * pushdown, value identity with the rule on and excluded, and the
+  * apply-once tag
   * (re-derivation after PushDownPredicates separates the derived
   * conjunct — the HAVING-mix shape). */
 class OrExtractSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def withRule[T](f: => T): T =
-    graft.queries.Q.withFlag(spark, "spark.graft.orExtract.enabled")(f)
+  private def withoutRule[T](f: => T): T =
+    withoutRules(graft.plans.OrExtractRule.ruleName)(f)
 
   private def li = Tables.load(spark, sf, "lineitem")
 
@@ -43,12 +44,12 @@ class OrExtractSpec extends AnyFunSuite {
           col("l_extendedprice") * col("l_discount") > lit(50.0)) ||
         (col("l_quantity") === 5.0 && col("l_tax") > lit(0.05)))
       .agg(count(lit(1)).as("n"), sum(col("l_orderkey")).as("s"))
-    val plain = q.collect().toSeq
+    val plain = withoutRule(q.collect().toSeq)
     // native Spark: the arithmetic conjunct blanks the Or translation
-    val plainPhys = q.queryExecution.executedPlan.toString
+    val plainPhys = withoutRule(q.queryExecution.executedPlan.toString)
     assert(!plainPhys.matches("(?s).*PushedFilters: \\[[^\\]]*l_quantity.*"),
       s"premise broken — native Spark already pushes the band:\n$plainPhys")
-    val (n, phys, rows) = withRule {
+    val (n, phys, rows) = {
       (derivedOn(q, "l_quantity"), q.queryExecution.executedPlan.toString,
         q.collect().toSeq)
     }
@@ -65,8 +66,8 @@ class OrExtractSpec extends AnyFunSuite {
         (col("l_quantity") === 4.0 && col("l_tax") > lit(0.05)) ||
         (col("l_discount") > lit(0.09)))
       .agg(count(lit(1)).as("n"))
-    val plain = q.collect().toSeq
-    val (n, rows) = withRule { (derivedOn(q, "l_quantity"), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (n, rows) = (derivedOn(q, "l_quantity"), q.collect().toSeq)
     assert(n == 0, "derived a predicate from a non-covering disjunction")
     assert(rows == plain)
   }
@@ -77,10 +78,9 @@ class OrExtractSpec extends AnyFunSuite {
           col("l_returnflag") === "R") ||
         (col("l_quantity") === 5.0 && col("l_discount") > lit(0.01)))
       .agg(count(lit(1)).as("n"))
-    val plain = q.collect().toSeq
-    val (nQty, nTax, rows) = withRule {
+    val plain = withoutRule(q.collect().toSeq)
+    val (nQty, nTax, rows) =
       (derivedOn(q, "l_quantity"), derivedOn(q, "l_tax"), q.collect().toSeq)
-    }
     assert(nQty >= 1, "l_quantity appears in every arm and must derive")
     assert(nTax == 0, "l_tax appears in only one arm and must not derive")
     assert(rows == plain)
@@ -98,8 +98,8 @@ class OrExtractSpec extends AnyFunSuite {
         (col("l_quantity") === 4.0 && col("rev") > lit(1000.0)) ||
         (col("l_quantity") === 5.0 && col("rev") > lit(2000.0)))
       .orderBy(col("l_quantity"))
-    val plain = q.collect().toSeq
-    val (below, rows) = withRule {
+    val plain = withoutRule(q.collect().toSeq)
+    val (below, rows) = {
       val agg = q.queryExecution.optimizedPlan.collectFirst {
         case a: Aggregate => a
       }.getOrElse(fail("no Aggregate in plan"))
@@ -126,9 +126,9 @@ class OrExtractSpec extends AnyFunSuite {
         col("l_quantity") === i.toDouble && col("l_tax") > lit(0.001 * i))
       .reduce(_ || _)
     def q = li.filter(wide).agg(count(lit(1)).as("n"))
-    val plain = q.collect().toSeq
-    val nOff = derivedOn(q, "l_quantity")
-    val (nOn, rows) = withRule { (derivedOn(q, "l_quantity"), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val nOff = withoutRule(derivedOn(q, "l_quantity"))
+    val (nOn, rows) = (derivedOn(q, "l_quantity"), q.collect().toSeq)
     assert(nOn == nOff, s"MaxDisjuncts bail-out did not hold: $nOff -> $nOn")
     assert(rows == plain)
   }

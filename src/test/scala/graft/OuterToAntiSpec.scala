@@ -12,10 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class OuterToAntiSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def withRule[T](f: => T): T = {
-    spark.conf.set("spark.graft.outerToAnti.enabled", "true")
-    try f finally spark.conf.set("spark.graft.outerToAnti.enabled", "false")
-  }
+  private def withoutRule[T](f: => T): T =
+    withoutRules(graft.plans.OuterToAntiRule.ruleName)(f)
 
   private def joinTypes(df: DataFrame) =
     df.queryExecution.optimizedPlan.collect { case j: Join => j.joinType }
@@ -28,8 +26,8 @@ class OuterToAntiSpec extends AnyFunSuite {
       .filter(col("o_custkey").isNull)
       .select(col("c_custkey"), col("c_mktsegment"))
       .orderBy(col("c_custkey"))
-    val plain = q.collect().toSeq
-    val (types, rows) = withRule { (joinTypes(q), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (types, rows) = (joinTypes(q), q.collect().toSeq)
     assert(types.contains(LeftAnti) && !types.contains(LeftOuter),
       s"did not fire: $types")
     assert(rows == plain)
@@ -39,8 +37,8 @@ class OuterToAntiSpec extends AnyFunSuite {
     def q = ord.join(cust, col("o_custkey") === col("c_custkey"), "right")
       .filter(col("o_custkey").isNull)
       .select(col("c_custkey")).orderBy(col("c_custkey"))
-    val plain = q.collect().toSeq
-    val (types, rows) = withRule { (joinTypes(q), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (types, rows) = (joinTypes(q), q.collect().toSeq)
     assert(types.contains(LeftAnti) && !types.contains(RightOuter),
       s"did not fire: $types")
     assert(rows == plain)
@@ -51,25 +49,21 @@ class OuterToAntiSpec extends AnyFunSuite {
       .filter(col("o_custkey").isNull && col("o_orderkey").isNull &&
         col("c_custkey") % 2 === 0)
       .select(col("c_custkey")).orderBy(col("c_custkey"))
-    val plain = q.collect().toSeq
-    val rows = withRule {
-      assert(joinTypes(q).contains(LeftAnti))
-      q.collect().toSeq
-    }
+    val plain = withoutRule(q.collect().toSeq)
+    assert(joinTypes(q).contains(LeftAnti))
+    val rows = q.collect().toSeq
     assert(rows == plain)
   }
 
   test("no-fire: non-key IS NULL, inner join, disabled") {
     // o_orderdate is not an equi-key: a matched row could (in general)
     // carry a null there, so IS NULL does not prove unmatched
-    withRule {
-      val nonKey = cust.join(ord, col("c_custkey") === col("o_custkey"), "left")
-        .filter(col("o_orderdate").isNull)
-      assert(!joinTypes(nonKey).contains(LeftAnti), "fired on non-key IS NULL")
-    }
+    val nonKey = cust.join(ord, col("c_custkey") === col("o_custkey"), "left")
+      .filter(col("o_orderdate").isNull)
+    assert(!joinTypes(nonKey).contains(LeftAnti), "fired on non-key IS NULL")
     val disabled = cust.join(ord, col("c_custkey") === col("o_custkey"), "left")
       .filter(col("o_custkey").isNull)
-    assert(!joinTypes(disabled).contains(LeftAnti), "fired while disabled")
+    assert(!withoutRule(joinTypes(disabled)).contains(LeftAnti), "fired while excluded")
   }
 
   test("null-safe equality does NOT fire (it matches null keys) and values prove why") {
@@ -81,8 +75,8 @@ class OuterToAntiSpec extends AnyFunSuite {
     def q = l.join(r, col("k") <=> col("rk"), "left")
       .filter(col("rk").isNull)
       .select(col("lv"), col("rv")).orderBy(col("lv"))
-    val plain = q.collect().toSeq
-    val (types, rows) = withRule { (joinTypes(q), q.collect().toSeq) }
+    val plain = withoutRule(q.collect().toSeq)
+    val (types, rows) = (joinTypes(q), q.collect().toSeq)
     assert(!types.contains(LeftAnti), "fired on <=> — unsound")
     assert(rows == plain)
     // the semantic trap the guard avoids: the null-keyed left row DID

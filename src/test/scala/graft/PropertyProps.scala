@@ -570,8 +570,8 @@ object TopNProps extends Properties("TopNAgg") {
 /** graft_l2sq kernel laws: the codegen loop must be bit-identical to
   * the HOF spelling it shortcuts (left-to-right (x-y)^2 fold), the
   * float reader must equal explicit per-element widening, and the
-  * triangle bound VectorTopN prunes with must hold on the kernel's own
-  * arithmetic (with the rule's epsilon). */
+  * triangle bound that a cell-pruned top-k would prune with must hold
+  * on the kernel's own arithmetic (with a 1e-9 relative epsilon). */
 object L2SqProps extends Properties("L2Sq") {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 

@@ -9,11 +9,20 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `f` with the named optimizer rules excluded through Spark's
+    * own switch, `spark.sql.optimizer.excludedRules`. */
+  def withoutRules[T](rules: String*)(f: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, rules.mkString(","))
+    try f finally spark.conf.unset(key)
+  }
 }
 
 /** Smoke: every declared query runs and (where meaningful) is non-empty.
-  * Value-level correctness vs the DuckDB oracle is checked by the driver
-  * and by OracleParitySpec-style local runs (scripts/oracle_check.py).
+  * Value-level correctness vs the DuckDB oracle is checked by the
+  * `oracle` stage of scripts/gates.sh: `graft.Verify` writes every
+  * result, then scripts/oracle_check.py compares it with DuckDB.
   */
 class QueriesSpec extends AnyFunSuite {
   import TestSpark._

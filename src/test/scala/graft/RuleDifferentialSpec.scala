@@ -4,43 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Differential fuzzing of the opt-in rewrite rules: randomized query
-  * shapes (seeded, deterministic) run with EVERY rule enabled and with
-  * all disabled — results must be identical row-for-row. Hand-written
-  * specs pin each rule's known shapes; this hunts the unknown ones,
-  * especially cross-rule interactions (e.g. merge-aggregate output
-  * feeding group-key simplification feeding eager aggregation).
+/** Differential fuzzing of the graft rewrite rules that run by
+  * default: randomized query shapes (seeded, deterministic) run as
+  * planned and with those rules excluded through Spark's own
+  * `spark.sql.optimizer.excludedRules` — results must be identical
+  * row-for-row. Hand-written specs pin each rule's known shapes; this
+  * hunts the unknown ones, especially cross-rule interactions.
   *
-  * The generator deliberately concentrates probability mass on the
-  * shapes the rules match — two-level aggregates, derived group keys,
-  * unique-key groupings, lineitem⋈orders equi-joins — plus off-shapes
-  * that must no-fire cleanly. */
+  * The generator concentrates probability mass on the shapes rewrite
+  * rules match — two-level aggregates, derived group keys, unique-key
+  * groupings, lineitem⋈orders equi-joins — plus off-shapes that must
+  * no-fire cleanly. ScoreRewriteRule is not excluded: it gives
+  * score() its meaning. */
 class RuleDifferentialSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val flags = Seq(
-    "spark.graft.eagerAgg.enabled",
-    "spark.graft.mergePercentile.enabled",
-    "spark.graft.aggByUnique.enabled",
-    "spark.graft.mergeAggregate.enabled",
-    "spark.graft.simplifyAggGroupBy.enabled",
-    "spark.graft.vectorTopN.enabled",
-    "spark.graft.topnPushdown.enabled",
-    "spark.graft.pullUpUnionJoin.enabled",
-    "spark.graft.inferSetOpDistinct.enabled",
-    "spark.graft.scalarAggWindow.enabled",
-    "spark.graft.sumLiteral.enabled",
-    "spark.graft.eagerAggBoth.enabled",
-    "spark.graft.outerToAnti.enabled",
-    "spark.graft.maxMinFilter.enabled",
-    "spark.graft.topnWindow.enabled",
-    "spark.graft.orExtract.enabled",
-    "spark.graft.unequalInfer.enabled")
+  private val rules = GraftExtensions.measuredRules.map(_.ruleName)
 
-  private def withAll[T](on: Boolean)(f: => T): T = {
-    flags.foreach(spark.conf.set(_, on.toString))
-    try f finally flags.foreach(spark.conf.set(_, "false"))
-  }
+  private def withAll[T](on: Boolean)(f: => T): T =
+    if (on) f else withoutRules(rules: _*)(f)
 
   private def li = Tables.load(spark, sf, "lineitem")
   private def ord = Tables.load(spark, sf, "orders")
@@ -74,19 +56,19 @@ class RuleDifferentialSpec extends AnyFunSuite {
           .agg(round(sum(col("sq")), 6).as("s2"), sum(col("cnt")).as("n2"),
             round(min(col("mnd")), 6).as("m2"))
           .orderBy(col(k2))
-      case 1 => // derived group keys (SimplifyAggGroupBy territory)
+      case 1 => // derived group keys
         ord.groupBy(col("o_orderdate"),
             year(col("o_orderdate")).cast("long").as("y"),
             (month(col("o_orderdate")) + lit(r.nextInt(3))).cast("long").as("mx"))
           .agg(aggList(Seq("o_totalprice")).head, count(lit(1)).as("n"))
           .orderBy(col("o_orderdate"))
-      case 2 => // unique-key grouping (AggByUnique territory)
+      case 2 => // unique-key grouping
         ord.filter(col("o_custkey") % (2 + r.nextInt(5)) === 0)
           .groupBy(col("o_orderkey"))
           .agg(round(sum(col("o_totalprice")), 6).as("sp"),
             max(col("o_orderpriority")).as("p"), count(lit(1)).as("n"))
           .orderBy(col("o_orderkey")).limit(500)
-      case 3 => // join + aggregate (EagerAgg territory)
+      case 3 => // join + aggregate
         val keys = Seq(col(pick(ordKeys))) ++
           (if (r.nextBoolean()) Seq(col(pick(liKeys))) else Nil)
         val as = aggList(numCols)
@@ -102,7 +84,7 @@ class RuleDifferentialSpec extends AnyFunSuite {
           .select(col("o_orderkey"), col("o_totalprice"), col("c_name"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
           .limit(k)
-      case 6 => // TopN over UNION ALL (TopNPushdown territory)
+      case 6 => // TopN over a bare UNION ALL (TopNPushdown must no-fire)
         val k = 1 + r.nextInt(20)
         val b1 = ord.select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
         val b2 = li.select(col("l_orderkey").as("k"), col("l_extendedprice").as("v"))
@@ -132,8 +114,8 @@ class RuleDifferentialSpec extends AnyFunSuite {
             .select(col("o_orderkey"), col("o_totalprice"), col("c_name"))
             .orderBy(col("o_totalprice").desc, col("o_orderkey"))
             .limit(k)
-      case 9 => // TopNPushdown x PullUpUnionJoin: UNION ALL of two joins
-        // sharing the right side, TopN on top — both rules can touch it.
+      case 9 => // UNION ALL of two joins sharing the right side, TopN on
+        // top.
         val k = 1 + r.nextInt(15)
         def leg(f: Column): DataFrame =
           li.filter(f).join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -141,7 +123,7 @@ class RuleDifferentialSpec extends AnyFunSuite {
               col("l_orderkey").as("k0"), col("l_linenumber").as("k1"))
         leg(col("l_linenumber") <= 3).unionAll(leg(col("l_linenumber") > 3))
           .orderBy(col("v").desc, col("k0"), col("k1")).limit(k)
-      case 10 => // MergeAggregate x SimplifyAggGroupBy: two-level agg
+      case 10 => // MergeAggregate over a derived key: two-level agg
         // whose OUTER grouping carries a derived key of a surviving key.
         val inner = li.groupBy(col("l_shipdate"), col("l_returnflag"))
           .agg(sum(col("l_quantity")).as("sq"), count(lit(1)).as("cnt"))
@@ -156,8 +138,8 @@ class RuleDifferentialSpec extends AnyFunSuite {
         val b1 = ord.select(col("o_orderstatus").as("a")).distinct()
         val b2 = li.select(col("l_returnflag").as("a")).distinct()
         b1.unionAll(b2).distinct().orderBy(col("a")).limit(k)
-      case 12 => // ScalarAggToWindow x aggregation: filter against a
-        // same-table scalar aggregate feeding a grouped aggregate.
+      case 12 => // filter against a same-table scalar aggregate
+        // feeding a grouped aggregate.
         Tables.registerAll(spark, sf)
         val cmp = if (r.nextBoolean()) ">" else "<="
         spark.sql(s"""
@@ -165,15 +147,14 @@ class RuleDifferentialSpec extends AnyFunSuite {
           FROM lineitem
           WHERE l_extendedprice $cmp (SELECT avg(l_extendedprice) FROM lineitem)
           GROUP BY l_returnflag ORDER BY l_returnflag""")
-      case 13 => // sum(col + k) decomposition (SumLiteralRule territory)
+      case 13 => // sum(col + k) measures over one group key
         val k = (1 + r.nextInt(20)).toLong
         li.groupBy(col("l_returnflag"))
           .agg(sum(col("l_quantity").cast("long") + lit(k)).as("s"),
             sum(col("l_suppkey").cast("long") + lit(k)).as("s2"),
             count(lit(1)).as("n"))
           .orderBy(col("l_returnflag"))
-      case 14 => // integral aggs on BOTH join sides (EagerAggBoth
-        // territory, composing with EagerAgg/MergeAggregate/AggByUnique)
+      case 14 => // integral aggs on BOTH join sides
         val k = pick(ordKeys)
         li.filter(col("l_quantity") > (r.nextInt(5) + 1))
           .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -220,11 +201,10 @@ class RuleDifferentialSpec extends AnyFunSuite {
               count(lit(1)).as("n"))
             .filter(col("mn") < thr && col("n") > 1).orderBy(col(k))
         }
-      case 17 => // ORDER BY rank LIMIT k over a window (TopNWindow
-        // territory): k = partitions x r so the selected SET is
+      case 17 => // ORDER BY rank LIMIT k over a window: k = partitions x r so the selected SET is
         // deterministic (every priority has >> r orders); the window
-        // order carries a unique tiebreaker. Rotates the rank function;
-        // the sum-over-window variant must no-fire.
+        // order carries a unique tiebreaker. Rotates the rank function
+        // and a sum-over-window variant.
         import org.apache.spark.sql.expressions.{Window => W}
         val rr = 1 + r.nextInt(8)
         val spec = W.partitionBy(col("o_orderpriority"))
@@ -238,9 +218,8 @@ class RuleDifferentialSpec extends AnyFunSuite {
         ord.select(col("o_orderkey"), col("o_orderpriority"),
             col("o_totalprice"), rn.cast("int").as("rn"))
           .orderBy(col("rn")).limit(5 * rr)
-      case 18 => // OrExtract x UnequalInfer: disjunctive band with an
-        // untranslatable leg ABOVE a non-equi chain join — both rules
-        // must fire together without changing values
+      case 18 => // OrExtract over a non-equi chain join: disjunctive band
+        // with an untranslatable leg ABOVE the join must not change values
         val q1 = 1 + r.nextInt(10)
         val q2 = 1 + r.nextInt(10)
         li.as("l").join(ord.as("o"),
@@ -253,9 +232,9 @@ class RuleDifferentialSpec extends AnyFunSuite {
           .groupBy(col("l.l_returnflag"))
           .agg(count(lit(1)).as("n"), sum(col("l.l_orderkey")).as("s"))
           .orderBy(col("l_returnflag"))
-      case 19 => // UnequalInfer no-fire polarity: same chain under an
-        // outer join (preserved side must keep its rows) — rotates the
-        // side so both preserved polarities are exercised
+      case 19 => // the same chain under an outer join (preserved side
+        // must keep its rows) — rotates the side so both preserved
+        // polarities are exercised
         val jt = if (r.nextBoolean()) "left_outer" else "right_outer"
         li.as("l").join(ord.as("o"),
             col("l.l_orderkey") === col("o.o_orderkey") &&
@@ -278,15 +257,14 @@ class RuleDifferentialSpec extends AnyFunSuite {
 
   test("bench battery: all rules ON == all rules OFF") {
     // The composition law over the REAL headline queries (not generated
-    // shapes): every opt-in rewrite enabled simultaneously must leave
-    // all 22 bench results row-identical. Queries that manage their own
-    // flags/state (mv/vector/stream) are not in benchQueries, so this
-    // is a pure flag-flip differential.
+    // shapes): the default rules together must leave all 22 bench
+    // results row-identical. Queries that manage their own state
+    // (mv/vector/stream) are not in benchQueries.
     val bad = SparkEntry.benchQueries.flatMap { name =>
       val fn = SparkEntry.queries(name)
       val off = withAll(on = false) { fn(spark, sf).collect().toSeq.sortBy(_.toString) }
       val on = withAll(on = true) { fn(spark, sf).collect().toSeq.sortBy(_.toString) }
-      if (on == off) None else Some(s"$name diverged under all-rules-on")
+      if (on == off) None else Some(s"$name diverged with the rules on")
     }
     assert(bad.isEmpty, bad.mkString("\n"))
   }

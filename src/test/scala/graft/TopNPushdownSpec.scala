@@ -4,16 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join, Union}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** TopN pushdown (plans/TopNPushdown.scala): the opt-in copy of
-  * ORDER BY + LIMIT below outer/cross joins and UNION ALL branches must
-  * reduce join/branch input to k rows and NEVER change values. */
+/** TopN pushdown (plans/TopNPushdown.scala): the copy of ORDER BY +
+  * LIMIT below outer/cross joins, and below DISTINCT over a join or
+  * UNION ALL, must reduce join/branch input to k rows and NEVER change
+  * values. */
 class TopNPushdownSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def withRule[T](f: => T): T = {
-    spark.conf.set("spark.graft.topnPushdown.enabled", "true")
-    try f finally spark.conf.set("spark.graft.topnPushdown.enabled", "false")
-  }
+  private def withoutRule[T](f: => T): T =
+    withoutRules(graft.plans.TopNPushdownRule.ruleName)(f)
 
   private def sql(q: String): DataFrame = {
     Tables.registerAll(spark, sf)
@@ -32,25 +31,23 @@ class TopNPushdownSpec extends AnyFunSuite {
     ORDER BY o_totalprice DESC, o_orderkey LIMIT 15"""
 
   test("left-outer: TopN lands on the preserved side; values identical") {
-    val plain = sql(leftOuterTopN).collect().toSeq
-    assert(limitsUnderJoin(sql(leftOuterTopN)) == 0, "baseline already limited")
-    val (n, rows) = withRule {
+    val plain = withoutRule(sql(leftOuterTopN).collect().toSeq)
+    assert(withoutRule(limitsUnderJoin(sql(leftOuterTopN))) == 0, "baseline already limited")
+    val (n, rows) =
       (limitsUnderJoin(sql(leftOuterTopN)), sql(leftOuterTopN).collect().toSeq)
-    }
     assert(n == 1, "TopN did not push below the left-outer join")
     assert(rows == plain)
     assert(rows.size == 15)
   }
 
-  test("right-outer mirrors; union-all branches each get a local TopN") {
+  test("right-outer mirrors; a bare union-all is left to Spark's top-k") {
     val rightOuter = """
       SELECT o_orderkey, o_totalprice, c_name
       FROM customer RIGHT JOIN orders ON c_custkey = o_custkey
       ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""
-    val plainR = sql(rightOuter).collect().toSeq
-    val (nR, rowsR) = withRule {
+    val plainR = withoutRule(sql(rightOuter).collect().toSeq)
+    val (nR, rowsR) =
       (limitsUnderJoin(sql(rightOuter)), sql(rightOuter).collect().toSeq)
-    }
     assert(nR == 1, "TopN did not push below the right-outer join")
     assert(rowsR == plainR)
 
@@ -60,15 +57,13 @@ class TopNPushdownSpec extends AnyFunSuite {
         UNION ALL
         SELECT l_orderkey AS k, l_extendedprice AS v FROM lineitem
       ) ORDER BY v DESC, k LIMIT 7"""
-    val plainU = sql(unionTopN).collect().toSeq
-    val (allPushed, rowsU) = withRule {
-      val u = sql(unionTopN).queryExecution.optimizedPlan.collectFirst {
-        case un: Union => un
-      }.getOrElse(fail("no Union in plan"))
-      (u.children.forall(_.exists { case _: GlobalLimit => true; case _ => false }),
-        sql(unionTopN).collect().toSeq)
-    }
-    assert(allPushed, "TopN did not reach every union branch")
+    val plainU = withoutRule(sql(unionTopN).collect().toSeq)
+    val u = sql(unionTopN).queryExecution.optimizedPlan.collectFirst {
+      case un: Union => un
+    }.getOrElse(fail("no Union in plan"))
+    assert(!u.children.exists(_.exists { case _: GlobalLimit => true; case _ => false }),
+      "TopN was copied into a bare union-all branch")
+    val rowsU = sql(unionTopN).collect().toSeq
     assert(rowsU == plainU)
     assert(rowsU.size == 7)
   }
@@ -80,8 +75,8 @@ class TopNPushdownSpec extends AnyFunSuite {
         UNION ALL
         SELECT l_returnflag AS a, l_linestatus AS b FROM lineitem
       ) ORDER BY a, b LIMIT 5"""
-    val plain = sql(q).collect().toSeq
-    val (allPushed, rows) = withRule {
+    val plain = withoutRule(sql(q).collect().toSeq)
+    val (allPushed, rows) = {
       import org.apache.spark.sql.catalyst.plans.logical.Aggregate
       val u = sql(q).queryExecution.optimizedPlan.collectFirst {
         case un: Union => un
@@ -101,8 +96,8 @@ class TopNPushdownSpec extends AnyFunSuite {
     val full = """
       SELECT DISTINCT * FROM orders LEFT JOIN customer ON o_custkey = c_custkey
       ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""
-    val plain = sql(full).collect().toSeq
-    val (pushed, rows) = withRule {
+    val plain = withoutRule(sql(full).collect().toSeq)
+    val (pushed, rows) = {
       val j = sql(full).queryExecution.optimizedPlan.collectFirst {
         case jn: Join => jn
       }.getOrElse(fail("no Join in plan"))
@@ -120,10 +115,9 @@ class TopNPushdownSpec extends AnyFunSuite {
       SELECT DISTINCT o_orderstatus FROM orders LEFT JOIN customer
         ON o_custkey = c_custkey
       ORDER BY o_orderstatus LIMIT 2"""
-    val plainS = sql(subset).collect().toSeq
-    val (firedS, rowsS) = withRule {
+    val plainS = withoutRule(sql(subset).collect().toSeq)
+    val (firedS, rowsS) =
       (limitsUnderJoin(sql(subset)) > 0, sql(subset).collect().toSeq)
-    }
     assert(!firedS, "fired on a subset distinct (unsound)")
     assert(rowsS == plainS)
   }
@@ -136,10 +130,9 @@ class TopNPushdownSpec extends AnyFunSuite {
       SELECT o_orderkey, o_totalprice, r_name
       FROM orders CROSS JOIN region
       ORDER BY o_totalprice DESC, o_orderkey LIMIT 5"""
-    val plainF = sql(free).collect().toSeq.sortBy(_.toString)
-    val (nF, rowsF) = withRule {
+    val plainF = withoutRule(sql(free).collect().toSeq.sortBy(_.toString))
+    val (nF, rowsF) =
       (limitsUnderJoin(sql(free)), sql(free).collect().toSeq.sortBy(_.toString))
-    }
     assert(nF >= 1, "TopN did not push below the condition-free cross join")
     assert(rowsF == plainF)
 
@@ -152,37 +145,33 @@ class TopNPushdownSpec extends AnyFunSuite {
       FROM orders CROSS JOIN customer
       WHERE o_custkey = c_custkey
       ORDER BY o_totalprice DESC, o_orderkey LIMIT 15"""
-    val plain = sql(fused).collect().toSeq
-    withRule {
-      val df = sql(fused)
-      val j = df.queryExecution.optimizedPlan.collectFirst { case jn: Join => jn }
-        .getOrElse(fail("no Join in plan"))
-      assert(j.condition.nonEmpty, "premise: WHERE did not fuse into the join condition")
-      assert(limitsUnderJoin(df) == 0,
-        s"fired on a cross join WITH a condition (unsound): ${j.joinType}")
-      assert(df.collect().toSeq == plain)
-    }
+    val plain = withoutRule(sql(fused).collect().toSeq)
+    val df = sql(fused)
+    val j = df.queryExecution.optimizedPlan.collectFirst { case jn: Join => jn }
+      .getOrElse(fail("no Join in plan"))
+    assert(j.condition.nonEmpty, "premise: WHERE did not fuse into the join condition")
+    assert(limitsUnderJoin(df) == 0,
+      s"fired on a cross join WITH a condition (unsound): ${j.joinType}")
+    assert(df.collect().toSeq == plain)
   }
 
   test("no-fire guards: disabled, inner join, sort key from the null-padded side") {
-    assert(limitsUnderJoin(sql(leftOuterTopN)) == 0, "fired while disabled")
-    withRule {
-      val inner = """
-        SELECT o_orderkey, o_totalprice, c_name
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        ORDER BY o_totalprice DESC, o_orderkey LIMIT 15"""
-      assert(limitsUnderJoin(sql(inner)) == 0,
-        "fired on an inner join (a joined-away row may out-rank survivors)")
-      val nullPaddedKey = """
-        SELECT o_orderkey, c_acctbal, c_name
-        FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        ORDER BY c_acctbal DESC, o_orderkey LIMIT 15"""
-      assert(limitsUnderJoin(sql(nullPaddedKey)) == 0,
-        "fired with sort keys from the NULL-padded side")
-      // idempotence under the fixpoint batch: exactly one pushed limit,
-      // and the pushed plan still returns the un-pushed rows
-      val once = sql(leftOuterTopN)
-      assert(limitsUnderJoin(once) == 1)
-    }
+    assert(withoutRule(limitsUnderJoin(sql(leftOuterTopN))) == 0, "fired while excluded")
+    val inner = """
+      SELECT o_orderkey, o_totalprice, c_name
+      FROM orders JOIN customer ON o_custkey = c_custkey
+      ORDER BY o_totalprice DESC, o_orderkey LIMIT 15"""
+    assert(limitsUnderJoin(sql(inner)) == 0,
+      "fired on an inner join (a joined-away row may out-rank survivors)")
+    val nullPaddedKey = """
+      SELECT o_orderkey, c_acctbal, c_name
+      FROM orders LEFT JOIN customer ON o_custkey = c_custkey
+      ORDER BY c_acctbal DESC, o_orderkey LIMIT 15"""
+    assert(limitsUnderJoin(sql(nullPaddedKey)) == 0,
+      "fired with sort keys from the NULL-padded side")
+    // idempotence under the fixpoint batch: exactly one pushed limit,
+    // and the pushed plan still returns the un-pushed rows
+    val once = sql(leftOuterTopN)
+    assert(limitsUnderJoin(once) == 1)
   }
 }
